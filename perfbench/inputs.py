@@ -6,13 +6,10 @@ byte-identical files. Inputs are cached on disk under
 atomic rename only once complete, so an interrupted build leaves nothing
 a later run could mistake for a finished input.
 
-Inputs are cached on disk except the detections workload's: its fact
-table comes from the engine's own generator
-(``tools.generate.generate_detection_data``), which warms the JVM it
-runs in, so the measured process regenerates it every run (about 4 s)
-and every run starts its set-up equally warm. What is cached for it is
-the expected outputs and a digest of the input, which each regenerated
-copy must match. The location dimension is built here: the engine's
+The detections fact table comes from the engine's own generator
+(``tools.generate.generate_detection_data``) and is written with a hash
+partitioning and a total sort order, so its bytes do not depend on task
+scheduling. The location dimension is built here: the engine's
 ``generate_location_data`` caps at its 25-city vocabulary, and the
 workload has 10K locations. The corpus, the txtable base and the CDC
 batches are drawn with NumPy and need no Spark session.
@@ -31,7 +28,7 @@ import pyarrow.parquet as pq
 
 # The detections workload: the paper's shape (15% duplicates, skew 5
 # on location 1, a 10K-row location dimension) at a quarter of its 1M
-# rows, so that warm-up and several measured iterations fit in one run.
+# rows, so that a cold and a measured iteration fit in one run's budget.
 DETECTION_ROWS = 250_000
 DETECTION_LOCATIONS = 10_000
 DUPLICATION_RATE = 0.15
@@ -149,9 +146,12 @@ def _normalize_spark_output(path: str) -> None:
 
 
 def _write_spark(df, path: str, partitions: int) -> None:
-    df.repartition(partitions).sortWithinPartitions(
-        "detection_oid"
-    ).write.mode("overwrite").parquet(path)
+    """Write ``df`` as ``partitions`` files whose bytes depend only on
+    its rows: hash-partitioned by key, every file sorted on all columns
+    (a round-robin split would depend on the order tasks deliver rows)."""
+    df.repartition(partitions, "detection_oid").sortWithinPartitions(
+        *df.columns
+    ).write.parquet(path)
     _normalize_spark_output(path)
 
 
@@ -170,33 +170,46 @@ def location_dim(spark, n: int, seed: int):
     )
 
 
-def detections(spark, out: str, seed: int, rows: int = DETECTION_ROWS,
+def detections_dir(work: str, seed: int, rows: int = DETECTION_ROWS,
+                   locations: int = DETECTION_LOCATIONS) -> str:
+    return os.path.join(
+        input_root(work), f"detections-s{seed}-n{rows}-l{locations}"
+    )
+
+
+def detections(spark, work: str, seed: int, rows: int = DETECTION_ROWS,
                locations: int = DETECTION_LOCATIONS) -> dict:
-    """Generate dataA (``rows`` detections, 15% duplicate ids, skew 5 on
-    location 1) and dataB (``locations`` rows) under ``out``, replacing
-    what is there. Returns the two directories."""
+    """dataA (``rows`` detections, 15% duplicate ids, skew 5 on location
+    1) and dataB (``locations`` rows), built on ``spark`` once per
+    ``(seed, size)``; ``spark`` may be None once they are cached.
+    Returns the two directories and the cache directory."""
     from parquet_combiner_spark.tools.generate import generate_detection_data
 
-    data_a = generate_detection_data(
-        spark,
-        rows,
-        num_locations=locations,
-        duplication_rate=DUPLICATION_RATE,
-        skew_location_id=SKEW_LOCATION,
-        skew_factor=SKEW_FACTOR,
-        seed=seed,
+    def build(tmp: str) -> None:
+        data_a = generate_detection_data(
+            spark,
+            rows,
+            num_locations=locations,
+            duplication_rate=DUPLICATION_RATE,
+            skew_location_id=SKEW_LOCATION,
+            skew_factor=SKEW_FACTOR,
+            seed=seed,
+        )
+        _write_spark(data_a, os.path.join(tmp, "dataA"), 4)
+        location_dim(spark, locations, seed).coalesce(1).write.parquet(
+            os.path.join(tmp, "dataB")
+        )
+        _normalize_spark_output(os.path.join(tmp, "dataB"))
+
+    root = _cached(
+        work, os.path.basename(detections_dir(work, seed, rows, locations)),
+        build,
     )
-    shutil.rmtree(out, ignore_errors=True)
-    _write_spark(data_a, os.path.join(out, "dataA"), 4)
-    location_dim(spark, locations, seed).coalesce(1).write.parquet(
-        os.path.join(out, "dataB")
-    )
-    _normalize_spark_output(os.path.join(out, "dataB"))
     return {
-        "dataA": os.path.join(out, "dataA"),
-        "dataB": os.path.join(out, "dataB"),
+        "dataA": os.path.join(root, "dataA"),
+        "dataB": os.path.join(root, "dataB"),
         "rows": rows,
-        "key": f"detections-s{seed}-n{rows}-l{locations}",
+        "dir": root,
     }
 
 

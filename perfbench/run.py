@@ -1,21 +1,20 @@
 """Benchmark entry point: one seeded workload, closed loop, one client.
 
     python3 perfbench/run.py --workload detections_topx --seed 1 \
-        --seconds 5 --trace 0
+        --seconds 4 --trace 0
 
 Runs from the root of a source checkout, on ``local[N]`` with N from
 ``$SPARK_GRAFT_CPUS`` or else the CPUs this process may use. Inputs and
-their expected outputs are built on the first session, outside the
-timed set-up (cached under ``perfbench/_work/inputs``). Set-up (session
-start and the workload's fresh state) is done three times: one cold
-start counted from process start, two session restarts. ``setup_s`` is their median plus the first
-iteration of the workload, run on the last session. After the
-workload's untimed warm-up iterations, its op sequence repeats until
-the ops have run for ``--seconds`` (at least one iteration).
-Every iteration's outputs are checked against DuckDB outside the timed
-region. With ``--trace 1`` a second, traced pass of the same number of
-iterations follows on a session with Spark's event log on, and the
-per-layer metrics come from it.
+their expected outputs are built on the first run of a seed (cached
+under ``perfbench/_work/inputs``) or loaded, before the measured session
+starts; their time is taken out of set-up. ``setup_s`` is the time from
+process start to session ready, plus the workload's fresh state and its
+first iteration. Then the op sequence repeats until the ops have run
+for ``--seconds`` (at least one iteration). Every iteration's outputs
+are checked against DuckDB outside the timed region. With ``--trace 1``
+a second, traced pass of the same number of iterations follows on a
+session with Spark's event log on, and the per-layer metrics come from
+it.
 
 The last line of standard output is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``.
@@ -26,6 +25,7 @@ from __future__ import annotations
 import argparse
 import gc
 import json
+import multiprocessing
 import os
 import shutil
 import statistics
@@ -36,18 +36,15 @@ from contextlib import nullcontext
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, "perfbench", "_work")
-SETUPS = 3
 _T0 = time.time()
 
-# The result line's metrics on an untraced run. Peak memory is printed
-# too, but its run-to-run spread (12-13% across seeds) is too wide for a
-# regression bound, so the result line carries it only as a per-layer
-# metric (mem.peak_rss_mb).
+# The result line's metrics on an untraced run.
 END_TO_END = {
     "setup_s": "s",
     "iter_p50_s": "s",
     "rows_per_s": "rows/s",
     "write_amp": "ratio",
+    "peak_rss_mb": "MiB",
 }
 
 
@@ -69,6 +66,7 @@ class Runner:
         self.samples: dict[str, list[float]] = {op: [] for op in workload.ops}
         self.attempted = 0
         self.failed = 0
+        self.failed_ops: set[str] = set()  # in the current iteration
         self.cache_bytes = 0.0
 
     def run_op(self, name: str, fn):
@@ -85,14 +83,13 @@ class Runner:
                 out = fn()
         except Exception:  # noqa: BLE001 — a failed op is counted, not fatal
             self._fail(name, traceback.format_exc())
+            self.failed_ops.add(name)
         self.samples[name].append(time.perf_counter() - t0)
         if tracer is not None:
             self.cache_bytes = max(self.cache_bytes, self._stored_bytes())
-            hook = getattr(self.wl, "traced_op_done", None)
-            if hook is not None:
-                hook(self.spark, name, self._jobs() - jobs0)
+            self.wl.traced_op_done(self.spark, name, self._jobs() - jobs0)
             tracer.op_id = None
-        if name not in getattr(self.wl, "keep_after", ()):
+        if name not in self.wl.keep_after:
             self.release()
         return out
 
@@ -102,11 +99,13 @@ class Runner:
 
     def iteration(self) -> float:
         """One op sequence, then its output checks; returns the summed
-        op time."""
+        op time. An op that raised is counted failed once, not again for
+        its missing output."""
         before = {op: len(v) for op, v in self.samples.items()}
+        self.failed_ops.clear()
         self.wl.iteration(self.spark, self.run_op)
         for op, ok in self.wl.check().items():
-            if not ok:
+            if not ok and op not in self.failed_ops:
                 self._fail(op, "output check failed")
         return sum(
             sum(v[before[op]:]) for op, v in self.samples.items()
@@ -142,6 +141,19 @@ def _session(app: str, extra: dict):
     return get_spark(
         app_name=app, master=f"local[{_cpus()}]", extra_conf=extra
     )
+
+
+def _build_spark_inputs(name: str, seed: int, run: str) -> None:
+    """Child process: build a workload's Spark-made inputs on a session
+    of its own, so the measured session never runs the generator and
+    starts equally cold in every run."""
+    from perfbench.workloads import WORKLOADS
+
+    spark = _session("perfbench-inputs", _base_conf(run))
+    try:
+        WORKLOADS[name](seed, WORK, run).build_spark_inputs(spark)
+    finally:
+        spark.stop()
 
 
 def _base_conf(run: str) -> dict:
@@ -207,32 +219,33 @@ def main(argv=None) -> int:
     wl = WORKLOADS[args.workload](args.seed, WORK, run)
     conf = _base_conf(run)
 
-    # --- set-up: session (re)start + the workload's fresh state, several
-    # times; the first counts from process start. Inputs are built (or
-    # loaded) on the first session, outside the set-up times ----------
-    setups, readies = [], []
-    spark = None
-    started = trace.process_age_s()
-    for k in range(SETUPS):
-        t0 = time.perf_counter()
-        if spark is not None:
-            spark.stop()
-        spark = _session(f"perfbench-{wl.name}", conf)
-        ready = time.perf_counter() - t0 + (started if k == 0 else 0.0)
-        readies.append(ready)
-        if k == 0:
-            wl.build_inputs(spark)
-            _phase("inputs and expected outputs ready")
-        t1 = time.perf_counter()
-        wl.prepare(spark)
-        setups.append(ready + time.perf_counter() - t1)
-        _phase(f"set-up {k} done")
+    # --- inputs: built on the first run of a seed, else loaded; their
+    # time is taken out of set-up -------------------------------------
+    t0 = time.perf_counter()
+    if wl.spark_inputs_missing():
+        child = multiprocessing.get_context("spawn").Process(
+            target=_build_spark_inputs, args=(wl.name, args.seed, run)
+        )
+        child.start()
+        child.join()
+        if child.exitcode != 0:
+            raise RuntimeError(f"input build exited with {child.exitcode}")
+    wl.build_inputs()
+    built = time.perf_counter() - t0
+    trace.reset_peak_rss()
+    _phase("inputs and expected outputs ready")
+
+    # --- set-up: process start to session ready, then the workload's
+    # fresh state and its first iteration -----------------------------
+    spark = _session(f"perfbench-{wl.name}", conf)
+    ready = trace.process_age_s() - built
+    t1 = time.perf_counter()
+    wl.prepare(spark)
+    prepared = time.perf_counter() - t1
     jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     runner = Runner(spark, wl)
     first = runner.iteration()
-    for _ in range(wl.warmup):
-        runner.iteration()
-    _phase("first and warm-up iterations done")
+    _phase("first iteration done")
 
     # --- measured pass, untraced -------------------------------------
     for v in runner.samples.values():
@@ -247,22 +260,21 @@ def main(argv=None) -> int:
     _phase("measured pass done")
     run_s = sum(iters)
     e2e = {
-        "setup_s": statistics.median(setups) + first,
+        "setup_s": ready + prepared + first,
         "iter_p50_s": _p50(iters),
-        "rows_per_s": wl.rows_per_iter * len(iters) / run_s,
+        "rows_per_s": wl.rows_per_iter / _p50(iters),
         "write_amp": (file_bytes + shuffle_bytes)
         / (wl.bytes_per_iter * len(iters)),
+        "peak_rss_mb": trace.peak_rss_mb([os.getpid(), jvm_pid]),
     }
-
-    peak_rss = trace.peak_rss_mb([os.getpid(), jvm_pid])
     layer = {}
     if args.trace:
         layer = _traced_pass(spark, wl, runner, conf, len(iters), run_s)
-        layer["session.start_s"] = readies[0]
+        layer["session.start_s"] = ready
         layer["session.first_iter_s"] = first
     for op in _ALL_OPS:
         layer[f"op.{op}_p50_s"] = _p50(op_time.get(op, []))
-    layer["mem.peak_rss_mb"] = peak_rss
+    layer["mem.peak_rss_mb"] = e2e["peak_rss_mb"]
     if not args.trace:
         spark.stop()
 
@@ -404,7 +416,6 @@ def _report(wl, args, e2e, op_time, iters, runner, layer) -> None:
     print(f"# {wl.name} seed={args.seed} iterations={len(iters)} "
           f"ops={n_ops} cpus={_cpus()}")
     rows = [(k, e2e[k], END_TO_END[k]) for k in END_TO_END]
-    rows.append(("peak_rss_mb", layer["mem.peak_rss_mb"], "MiB"))
     rows.append(("run_s", sum(iters), "s"))
     rows.append(("error_rate", runner.failed / max(runner.attempted, 1),
                  "ratio"))

@@ -59,7 +59,7 @@ def test_detections_are_byte_identical_per_seed(spark, tmp_path):
 
     first = build("a", 5)
     assert build("b", 5) == first
-    # regenerating in place replaces the previous copy
+    # a second call in the same place reuses the cached copy
     assert build("a", 5) == first
     other = build("c", 6)
     assert other[0] != first[0] and other[1] != first[1]

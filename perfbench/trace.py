@@ -40,6 +40,13 @@ def peak_rss_mb(pids) -> float:
     return total_kb / 1024.0
 
 
+def reset_peak_rss() -> None:
+    """Restart this process's ``VmHWM`` from its current resident size,
+    so memory used before (building inputs) is not counted."""
+    with open("/proc/self/clear_refs", "w") as f:
+        f.write("5")
+
+
 def file_state(dirs) -> dict:
     """path -> (inode, mtime_ns, size) for every file under ``dirs``."""
     state = {}

@@ -44,10 +44,10 @@ class Workload:
 
     name = ""
     ops: tuple[str, ...] = ()
-    # untimed iterations after the first, before the measured pass
-    warmup = 0
     # spans counted as lazy DataFrame building (plan.build_s)
     plan_spans: tuple[str, ...] = ()
+    # ops after which the runner keeps persisted blocks for the next op
+    keep_after: frozenset[str] = frozenset()
 
     def __init__(self, seed: int, work: str, run: str):
         self.seed = seed
@@ -63,9 +63,18 @@ class Workload:
     def write_dirs(self) -> list[str]:
         return []
 
-    def build_inputs(self, spark) -> None:
+    def spark_inputs_missing(self) -> bool:
+        """Whether inputs that need a Spark session to build are not
+        cached yet."""
+        return False
+
+    def build_spark_inputs(self, spark) -> None:
+        """Build the inputs that need a Spark session (in a process of
+        their own, so no measured session runs the generator)."""
+
+    def build_inputs(self) -> None:
         """Build (if not cached) and load the inputs and the expected
-        outputs."""
+        outputs, without Spark."""
         raise NotImplementedError
 
     def prepare(self, spark) -> None:
@@ -89,6 +98,10 @@ class Workload:
         """Start (``tracing=True``) or stop the traced pass's
         workload-specific counters, accumulating into ``self.layer``."""
 
+    def traced_op_done(self, spark, op: str, jobs: int) -> None:
+        """Per-op counters of the traced pass, taken after ``op`` ran
+        ``jobs`` Spark jobs."""
+
 
 class DetectionsTopX(Workload):
     """The paper's job: dedup detections, per-location top-X with a
@@ -97,29 +110,25 @@ class DetectionsTopX(Workload):
     name = "detections_topx"
     ops = ("top_items", "all_aggs")
     plan_spans = ("plan.top_items", "plan.all_aggregations")
-    warmup = 1
 
-    def build_inputs(self, spark) -> None:
-        self.inp = inputs.detections(
-            spark, os.path.join(self.run, "inputs"), self.seed
-        )
+    def spark_inputs_missing(self) -> bool:
+        return not os.path.isdir(inputs.detections_dir(self.work, self.seed))
+
+    def build_spark_inputs(self, spark) -> None:
+        inputs.detections(spark, self.work, self.seed)
+
+    def build_inputs(self) -> None:
+        self.inp = inputs.detections(None, self.work, self.seed)
         self.rows_per_iter = self.inp["rows"] * len(self.ops)
         self.bytes_per_iter = (
             inputs.dir_bytes(self.inp["dataA"])
             + inputs.dir_bytes(self.inp["dataB"])
         ) * len(self.ops)
-        digest = {
-            "input": [inputs.dir_digest(self.inp["dataA"]),
-                      inputs.dir_digest(self.inp["dataB"])],
-        }
         self.expected = _expected(
-            os.path.join(inputs.input_root(self.work), self.inp["key"]),
-            lambda: {**digest, **oracle.detection_expected(
+            self.inp["dir"], lambda: oracle.detection_expected(
                 self.inp["dataA"], self.inp["dataB"], TOP_X
-            )},
+            ),
         )
-        if self.expected.pop("input") != tuple(digest["input"]):
-            raise RuntimeError("regenerated input differs from its digest")
 
     def write_dirs(self) -> list[str]:
         return [self.out]
@@ -127,11 +136,17 @@ class DetectionsTopX(Workload):
     def prepare(self, spark) -> None:
         self.out = os.path.join(self.run, "out")
         shutil.rmtree(self.out, ignore_errors=True)
+        self.iters = 0
 
     def iteration(self, spark, run_op) -> None:
+        # each iteration writes its own directories, so every byte it
+        # writes is still on disk when write_amp counts them
+        self.iter_out = os.path.join(self.out, f"i{self.iters:04d}")
+        self.iters += 1
         a, b = self.inp["dataA"], self.inp["dataB"]
         run_op("top_items", lambda: pipeline.process_parquet_files(
-            spark, a, b, os.path.join(self.out, "top_items"), top_x=TOP_X
+            spark, a, b, os.path.join(self.iter_out, "top_items"),
+            top_x=TOP_X,
         ))
         run_op("all_aggs", lambda: self._all_aggs(spark, a, b))
 
@@ -142,7 +157,7 @@ class DetectionsTopX(Workload):
         try:
             for name in ("top_items", "item_count", "location_stats"):
                 io.write_parquet(
-                    res[name], os.path.join(self.out, "all_aggs", name)
+                    res[name], os.path.join(self.iter_out, "all_aggs", name)
                 )
         finally:
             res["_deduped"].unpersist()
@@ -151,11 +166,11 @@ class DetectionsTopX(Workload):
         con = oracle.connect()
         ok = {
             "top_items": oracle.parquet_digest(
-                con, os.path.join(self.out, "top_items")
+                con, os.path.join(self.iter_out, "top_items")
             ) == self.expected["top_items"],
             "all_aggs": all(
                 oracle.parquet_digest(
-                    con, os.path.join(self.out, "all_aggs", name)
+                    con, os.path.join(self.iter_out, "all_aggs", name)
                 ) == self.expected[name]
                 for name in ("top_items", "item_count", "location_stats")
             ),
@@ -229,7 +244,7 @@ class TxTableCDC(Workload):
     plan_spans = ("plan.read_table_where",)
     stats_cols = ["detection_oid", "video_camera_oid", "timestamp_detected"]
 
-    def build_inputs(self, spark) -> None:
+    def build_inputs(self) -> None:
         self.base = inputs.tx_base(self.work, self.seed)
         self.root = os.path.join(self.run, "tx")
         self.table = os.path.join(self.root, "table")
@@ -409,9 +424,9 @@ class CorpusNearDup(Workload):
     ops = ("pairs", "clusters", "rrf")
     plan_spans = ("plan.ngram_jaccard_pairs", "plan.hybrid_rrf_topk")
     # clusters reads the pair cache the pairs op fills
-    keep_after = {"pairs"}
+    keep_after = frozenset({"pairs"})
 
-    def build_inputs(self, spark) -> None:
+    def build_inputs(self) -> None:
         self.inp = inputs.corpus(self.work, self.seed)
         self.rows_per_iter = self.inp["docs"] * len(self.ops)
         self.bytes_per_iter = sum(
