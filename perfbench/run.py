@@ -1,6 +1,6 @@
 """Benchmark entry point: one seeded workload, closed loop, one client.
 
-    python3 perfbench/run.py --workload detections_topx --seed 1 \
+    python3 perfbench/run.py --workload batch_analytics --seed 1 \
         --seconds 4 --trace 0
 
 Runs from the root of a source checkout, on ``local[N]`` with N from
@@ -10,8 +10,10 @@ under ``perfbench/_work/inputs``) or loaded, before the measured session
 starts; their time is taken out of set-up. ``setup_s`` is the time from
 process start to session ready, plus the workload's fresh state and its
 first iteration. Then the op sequence repeats until the ops have run
-for ``--seconds`` (at least one iteration). Every iteration's outputs
-are checked against DuckDB outside the timed region. With ``--trace 1``
+for ``--seconds`` (at least one iteration). Each op is timed in wall
+time and in CPU time (this process and every descendant: the JVM and
+its Python workers). Every iteration's outputs are checked against
+DuckDB outside the timed region. With ``--trace 1``
 a second, traced pass of the same number of iterations follows on a
 session with Spark's event log on, and the per-layer metrics come from
 it.
@@ -25,10 +27,11 @@ from __future__ import annotations
 import argparse
 import gc
 import json
-import multiprocessing
 import os
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -41,8 +44,7 @@ _T0 = time.time()
 # The result line's metrics on an untraced run.
 END_TO_END = {
     "setup_s": "s",
-    "iter_p50_s": "s",
-    "rows_per_s": "rows/s",
+    "iter_cpu_s": "s",
     "write_amp": "ratio",
     "peak_rss_mb": "MiB",
 }
@@ -64,12 +66,16 @@ class Runner:
         self.wl = workload
         self.tracer = tracer
         self.samples: dict[str, list[float]] = {op: [] for op in workload.ops}
+        self.iter_cpu: list[float] = []  # CPU seconds of each iteration
+        self.op_cpu = 0.0  # CPU seconds of the current iteration's ops
         self.attempted = 0
         self.failed = 0
         self.failed_ops: set[str] = set()  # in the current iteration
         self.cache_bytes = 0.0
 
     def run_op(self, name: str, fn):
+        from perfbench.procs import cpu_seconds
+
         self.attempted += 1
         tracer = self.tracer
         if tracer is not None:
@@ -77,6 +83,7 @@ class Runner:
             jobs0 = self._jobs()
         out = None
         span = tracer.span(name) if tracer is not None else nullcontext()
+        cpu0 = cpu_seconds()
         t0 = time.perf_counter()
         try:
             with span:
@@ -85,6 +92,7 @@ class Runner:
             self._fail(name, traceback.format_exc())
             self.failed_ops.add(name)
         self.samples[name].append(time.perf_counter() - t0)
+        self.op_cpu += cpu_seconds() - cpu0
         if tracer is not None:
             self.cache_bytes = max(self.cache_bytes, self._stored_bytes())
             self.wl.traced_op_done(self.spark, name, self._jobs() - jobs0)
@@ -99,11 +107,13 @@ class Runner:
 
     def iteration(self) -> float:
         """One op sequence, then its output checks; returns the summed
-        op time. An op that raised is counted failed once, not again for
-        its missing output."""
+        op time and keeps the summed op CPU time. An op that raised is
+        counted failed once, not again for its missing output."""
         before = {op: len(v) for op, v in self.samples.items()}
         self.failed_ops.clear()
+        self.op_cpu = 0.0
         self.wl.iteration(self.spark, self.run_op)
+        self.iter_cpu.append(self.op_cpu)
         for op, ok in self.wl.check().items():
             if not ok and op not in self.failed_ops:
                 self._fail(op, "output check failed")
@@ -143,17 +153,30 @@ def _session(app: str, extra: dict):
     )
 
 
-def _build_spark_inputs(name: str, seed: int, run: str) -> None:
+def _build_spark_inputs(name: str, seed: str, run: str) -> None:
     """Child process: build a workload's Spark-made inputs on a session
     of its own, so the measured session never runs the generator and
     starts equally cold in every run."""
+    from perfbench import procs
     from perfbench.workloads import WORKLOADS
 
-    spark = _session("perfbench-inputs", _base_conf(run))
+    procs.become_subreaper()
     try:
-        WORKLOADS[name](seed, WORK, run).build_spark_inputs(spark)
+        spark = _session("perfbench-inputs", _base_conf(run))
+        WORKLOADS[name](int(seed), WORK, run).build_spark_inputs(spark)
     finally:
-        spark.stop()
+        procs.stop_all()
+
+
+def _build_in_child(name: str, seed: int, run: str) -> None:
+    code = (
+        "import sys; from perfbench.run import _build_spark_inputs; "
+        "_build_spark_inputs(*sys.argv[1:])"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code, name, str(seed), run],
+        cwd=ROOT, check=True,
+    )
 
 
 def _base_conf(run: str) -> dict:
@@ -194,6 +217,12 @@ def _p50(v):
     return statistics.median(v) if v else 0.0
 
 
+def _terminated(signum, frame):
+    from perfbench import procs
+
+    procs.exit_now(128 + signum)
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
@@ -203,6 +232,19 @@ def main(argv=None) -> int:
     args = p.parse_args(argv)
 
     sys.path.insert(0, ROOT)
+    from perfbench import procs
+
+    # every way out stops the JVMs, their Python workers and the input
+    # builder, and waits for them to end
+    procs.become_subreaper()
+    signal.signal(signal.SIGTERM, _terminated)
+    try:
+        return _bench(p, args)
+    finally:
+        procs.stop_all()
+
+
+def _bench(p, args) -> int:
     from perfbench import trace
 
     run = os.path.join(WORK, "run")
@@ -223,13 +265,7 @@ def main(argv=None) -> int:
     # time is taken out of set-up -------------------------------------
     t0 = time.perf_counter()
     if wl.spark_inputs_missing():
-        child = multiprocessing.get_context("spawn").Process(
-            target=_build_spark_inputs, args=(wl.name, args.seed, run)
-        )
-        child.start()
-        child.join()
-        if child.exitcode != 0:
-            raise RuntimeError(f"input build exited with {child.exitcode}")
+        _build_in_child(wl.name, args.seed, run)
     wl.build_inputs()
     built = time.perf_counter() - t0
     trace.reset_peak_rss()
@@ -250,6 +286,7 @@ def main(argv=None) -> int:
     # --- measured pass, untraced -------------------------------------
     for v in runner.samples.values():
         v.clear()
+    runner.iter_cpu.clear()
     stage0 = trace.last_stage_id(spark)
     files0 = trace.file_state(wl.write_dirs())
     iters = _measure(runner, seconds=args.seconds)
@@ -261,11 +298,16 @@ def main(argv=None) -> int:
     run_s = sum(iters)
     e2e = {
         "setup_s": ready + prepared + first,
-        "iter_p50_s": _p50(iters),
-        "rows_per_s": wl.rows_per_iter / _p50(iters),
+        "iter_cpu_s": _p50(runner.iter_cpu),
         "write_amp": (file_bytes + shuffle_bytes)
         / (wl.bytes_per_iter * len(iters)),
         "peak_rss_mb": trace.peak_rss_mb([os.getpid(), jvm_pid]),
+    }
+    # wall-clock iteration figures: printed, and per-layer in a traced
+    # run, but not bounded (see README.md, "Steadiness")
+    wall = {
+        "iter_p50_s": _p50(iters),
+        "rows_per_s": wl.rows_per_iter / _p50(iters),
     }
     layer = {}
     if args.trace:
@@ -274,11 +316,10 @@ def main(argv=None) -> int:
         layer["session.first_iter_s"] = first
     for op in _ALL_OPS:
         layer[f"op.{op}_p50_s"] = _p50(op_time.get(op, []))
+    layer.update(wall)
     layer["mem.peak_rss_mb"] = e2e["peak_rss_mb"]
-    if not args.trace:
-        spark.stop()
 
-    _report(wl, args, e2e, op_time, iters, runner, layer)
+    _report(wl, args, {**e2e, **wall}, op_time, iters, runner, layer)
     return 0
 
 
@@ -310,6 +351,7 @@ PER_LAYER = {
     "pairs.candidates": "count", "pairs.emitted": "count",
     "pairs.yield": "ratio", "clusters.jobs": "count",
     "trace.overhead_s": "s", "mem.peak_rss_mb": "MiB",
+    "iter_p50_s": "s", "rows_per_s": "rows/s",
     **{f"op.{op}_p50_s": "s" for op in _ALL_OPS},
 }
 
@@ -416,6 +458,8 @@ def _report(wl, args, e2e, op_time, iters, runner, layer) -> None:
     print(f"# {wl.name} seed={args.seed} iterations={len(iters)} "
           f"ops={n_ops} cpus={_cpus()}")
     rows = [(k, e2e[k], END_TO_END[k]) for k in END_TO_END]
+    rows.append(("iter_p50_s", e2e["iter_p50_s"], "s"))
+    rows.append(("rows_per_s", e2e["rows_per_s"], "rows/s"))
     rows.append(("run_s", sum(iters), "s"))
     rows.append(("error_rate", runner.failed / max(runner.attempted, 1),
                  "ratio"))
