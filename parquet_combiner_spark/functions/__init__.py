@@ -10,6 +10,7 @@ rows-only check; everything else hash-matches an ANSI-SQL oracle.
 
 from __future__ import annotations
 
+import os
 from collections import OrderedDict
 from collections.abc import Callable
 
@@ -316,16 +317,29 @@ def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NGRAM_PAIR_CACHE: OrderedDict[tuple[str, str], DataFrame] = OrderedDict()
+_NGRAM_PAIR_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
 _NGRAM_PAIR_CACHE_MAX = 2  # sf_dirs per session; LRU beyond this
+
+
+def _file_listing(path: str) -> tuple:
+    """``(path, size, mtime_ns)`` of ``path`` itself when it is a
+    file, else of every file under it — changes whenever the data
+    under ``path`` is rewritten."""
+    paths = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, files in os.walk(path) for f in files
+    )
+    stats = [(p, os.stat(p)) for p in paths]
+    return tuple((p, st.st_size, st.st_mtime_ns) for p, st in stats)
 
 
 def _ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact-Jaccard pair join is the most expensive stage both
     ``ngram_jaccard_pairs`` and ``near_dup_clusters`` share; when the
     driver runs the whole registry in one session the join would
-    otherwise execute twice. Memoized per (session, sf_dir) as an
-    eagerly persisted DataFrame — MEMORY_AND_DISK, not a
+    otherwise execute twice. Memoized per (session, sf_dir,
+    documents file listing) as an eagerly persisted DataFrame — the
+    listing keeps a ``documents.parquet`` rewritten within the
+    session from returning stale pairs — MEMORY_AND_DISK, not a
     localCheckpoint: the pair join is deterministic, so block loss
     just recomputes through intact lineage, and ``unpersist`` frees
     the blocks (a localCheckpoint pins them until session end).
@@ -335,7 +349,13 @@ def _ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     app_id = spark.sparkContext.applicationId
     for stale in [k for k in _NGRAM_PAIR_CACHE if k[0] != app_id]:
         del _NGRAM_PAIR_CACHE[stale]
-    key = (app_id, sf_dir)
+    key = (app_id, sf_dir, _file_listing(table_path(sf_dir, "documents")))
+    # an entry for the same sf_dir under an older listing must be
+    # unpersisted, not just missed: Spark's CacheManager matches the
+    # new pair plan to the old cached one by input path alone
+    for stale in [k for k in _NGRAM_PAIR_CACHE if k[:2] == key[:2]]:
+        if stale != key:
+            _NGRAM_PAIR_CACHE.pop(stale).unpersist()
     pairs = _NGRAM_PAIR_CACHE.get(key)
     if pairs is None:
         pairs = dedup_text.ngram_jaccard_pairs(

@@ -538,13 +538,11 @@ def _physical_reader(
     discovery, any layout. Path segments carry physical names."""
     from pyspark.sql import functions as F
 
-    struct = _struct_of(spark, schema)
-    names = struct.names
+    fields = _split_ddl(schema)
+    names = [n for n, _ in fields]
+    type_of = dict(fields)
     phys_of = {n: mapping.get(n, n) for n in names}
-    phys_schema = ", ".join(
-        f"{phys_of[f.name]} {f.dataType.simpleString()}"
-        for f in struct.fields
-    )
+    phys_schema = ", ".join(f"{phys_of[n]} {t}" for n, t in fields)
     phys_part = sorted(
         {
             k
@@ -584,7 +582,7 @@ def _physical_reader(
                     raw == "__HIVE_DEFAULT_PARTITION__", F.lit(None)
                 )
                 .otherwise(_pct(_pct(raw)))
-                .cast(struct[n].dataType)
+                .cast(type_of[n])
             )
             # PER-FILE era resolution (partition spec evolution): a
             # file whose path lacks the col=value segment predates
@@ -703,40 +701,10 @@ def _scan(
     return out
 
 
-def _normalize_schema(df: DataFrame) -> list[list[str]]:
-    return _normalize_struct(df.schema)
-
-
-def _normalize_struct(st) -> list[list[str]]:
-    """Order- and top-level-case-insensitive (name, type) pairs from a
-    StructType. Nested field-name case inside the type string is
-    PRESERVED: the Arrow-side txtable reader matches names
-    case-sensitively, so a case-only nested-name drift must compare
-    unequal here (ADVICE r15 high — ``_normalize_ddl`` lowercases the
-    whole type string and must not be compared against this)."""
-    return sorted([f.name.lower(), f.dataType.simpleString()] for f in st.fields)
-
-
-def _normalize_ddl_rt(spark: SparkSession, ddl: str) -> list[list[str]]:
-    """Round-trip normalize of a committed DDL: parse (memoized via
-    :func:`_struct_of`, ~0.02 ms on a hit vs 67 ms for the empty
-    ``createDataFrame`` round trip) and normalize exactly like
-    :func:`_normalize_schema`. This is the comparison the commit-path
-    schema gates use against a live DataFrame — identical semantics to
-    the pre-r15 round-trip gate, including rejecting nested
-    field-name case drift that the all-lowering ``_normalize_ddl``
-    would silently accept."""
-    return _normalize_struct(_struct_of(spark, ddl))
-
-
-def _normalize_ddl(ddl: str) -> list[list[str]]:
-    """Order-insensitive (name, type) pairs from a simpleString DDL,
-    WITHOUT a SparkSession — a depth-aware top-level comma split
-    (nested struct/array/map types carry commas inside <>). Every
-    schema string in this layer is produced by the same simpleString
-    generator, so string-level type comparison is sound. Needed by
-    writers running where no session exists (the Python streaming
-    sink runner is its own process)."""
+def _split_ddl(ddl: str) -> list[list[str]]:
+    """ORDERED, case-preserving (name, type) pairs from a
+    simpleString DDL — a depth-aware top-level comma split (nested
+    struct/array/map types carry commas inside <>)."""
     parts: list[str] = []
     depth, cur = 0, []
     for ch in ddl:
@@ -759,36 +727,40 @@ def _normalize_ddl(ddl: str) -> list[list[str]]:
     out = []
     for field in parts:
         name, _, typ = field.partition(" ")
-        out.append([name.lower(), typ.strip().lower()])
-    return sorted(out)
+        out.append([name, typ.strip()])
+    return out
 
 
-# DDL string → parsed StructType, memoized (r15 optimization round,
-# guide §5 — the driver should do almost no work): every snapshot
-# read/DML verb re-parsed the committed schema through an EMPTY
-# ``createDataFrame`` round trip, ~67 ms of py4j + analysis apiece
-# against 0.02 ms for a dict hit. Sound because a DDL string is a
-# pure function of the schema it names, and the StructType the JVM
-# hands back is a session-independent plain-Python value (no JVM
-# refs) — the cache is plan-analysis memoization, the same class of
-# reuse as Spark's own codegen cache; every data row is still
-# computed from the parquet inputs on every call. Bounded by the
-# number of distinct schemas the process touches.
-_STRUCT_CACHE: dict = {}
+# one type-string token; a trailing ':' marks a NESTED FIELD NAME
+_TYPE_TOKEN_RE = re.compile(r"([^<>(),:]+)(:?)")
 
 
-def _struct_of(spark: SparkSession, ddl: str):
-    from pyspark.sql.types import StructType
+def _canon_type(typ: str) -> str:
+    """A simpleString type with its type KEYWORDS lowercased and its
+    nested field names kept as written: ``STRUCT<A:INT>`` →
+    ``struct<A:int>``. The Arrow-side txtable reader matches nested
+    names case-sensitively, so a case-only nested rename must compare
+    unequal."""
+    return _TYPE_TOKEN_RE.sub(
+        lambda m: m.group(0) if m.group(2) else m.group(0).lower(), typ
+    )
 
-    st = _STRUCT_CACHE.get(ddl)
-    if st is None:
-        st = spark.createDataFrame([], ddl).schema
-        _STRUCT_CACHE[ddl] = st
-    # defensive copy (ADVICE r15 low): StructType is mutable, and a
-    # caller appending a field to the returned value must not poison
-    # the cache for every later snapshot read. Fields themselves are
-    # treated as read-only by every caller (name/type access only).
-    return StructType(list(st.fields))
+
+def _normalize_ddl(ddl: str) -> list[list[str]]:
+    """THE schema comparison of every gate: order- and
+    top-level-case-insensitive (name, canonical type) pairs from a
+    simpleString DDL, WITHOUT a SparkSession — writers run where no
+    session exists (the Python streaming sink runner is its own
+    process). Every schema string in this layer is produced by the
+    same simpleString generator, so string-level type comparison is
+    sound."""
+    return sorted(
+        [name.lower(), _canon_type(t)] for name, t in _split_ddl(ddl)
+    )
+
+
+def _normalize_schema(df: DataFrame) -> list[list[str]]:
+    return _normalize_ddl(_ddl(df))
 
 
 _TRANSFORM_RE = re.compile(
@@ -1416,10 +1388,7 @@ def commit(
         # unknown file is a stale or corrupt caller.
         if last is None:
             raise FileNotFoundError(f"{table} has no table to replace into")
-        # memoized round-trip normalize (dict hit after the first
-        # parse; same semantics as the pre-r15 empty-createDataFrame
-        # gate, incl. nested field-name case — ADVICE r15 high)
-        want = _normalize_ddl_rt(df.sparkSession, last["schema"])
+        want = _normalize_ddl(last["schema"])
         if want != _normalize_schema(df):
             raise TypeError(
                 "replace must keep the table schema; use overwrite to "
@@ -1440,7 +1409,7 @@ def commit(
         # identity, same rule as replace (row mutation ≠ evolution)
         if last is None:
             raise FileNotFoundError(f"{table} has no table to mutate")
-        want = _normalize_ddl_rt(df.sparkSession, last["schema"])
+        want = _normalize_ddl(last["schema"])
         if want != _normalize_schema(df):
             raise TypeError(
                 "a dv commit must keep the table schema; use "
@@ -1468,7 +1437,7 @@ def commit(
         schema_ddl = last["schema"]
     if action == "append" and last:
         current = last["schema"]
-        want = _normalize_ddl_rt(df.sparkSession, current)
+        want = _normalize_ddl(current)
         have = _normalize_schema(df)
         if want != have:
             want_by = dict(want)
@@ -2434,6 +2403,38 @@ def _zone_disjoint(s: dict | None, lo, hi) -> bool:
     return False
 
 
+def _band_where(col: str, lo, hi):
+    """The ``where`` resolver of the single-band verbs
+    (:func:`read_table_pruned`, :func:`delete_where`,
+    :func:`update_where`): ``col`` in [lo, hi], with the
+    ``{col, lo, hi}`` commit meta those verbs have always recorded.
+    See :func:`_resolve_where` for the resolver contract."""
+    from pyspark.sql import functions as F
+
+    meta = {"col": col, "lo": _json_safe(lo), "hi": _json_safe(hi)}
+    return lambda _: (
+        {col: (lo, hi)}, {}, F.col(col).between(lo, hi), meta
+    )
+
+
+def _pruned_read(
+    spark: SparkSession, table: str, version: int | None, resolve
+) -> DataFrame:
+    """THE pruned snapshot read behind every ``read_table_pruned*`` /
+    :func:`read_table_where` shape: ``resolve(schema)`` yields
+    ``(bands, points, row condition, meta)`` for the snapshot's
+    schema (meta is unused here), :func:`_band_touched` keeps the
+    files that may hold a match, and the condition re-applies
+    row-level so the result is exactly the filtered snapshot."""
+    files, schema, stats, _, dvs, mapping = _snapshot(table, version)
+    bands, points, cond, _ = resolve(schema)
+    kept = _band_touched(
+        table, files, stats, mapping, bands,
+        types=_dtype_map(schema), points=points,
+    )
+    return _scan(spark, table, kept, schema, dvs, mapping).where(cond)
+
+
 def read_table_pruned(
     spark: SparkSession,
     table: str,
@@ -2460,34 +2461,7 @@ def read_table_pruned(
     segments prune too (:func:`_path_band_disjoint`), so a plain
     range predicate skips transform directories with no stats
     recorded at all (Iceberg's headline behavior)."""
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    phys = mapping.get(col, col)
-    dt = _dtype_map(schema).get(col.lower())
-    bloom_cache: dict = {}
-
-    def _kept(f):
-        s = stats.get(os.path.relpath(f, table), {}).get(phys)
-        if _zone_disjoint(s, lo, hi):
-            return False
-        if _path_band_disjoint(
-            os.path.relpath(f, table), phys, lo, hi, dt
-        ):
-            return False
-        if lo == hi and not isinstance(lo, bool):
-            # a POINT band consults the listing-level bloom sidecar
-            ref = (s or {}).get("bloom")
-            if ref and not _bloom_maybe_contains(
-                table, ref, lo, bloom_cache, dtype=dt
-            ):
-                return False
-        return True
-
-    kept = [f for f in files if _kept(f)]
-    from pyspark.sql import functions as F
-
-    return _scan(spark, table, kept, schema, dvs, mapping).where(
-        F.col(col).between(lo, hi)
-    )
+    return _pruned_read(spark, table, version, _band_where(col, lo, hi))
 
 
 def read_table_pruned_multi(
@@ -2509,35 +2483,14 @@ def read_table_pruned_multi(
     files), where a lexicographic sort only ever prunes its leading
     column. Files missing stats for a column are conservatively kept
     for that column (same rule as :func:`read_table_pruned`)."""
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    types = _dtype_map(schema)
-    kept = [
-        f
-        for f in files
-        if all(
-            not _zone_disjoint(
-                stats.get(os.path.relpath(f, table), {}).get(
-                    mapping.get(c, c)
-                ),
-                lo,
-                hi,
-            )
-            and not _path_band_disjoint(
-                os.path.relpath(f, table),
-                mapping.get(c, c),
-                lo,
-                hi,
-                types.get(c.lower()),
-            )
-            for c, (lo, hi) in predicates.items()
-        )
-    ]
     from pyspark.sql import functions as F
 
     cond = F.lit(True)
     for c, (lo, hi) in predicates.items():
         cond = cond & F.col(c).between(lo, hi)
-    return _scan(spark, table, kept, schema, dvs, mapping).where(cond)
+    return _pruned_read(
+        spark, table, version, lambda _: (predicates, {}, cond, None)
+    )
 
 
 def read_table_null_pruned(
@@ -2595,35 +2548,9 @@ def read_table_pruned_in(
     from pyspark.sql import functions as F
 
     vals = [v for v in values if v is not None]
-    if not vals:
-        files, schema, _, _, _, mapping = _snapshot(table, version)
-        return _scan(spark, table, [], schema, {}, mapping)
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    phys = mapping.get(col, col)
-    dt = _dtype_map(schema).get(col.lower())
-    bloom_cache: dict = {}
-
-    def _may_hold(f, v):
-        s = stats.get(os.path.relpath(f, table), {}).get(phys)
-        if _zone_disjoint(s, v, v):
-            return False
-        if _path_band_disjoint(
-            os.path.relpath(f, table), phys, v, v, dt
-        ):
-            return False
-        ref = (s or {}).get("bloom")
-        if ref and not _bloom_maybe_contains(
-            table, ref, v, bloom_cache, dtype=dt
-        ):
-            # listing-level bloom sidecar: "definitely absent"
-            # without opening the file — the prune min/max can't
-            # make on an unclustered high-cardinality column
-            return False
-        return True
-
-    kept = [f for f in files if any(_may_hold(f, v) for v in vals)]
-    return _scan(spark, table, kept, schema, dvs, mapping).where(
-        F.col(col).isin(*vals)
+    cond = F.col(col).isin(*vals)
+    return _pruned_read(
+        spark, table, version, lambda _: ({}, {col: vals}, cond, None)
     )
 
 
@@ -2645,13 +2572,13 @@ def read_table_where(
     version: int | None = None,
 ) -> DataFrame:
     """Snapshot read under an ARBITRARY SQL predicate with the DML
-    verbs' metadata file skipping on the READ side — the one-verb
-    reader for ad-hoc predicates, unifying what
-    :func:`read_table_pruned` (one band) /
+    verbs' metadata file skipping on the READ side — the ad-hoc
+    sibling of :func:`read_table_pruned` (one band) /
     :func:`read_table_pruned_multi` (band dict) /
-    :func:`read_table_pruned_in` (IN-list) each expose for a single
-    shape: Catalyst's analyzed tree yields per-column bands AND
-    equality/IN point sets (:func:`_sql_conjunct_constraints`), every
+    :func:`read_table_pruned_in` (IN-list); all four are one
+    :func:`_pruned_read`. Catalyst's analyzed tree yields per-column
+    bands AND equality/IN point sets
+    (:func:`_sql_conjunct_constraints`), every
     candidate file is probed through zone maps, hidden-partition path
     segments, and listing-level bloom sidecars
     (:func:`_band_touched`), and the FULL predicate re-applies
@@ -2661,16 +2588,9 @@ def read_table_where(
     100 TB table the ad-hoc `WHERE user_id IN (…) AND ts >= X` scan
     touches O(matching files) with zero footer reads for the path
     probes."""
-    from pyspark.sql import functions as F
-
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    bands, points = _sql_conjunct_constraints(spark, schema, predicate)
-    kept = _band_touched(
-        table, files, stats, mapping, bands,
-        types=_dtype_map(schema), points=points,
-    )
-    return _scan(spark, table, kept, schema, dvs, mapping).where(
-        F.expr(predicate)
+    return _pruned_read(
+        spark, table, version,
+        lambda schema: _resolve_where(spark, schema, predicate),
     )
 
 
@@ -2681,9 +2601,9 @@ def read_table_where(
 # repeated reads under the same predicate hit the cache; copies are
 # returned so a caller can't mutate the cached value. Size-capped
 # (ADVICE r15 low): DML predicates can embed literal key lists (GDPR
-# point deletes with unique IN-lists per call), so unlike the schema
-# cache the key space is NOT bounded by the table catalog — FIFO
-# eviction keeps a long-running process flat. Analysis-time folding
+# point deletes with unique IN-lists per call), so the key space is
+# NOT bounded by the table catalog — evicting the least recently used
+# entry keeps a long-running process flat. Analysis-time folding
 # of timestamp/date string literals depends on
 # spark.sql.session.timeZone; the engine pins it to UTC for the
 # process lifetime (session._DEFAULT_CONF), which is the invariant
@@ -2695,12 +2615,13 @@ _CONJUNCT_CACHE_MAX = 4096
 def _sql_conjunct_constraints(
     spark: SparkSession, schema: str, predicate: str
 ) -> tuple[dict, dict]:
-    hit = _CONJUNCT_CACHE.get((schema, predicate))
+    # pop + re-insert on a hit: dict order is then recency order
+    hit = _CONJUNCT_CACHE.pop((schema, predicate), None)
     if hit is None:
         hit = _sql_conjunct_constraints_uncached(spark, schema, predicate)
         while len(_CONJUNCT_CACHE) >= _CONJUNCT_CACHE_MAX:
             _CONJUNCT_CACHE.pop(next(iter(_CONJUNCT_CACHE)))
-        _CONJUNCT_CACHE[(schema, predicate)] = hit
+    _CONJUNCT_CACHE[(schema, predicate)] = hit
     bands, points = hit
     return dict(bands), {k: list(v) for k, v in points.items()}
 
@@ -2947,8 +2868,8 @@ def _band_touched(
     point-delete shape on an unclustered key skips every file whose
     bitset answers "definitely absent"; files missing stats, path
     segments, and sidecars for a column are conservatively kept for
-    that column) — the shared prune behind the DML verbs, identical
-    logic to :func:`read_table_pruned_multi`'s read side. Sound
+    that column) — the one prune behind the DML verbs and every
+    pruned reader (:func:`_pruned_read`). Sound
     inside the rebase proofs too: the sidecar indexes every distinct
     non-NULL value of the file (no truncation), so "absent" is exact
     — false positives merely keep files.
@@ -4210,77 +4131,10 @@ def delete_where(
     DVs are roaring bitmaps; the guard keeps this representation
     honest) — and a wider delete must use ``mode="cow"``.
     """
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
-        base = current_version(table)
-        if base < 0:
-            raise FileNotFoundError(f"{table} has no transaction log")
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        # the shared DML prune: zone maps + hidden-partition path
-        # probes + point-band bloom sidecars (one [lo, hi] band)
-        touched = _band_touched(
-            table, files, stats, mapping, {col: (lo, hi)},
-            types=_dtype_map(schema),
-        )
-        if not touched:
-            return base
-        if mode == "dv":
-            try:
-                return _delete_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    F.col(col).between(lo, hi),
-                    {"col": col, "lo": _json_safe(lo), "hi": _json_safe(hi)},
-                    max_dv_rows, cdf=cdf,
-                    rebase_bands={col: (lo, hi)},
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue  # table advanced: re-prune and re-resolve
-        change_rels = None
-        if cdf:
-            change_rels = _write_change_files(
-                table,
-                _scan(spark, table, touched, schema, dvs, mapping)
-                .where(F.col(col).between(lo, hi))
-                .withColumn("_change_type", F.lit("delete")),
-                mapping,
-            )
-        # NULL-valued rows are NOT in [lo, hi] and must SURVIVE the
-        # copy-on-write rewrite: a bare ~between() is NULL for them,
-        # which a WHERE drops — silent physical deletion of every
-        # NULL row in any touched file (ADVICE r8, high). The read
-        # goes through _scan so rows already deleted by a vector stay
-        # deleted in the rewritten files.
-        survivors = _scan(spark, table, touched, schema, dvs, mapping).where(
-            F.col(col).isNull() | ~F.col(col).between(lo, hi)
-        )
-        try:
-            return commit(
-                survivors,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={
-                    "delete": {
-                        "col": col,
-                        "lo": _json_safe(lo),
-                        "hi": _json_safe(hi),
-                    }
-                },
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands={col: (lo, hi)},
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # table advanced: re-prune against the new snapshot
-    raise AssertionError("unreachable")
+    return _delete_rows(
+        spark, table, _band_where(col, lo, hi),
+        max_retries, stats_cols, mode, max_dv_rows, cdf,
+    )
 
 
 _CHANGE_DIR = "changes"
@@ -4380,11 +4234,9 @@ def table_changes_cdf(
                 # changed zero rows (zone-map touch, no matches) —
                 # a zero-delta commit, not missing change data
                 continue
-            struct = _struct_of(spark, rec["schema"])
+            fields = _split_ddl(rec["schema"])
             phys_ddl = ", ".join(
-                f"{mapping.get(f.name, f.name)} "
-                f"{f.dataType.simpleString()}"
-                for f in struct.fields
+                f"{mapping.get(n, n)} {t}" for n, t in fields
             )
             df = spark.read.schema(
                 f"{phys_ddl}, _change_type string"
@@ -4394,8 +4246,8 @@ def table_changes_cdf(
             frames.append(
                 df.select(
                     *[
-                        F.col(mapping.get(f.name, f.name)).alias(f.name)
-                        for f in struct.fields
+                        F.col(mapping.get(n, n)).alias(n)
+                        for n, _ in fields
                     ],
                     "_change_type",
                 )
@@ -4422,8 +4274,10 @@ def table_changes_cdf(
 
 
 def _resolve_where(spark: SparkSession, schema: str, where):
-    """Normalize a DML predicate into (prune bands, point sets, row
-    Column, meta): ``where`` is either a dict of conjunctive
+    """Normalize a predicate into (prune bands, point sets, row
+    Column, commit meta) — the ``resolve(schema)`` contract of
+    :func:`_pruned_read`, :func:`_delete_rows` and
+    :func:`_update_rows`: ``where`` is either a dict of conjunctive
     ``{col: (lo, hi)}`` bands — every band prunes via zone maps and
     the row condition is their AND of ``between()``s — or an
     arbitrary SQL predicate string (AND/OR/IN/LIKE/functions,
@@ -4457,6 +4311,86 @@ def _resolve_where(spark: SparkSession, schema: str, where):
     )
 
 
+def _delete_rows(
+    spark: SparkSession,
+    table: str,
+    resolve,
+    max_retries: int,
+    stats_cols: Sequence[str] | None,
+    mode: str,
+    max_dv_rows: int,
+    cdf: bool,
+) -> int:
+    """THE DELETE loop behind :func:`delete_where` and
+    :func:`delete_where_expr`: each attempt snapshots the head,
+    ``resolve(schema)`` yields ``(bands, points, row condition,
+    commit meta)`` (see :func:`_resolve_where`), the touched files
+    are pruned, and the delete lands as deletion vectors or a
+    copy-on-write replace (plus CDF change files); the whole attempt
+    retries on :class:`CommitConflict`."""
+    from pyspark.sql import functions as F
+
+    if mode not in ("cow", "dv"):
+        raise ValueError(f"mode must be cow|dv, got {mode!r}")
+    for attempt in range(max(1, max_retries)):
+        base = current_version(table)
+        if base < 0:
+            raise FileNotFoundError(f"{table} has no transaction log")
+        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
+        bands, points, cond, meta = resolve(schema)
+        touched = _band_touched(
+            table, files, stats, mapping, bands,
+            types=_dtype_map(schema), points=points,
+        )
+        if not touched:
+            return base
+        if mode == "dv":
+            try:
+                return _delete_where_dv(
+                    spark, table, base, touched, schema, dvs, mapping,
+                    cond, meta, max_dv_rows, cdf=cdf,
+                    rebase_bands=bands,
+                )
+            except CommitConflict:
+                if attempt == max(1, max_retries) - 1:
+                    raise
+                continue
+        change_rels = None
+        if cdf:
+            change_rels = _write_change_files(
+                table,
+                _scan(spark, table, touched, schema, dvs, mapping)
+                .where(cond)
+                .withColumn("_change_type", F.lit("delete")),
+                mapping,
+            )
+        # survivors = NOT coalesce(pred, false): FALSE and NULL rows
+        # stay — a bare ~pred is NULL for NULL-predicate rows (a NULL
+        # column under a band) and the WHERE would silently drop them
+        # (ADVICE r8, high). The read goes through _scan so rows
+        # already deleted by a vector stay deleted in the rewrite.
+        survivors = _scan(
+            spark, table, touched, schema, dvs, mapping
+        ).where(~F.coalesce(cond, F.lit(False)))
+        try:
+            return commit(
+                survivors,
+                table,
+                action="replace",
+                remove=[os.path.relpath(f, table) for f in touched],
+                meta={"delete": meta},
+                expected_version=base,
+                stats_cols=stats_cols,
+                change_files=change_rels,
+                rebase_bands=bands,
+            )
+        except CommitConflict:
+            if attempt == max(1, max_retries) - 1:
+                raise
+            continue
+    raise AssertionError("unreachable")
+
+
 def delete_where_expr(
     spark: SparkSession,
     table: str,
@@ -4486,66 +4420,10 @@ def delete_where_expr(
     merge-on-read deletion vectors (same guard rails as
     :func:`delete_where`). Returns the new version, or the current
     one when no file can match / nothing is newly deleted."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
-        base = current_version(table)
-        if base < 0:
-            raise FileNotFoundError(f"{table} has no transaction log")
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        bands, points, cond, meta = _resolve_where(spark, schema, where)
-        touched = _band_touched(
-            table, files, stats, mapping, bands,
-            types=_dtype_map(schema), points=points,
-        )
-        if not touched:
-            return base
-        if mode == "dv":
-            try:
-                return _delete_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    cond, meta, max_dv_rows, cdf=cdf,
-                    rebase_bands=bands,
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue
-        change_rels = None
-        if cdf:
-            change_rels = _write_change_files(
-                table,
-                _scan(spark, table, touched, schema, dvs, mapping)
-                .where(cond)
-                .withColumn("_change_type", F.lit("delete")),
-                mapping,
-            )
-        # survivors = NOT coalesce(pred, false): FALSE and NULL rows
-        # stay — a bare ~pred would be NULL for NULL-predicate rows
-        # and the WHERE would silently drop them (the delete_where
-        # NULL lesson, generalized to arbitrary predicates)
-        survivors = _scan(
-            spark, table, touched, schema, dvs, mapping
-        ).where(~F.coalesce(cond, F.lit(False)))
-        try:
-            return commit(
-                survivors,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={"delete": meta},
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands=bands,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+    return _delete_rows(
+        spark, table, lambda schema: _resolve_where(spark, schema, where),
+        max_retries, stats_cols, mode, max_dv_rows, cdf,
+    )
 
 
 def _apply_set_preimage(df: DataFrame, cond, set_exprs: dict) -> DataFrame:
@@ -4676,29 +4554,23 @@ def _update_where_dv(
     )
 
 
-def update_where_expr(
+def _update_rows(
     spark: SparkSession,
     table: str,
-    where,
     set_exprs: dict,
-    max_retries: int = 3,
-    stats_cols: Sequence[str] | None = None,
-    mode: str = "cow",
-    max_dv_rows: int = 1_000_000,
-    cdf: bool = False,
+    resolve,
+    max_retries: int,
+    stats_cols: Sequence[str] | None,
+    mode: str,
+    max_dv_rows: int,
+    cdf: bool,
 ) -> int:
-    """Row-level UPDATE under an EXPRESSION predicate (the
-    :func:`delete_where_expr` of the UPDATE verb): ``where`` is a SQL
-    predicate string or a ``{col: (lo, hi)}`` band dict; rows where
-    it is TRUE get each ``set_exprs`` column replaced (name → Column
-    or SQL string); FALSE and NULL rows keep their values. Pruning
-    and conservative fallbacks exactly as :func:`_resolve_where`.
-
-    ``mode="cow"`` rewrites touched files (non-matching rows copied
-    byte-equal); ``mode="dv"`` is merge-on-read — one commit with a
-    deletion vector over the old positions plus an append of the
-    updated rows (see :func:`_update_where_dv`). Returns the new
-    version, or the current one when nothing can match."""
+    """THE UPDATE loop behind :func:`update_where` and
+    :func:`update_where_expr`, shaped like :func:`_delete_rows`: each
+    attempt snapshots the head, checks the SET targets, resolves
+    ``(bands, points, row condition, commit meta)``, prunes, and
+    lands a merge-on-read (:func:`_update_where_dv`) or copy-on-write
+    commit; the whole attempt retries on :class:`CommitConflict`."""
     from pyspark.sql import functions as F
 
     if mode not in ("cow", "dv"):
@@ -4708,13 +4580,13 @@ def update_where_expr(
         if base < 0:
             raise FileNotFoundError(f"{table} has no transaction log")
         files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        cols = set(_struct_of(spark, schema).names)
+        cols = {n for n, _ in _split_ddl(schema)}
         unknown = sorted(set(set_exprs) - cols)
         if unknown:
             raise ValueError(
                 f"SET targets columns not in the table: {unknown}"
             )
-        bands, points, cond, meta = _resolve_where(spark, schema, where)
+        bands, points, cond, meta = resolve(schema)
         touched = _band_touched(
             table, files, stats, mapping, bands,
             types=_dtype_map(schema), points=points,
@@ -4774,6 +4646,36 @@ def update_where_expr(
     raise AssertionError("unreachable")
 
 
+def update_where_expr(
+    spark: SparkSession,
+    table: str,
+    where,
+    set_exprs: dict,
+    max_retries: int = 3,
+    stats_cols: Sequence[str] | None = None,
+    mode: str = "cow",
+    max_dv_rows: int = 1_000_000,
+    cdf: bool = False,
+) -> int:
+    """Row-level UPDATE under an EXPRESSION predicate (the
+    :func:`delete_where_expr` of the UPDATE verb): ``where`` is a SQL
+    predicate string or a ``{col: (lo, hi)}`` band dict; rows where
+    it is TRUE get each ``set_exprs`` column replaced (name → Column
+    or SQL string); FALSE and NULL rows keep their values. Pruning
+    and conservative fallbacks exactly as :func:`_resolve_where`.
+
+    ``mode="cow"`` rewrites touched files (non-matching rows copied
+    byte-equal); ``mode="dv"`` is merge-on-read — one commit with a
+    deletion vector over the old positions plus an append of the
+    updated rows (see :func:`_update_where_dv`). Returns the new
+    version, or the current one when nothing can match."""
+    return _update_rows(
+        spark, table, set_exprs,
+        lambda schema: _resolve_where(spark, schema, where),
+        max_retries, stats_cols, mode, max_dv_rows, cdf,
+    )
+
+
 def update_where(
     spark: SparkSession,
     table: str,
@@ -4810,100 +4712,10 @@ def update_where(
     positions plus an append of the updated rows, zero file rewrites
     (see :func:`_update_where_dv`; ``max_dv_rows`` is the same
     metadata-honesty guard as :func:`delete_where`'s)."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
-        base = current_version(table)
-        if base < 0:
-            raise FileNotFoundError(f"{table} has no transaction log")
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        cols = set(_struct_of(spark, schema).names)
-        unknown = sorted(set(set_exprs) - cols)
-        if unknown:
-            raise ValueError(
-                f"SET targets columns not in the table: {unknown}"
-            )
-        # the shared DML prune: zone maps + hidden-partition path
-        # probes + point-band bloom sidecars (one [lo, hi] band)
-        touched = _band_touched(
-            table, files, stats, mapping, {col: (lo, hi)},
-            types=_dtype_map(schema),
-        )
-        if not touched:
-            return base
-        if mode == "dv":
-            try:
-                return _update_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    F.col(col).between(lo, hi), set_exprs,
-                    {
-                        "col": col,
-                        "lo": _json_safe(lo),
-                        "hi": _json_safe(hi),
-                        "set": sorted(set_exprs),
-                    },
-                    max_dv_rows, stats_cols, cdf=cdf,
-                    rebase_bands={col: (lo, hi)},
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue  # table advanced: re-prune and re-resolve
-        change_rels = None
-        if cdf:
-            pre = _scan(
-                spark, table, touched, schema, dvs, mapping
-            ).where(F.col(col).between(lo, hi))
-            post = _apply_set_preimage(pre, None, set_exprs)
-            change_rels = _write_change_files(
-                table,
-                pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                mapping,
-            )
-        # between() is NULL for NULL rows; when() treats NULL as
-        # false, so NULL rows take the otherwise() branch and keep
-        # their old value. Pre-image projection: every SET expression
-        # reads the ORIGINAL columns (one select), so dependent SETs
-        # swap and a predicate on a SET column matches consistently.
-        # through the deletion vectors: an UPDATE rewrite must not
-        # resurrect rows a DV already deleted from a touched file
-        df = _apply_set_preimage(
-            _scan(spark, table, touched, schema, dvs, mapping),
-            F.col(col).between(lo, hi),
-            set_exprs,
-        )
-        try:
-            return commit(
-                df,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={
-                    "update": {
-                        "col": col,
-                        "lo": _json_safe(lo),
-                        "hi": _json_safe(hi),
-                        "set": sorted(set_exprs),
-                    }
-                },
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands={col: (lo, hi)},
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+    return _update_rows(
+        spark, table, set_exprs, _band_where(col, lo, hi),
+        max_retries, stats_cols, mode, max_dv_rows, cdf,
+    )
 
 
 def _merge_change_frame(
@@ -6342,34 +6154,6 @@ def clone(
     return 0
 
 
-def _split_ddl(ddl: str) -> list[list[str]]:
-    """ORDERED, case-preserving (name, type) pairs from a
-    simpleString DDL — the mutation-friendly sibling of
-    :func:`_normalize_ddl` (which sorts and lowercases for
-    comparison). Depth-aware on both bracket families, same as the
-    normalizer."""
-    parts: list[str] = []
-    depth, cur = 0, []
-    for ch in ddl:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    out = []
-    for field in parts:
-        name, _, typ = field.partition(" ")
-        out.append([name, typ.strip()])
-    return out
-
-
 def rename_column(
     table: str, old: str, new: str, max_retries: int = 3
 ) -> int:
@@ -6518,12 +6302,12 @@ def drop_column(table: str, name: str, max_retries: int = 3) -> int:
 
 
 # --- bench phase clock ------------------------------------------------------
-# ~20 bench lines build + mutate + read a txtable as ONE number, so a
-# drift in commit-time filesystem variance reads as a query regression
-# (the r13 events_cdf_feed lesson — VERDICT r14 'Next round' #7). The
-# clock accumulates wall time spent inside txlog MUTATION verbs so
-# bench.py can attribute each line's median to {build, read} in
-# bench_full.json. Outermost-verb-only (a merge that commits
+# A benchmark op that builds + mutates + reads a txtable is ONE
+# number, so a drift in commit-time filesystem variance reads as a
+# query regression (the r13 events_cdf_feed lesson). The clock
+# accumulates wall time spent inside txlog MUTATION verbs so a
+# benchmark can split an op's time into {build, read} (perfbench's
+# ``txlog.build_s``). Outermost-verb-only (a merge that commits
 # internally counts once) and thread-safe (streaming sinks commit from
 # the stream-execution thread).
 

@@ -747,6 +747,48 @@ def test_ngram_pair_cache_bounded_lru_eviction(spark, tmp_path):
     assert len(fmod._NGRAM_PAIR_CACHE) == 0
 
 
+def test_ngram_pair_cache_sees_rewritten_documents(spark, tmp_path):
+    """The pair cache is keyed on the documents' file listing, so a
+    ``documents.parquet`` rewritten within one session yields the new
+    corpus's pairs, not the cached ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_combiner_spark import functions as fmod
+
+    words = [f"w{i}" for i in range(200)]
+    docs = pa.table({
+        "doc_id": pa.array(range(8), pa.int64()),
+        "text": [" ".join(words[d * 25:(d + 1) * 25]) for d in range(8)],
+    })
+    path = tmp_path / "documents.parquet"
+    pq.write_table(docs, path)
+
+    def pairs():
+        return sorted(
+            (r["doc_id_a"], r["doc_id_b"])
+            for r in fmod.q_ngram_jaccard_pairs(spark, str(tmp_path))
+            .collect()
+        )
+
+    fmod.clear_ngram_pair_cache()
+    before = pairs()
+    # rewrite: one extra exact copy of doc 0 forms a new pair
+    copy = docs.slice(0, 1).set_column(
+        0, "doc_id", pa.array([10**6], pa.int64())
+    )
+    pq.write_table(pa.concat_tables([docs, copy]), path)
+    after = pairs()
+    assert (0, 10**6) in after and (0, 10**6) not in before
+    assert after == sorted(
+        (r["doc_id_a"], r["doc_id_b"])
+        for r in dedup_text.ngram_jaccard_pairs(
+            spark.read.parquet(str(path)), threshold=0.3
+        ).collect()
+    )
+    fmod.clear_ngram_pair_cache()
+
+
 def test_resize_images_deterministic_payload_contract(spark):
     """Resize plumbing: binary in -> binary out at the raster budget,
     payload exactly the deterministic fake (hexdigest repeated)."""

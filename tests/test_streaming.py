@@ -1434,18 +1434,23 @@ def test_txtable_native_stream_writer_exactly_once(spark, tmp_path):
 
 def test_normalize_ddl_nested_types():
     """The session-less DDL normalizer splits only TOP-LEVEL commas
-    (struct/array/map types carry commas inside <>), compares
-    case-insensitively, and ignores field order."""
+    (struct/array/map types carry commas inside <>), folds the case
+    of top-level names and type keywords, keeps nested field names as
+    written, and ignores field order."""
     from parquet_combiner_spark.tools.txlog import _normalize_ddl
 
     a = _normalize_ddl(
         "id bigint, s struct<a:int,b:array<string>>, m map<string,int>"
     )
     b = _normalize_ddl(
-        "M MAP<STRING,INT>, ID BIGINT, S STRUCT<A:INT,B:ARRAY<STRING>>"
+        "M MAP<STRING,INT>, ID BIGINT, S STRUCT<a:INT,b:ARRAY<STRING>>"
     )
     assert a == b
     assert len(a) == 3
+    # a case-only NESTED rename is a different schema
+    assert a != _normalize_ddl(
+        "id bigint, s struct<A:int,b:array<string>>, m map<string,int>"
+    )
     assert _normalize_ddl("id bigint") != _normalize_ddl("id int")
     # decimal's () nests a comma too: swapped scales must NOT compare
     # equal (a <>-only splitter scrambles them into the same multiset)

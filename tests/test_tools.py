@@ -3399,62 +3399,62 @@ def test_normalize_ddl_matches_empty_frame_roundtrip(spark):
 
 
 def test_schema_gate_nested_case_roundtrip(spark):
-    """ADVICE r15 high: ``_normalize_ddl`` lowercases the whole type
-    string while ``simpleString`` preserves NESTED field-name case, so
-    the two are NOT equivalent on ``struct<A:int>`` — the commit-path
-    gates must therefore compare ``_normalize_ddl_rt`` (memoized
-    round trip) against ``_normalize_schema``, never ``_normalize_ddl``
-    against ``_normalize_schema``. Pins (a) the divergence that made
-    the r15 gate wrong, (b) the rt gate accepting an identical nested
-    uppercase schema, (c) the rt gate REJECTING a case-only
-    nested-name change (the Arrow-side reader matches nested names
-    case-sensitively)."""
+    """ADVICE r15 high: ``simpleString`` preserves NESTED field-name
+    case and the Arrow-side txtable reader matches nested names
+    case-sensitively, so the one schema comparison
+    (``_normalize_ddl``, used by every gate) folds only top-level
+    names and type keywords. Pins (a) top-level/keyword case folding
+    against the frame, (b) an identical nested uppercase schema
+    comparing equal, (c) a case-only nested-name change comparing
+    UNEQUAL."""
     from parquet_combiner_spark.tools.txlog import (
         _normalize_ddl,
-        _normalize_ddl_rt,
         _normalize_schema,
     )
 
     upper = "s struct<A:int,B:string>, id bigint"
     lower = "s struct<a:int,b:string>, id bigint"
     df_upper = spark.createDataFrame([], upper)
-    # (a) the bug: all-lowering normalize disagrees with the frame
-    assert _normalize_ddl(upper) != _normalize_schema(df_upper)
-    # (b) the fixed gate: round trip matches the identical frame
-    assert _normalize_ddl_rt(spark, upper) == _normalize_schema(df_upper)
-    # (c) case-only nested drift stays REJECTED, as pre-r15
-    assert _normalize_ddl_rt(spark, upper) != _normalize_schema(
+    # (a) top-level names and type keywords fold
+    assert _normalize_ddl("S STRUCT<A:INT,B:STRING>, ID BIGINT") == (
+        _normalize_schema(df_upper)
+    )
+    # (b) the identical frame matches
+    assert _normalize_ddl(upper) == _normalize_schema(df_upper)
+    # (c) case-only nested drift stays REJECTED
+    assert _normalize_ddl(upper) != _normalize_schema(
         spark.createDataFrame([], lower)
+    )
+    assert _normalize_ddl(upper) != _normalize_ddl(lower)
+
+
+def test_session_less_gates_reject_nested_case_rename(spark, tmp_path):
+    """The staged-append publish gate and the metadata-only-republish
+    classifier compare schemas without a session; a case-only nested
+    rename must fail both, exactly like the commit gates."""
+    from parquet_combiner_spark.tools import txlog
+
+    t = str(tmp_path / "t")
+    txlog.commit(spark.createDataFrame([((1,),)], "s struct<a:int>"), t)
+    with pytest.raises(TypeError, match="staged schema"):
+        txlog.publish_files(t, [], "s struct<A:int>", meta={})
+    rec = txlog._last_commit(t)
+    alter = {**rec, "version": 1, "action": "overwrite"}
+    assert txlog._is_metadata_only_republish(t, alter)
+    assert not txlog._is_metadata_only_republish(
+        t, {**alter, "schema": "s struct<A:int>"}
     )
 
 
-def test_struct_of_returns_defensive_copy(spark):
-    """Mutating the StructType returned by the memoized ``_struct_of``
-    must not poison the cache for later callers (ADVICE r15 low)."""
-    from pyspark.sql.types import StructField, StructType
-    from pyspark.sql.types import IntegerType
-
-    from parquet_combiner_spark.tools import txlog
-
-    ddl = "id bigint, v double"
-    s1 = txlog._struct_of(spark, ddl)
-    s1.add(StructField("injected", IntegerType()))
-    s2 = txlog._struct_of(spark, ddl)
-    assert s2.names == ["id", "v"]
-    assert isinstance(s2, StructType)
-
-
-def test_struct_of_and_conjunct_caches_are_value_safe(spark):
-    """The r15 memo caches must behave like pure functions: repeated
-    calls return equal values, and mutating a returned constraints
-    dict must not poison later calls (copies out, never references)."""
+def test_conjunct_cache_is_value_safe_and_lru(spark, monkeypatch):
+    """The conjunct memo cache must behave like a pure function:
+    repeated calls return equal values, mutating a returned
+    constraints dict must not poison later calls (copies out, never
+    references), and a hit refreshes the entry so eviction drops the
+    least recently used key."""
     from parquet_combiner_spark.tools import txlog
 
     ddl = "id bigint, v double, s string"
-    s1 = txlog._struct_of(spark, ddl)
-    s2 = txlog._struct_of(spark, ddl)
-    assert s1 == s2 and s1.names == ["id", "v", "s"]
-
     pred = "id IN (1, 2, 3) AND v >= 0.5 AND s = 'x'"
     bands1, points1 = txlog._sql_conjunct_constraints(spark, ddl, pred)
     # caller mutation of the returned values...
@@ -3466,3 +3466,14 @@ def test_struct_of_and_conjunct_caches_are_value_safe(spark):
     assert points2["id"] == [1, 2, 3]
     assert bands2["v"] == (0.5, float("inf"))
     assert points2["s"] == ["x"]
+
+    # a hit refreshes recency: fill to the cap, hit the oldest key,
+    # insert one more — the hit key survives, the next-oldest goes
+    cache: dict = {}
+    monkeypatch.setattr(txlog, "_CONJUNCT_CACHE", cache)
+    for i in range(txlog._CONJUNCT_CACHE_MAX):
+        cache[(f"k{i}", "p")] = ({}, {})
+    assert txlog._sql_conjunct_constraints(spark, "k0", "p") == ({}, {})
+    txlog._sql_conjunct_constraints(spark, ddl, "id = 1")
+    assert len(cache) == txlog._CONJUNCT_CACHE_MAX
+    assert ("k0", "p") in cache and ("k1", "p") not in cache

@@ -130,3 +130,38 @@ def test_read_table_where_never_drops_matching_rows(
         txlog.read_table(spark, table).where(pred).collect()
     )
     assert got == want, (table, pred)
+
+
+@pytest.mark.parametrize("which", [0, 1])
+@pytest.mark.parametrize(
+    "shape, sql",
+    [
+        (("band", "ik", 40, 90), "ik BETWEEN 40 AND 90"),
+        (
+            ("multi", {"ik": (20, 150), "sk": ("010", "030")}),
+            "ik BETWEEN 20 AND 150 AND sk BETWEEN '010' AND '030'",
+        ),
+        (("in", "ik", [5, 42, None, 77]), "ik IN (5, 42, 77)"),
+    ],
+)
+def test_narrow_readers_agree_with_read_table_where(
+    spark, tables, which, shape, sql
+):
+    """Every narrow reader is one pruned read: it returns the rows of
+    a full-scan ``.where`` and scans exactly the files
+    ``read_table_where`` scans for the equivalent SQL."""
+    table = tables[which]
+    kind, *args = shape
+    reader = {
+        "band": txlog.read_table_pruned,
+        "multi": txlog.read_table_pruned_multi,
+        "in": txlog.read_table_pruned_in,
+    }[kind]
+    got = reader(spark, table, *args)
+    want = txlog.read_table(spark, table).where(sql)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+    assert sorted(got.inputFiles()) == sorted(
+        txlog.read_table_where(spark, table, sql).inputFiles()
+    )
