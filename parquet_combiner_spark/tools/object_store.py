@@ -29,8 +29,8 @@ against object-store rules without a cloud dependency:
 The arbiter interface is the ONLY txlog seam that touches
 atomicity — data files are written before ``publish`` and losers
 leave unreferenced garbage for ``vacuum`` — so swapping these in
-(via ``txlog.set_arbiter`` or per-call ``commit(arbiter=...)``)
-ports the whole table layer to object stores unchanged."""
+(via ``txlog.set_arbiter``, the one injection point) ports the whole
+table layer to object stores unchanged."""
 
 from __future__ import annotations
 

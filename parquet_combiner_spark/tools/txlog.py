@@ -19,8 +19,10 @@ vacuumed.
 
 Concurrency: a commit is PUBLISHED through a pluggable
 :class:`CommitArbiter` whose one obligation is "exactly one winner
-per version" — the default :class:`FilesystemArbiter` uses
-O_CREAT|O_EXCL (the filesystem arbitrates); the loser raises
+per version" — the default :class:`FilesystemArbiter` writes the
+record to a temporary file and hard-links it into place (the
+filesystem arbitrates, and a record is never visible half-written);
+the loser raises
 ``CommitConflict`` (retry = re-read the log, re-validate, re-attempt,
 the standard optimistic loop). Data files are written BEFORE the
 commit attempt into a commit-unique directory, so a losing or crashed
@@ -83,9 +85,9 @@ class CommitArbiter:
 
     Implementations:
 
-    * :class:`FilesystemArbiter` (default) — POSIX ``O_CREAT|O_EXCL``;
-      correct on any filesystem with atomic exclusive create (local,
-      NFSv4, HDFS-mounted).
+    * :class:`FilesystemArbiter` (default) — temp file + POSIX
+      ``link`` (fails on an existing name); correct on any filesystem
+      with atomic hard links (local, NFSv4).
     * Object stores (S3-class) lack atomic create-exclusive: implement
       this interface with a conditional put (`If-None-Match: *` on S3
       since 2024, generation-match preconditions on GCS/Azure) or an
@@ -94,8 +96,8 @@ class CommitArbiter:
       already written before ``publish`` and losers leave only
       unreferenced garbage for :func:`vacuum`.
 
-    Inject per-call (``commit(..., arbiter=...)``) or process-wide
-    (:func:`set_arbiter`).
+    Inject process-wide with :func:`set_arbiter` — the one injection
+    point; every publishing verb goes through :func:`_publish`.
     """
 
     def publish(self, path: str, payload: str) -> None:
@@ -103,18 +105,31 @@ class CommitArbiter:
 
 
 class FilesystemArbiter(CommitArbiter):
-    """O_CREAT|O_EXCL exclusive create — the filesystem arbitrates
-    exactly one winner per version."""
+    """Atomic put-if-absent of a COMPLETE record — the filesystem
+    arbitrates exactly one winner per version. The payload is written
+    to a temporary file in ``_txlog/`` whose name no reader lists (not
+    ``<digits>.json``), then hard-linked to the final name: ``link``
+    fails with ``EEXIST`` when the version exists, and the record
+    appears whole or not at all, so a write that fails or is
+    interrupted leaves no torn record behind."""
 
     def publish(self, path: str, payload: str) -> None:
+        d, name = os.path.split(path)
+        tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError as e:
-            raise CommitConflict(
-                f"commit record {path} was published concurrently"
-            ) from e
-        with os.fdopen(fd, "w") as f:
-            f.write(payload)
+            with open(tmp, "w") as f:
+                f.write(payload)
+            try:
+                os.link(tmp, path)
+            except FileExistsError as e:
+                raise CommitConflict(
+                    f"commit record {path} was published concurrently"
+                ) from e
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
 
 
 _DEFAULT_ARBITER: CommitArbiter = FilesystemArbiter()
@@ -155,6 +170,98 @@ def _maybe_auto_checkpoint(table: str, version: int, every: int) -> None:
             checkpoint(table, version)
         except OSError:
             pass
+
+
+# the TABLE PROPERTIES every commit record carries forward (each is
+# written only when non-empty, so a record without one means "unset")
+_TABLE_PROPS = (
+    "constraints",
+    "partition_by",
+    "column_mapping",
+    "bloom_cols",
+    "stats_cols",
+    "checkpoint_interval",
+)
+# the write-side subset RESTORE keeps from the head instead of
+# rewinding to the target (zone-map columns, bloom index, cadence)
+_WRITE_SIDE_PROPS = ("bloom_cols", "stats_cols", "checkpoint_interval")
+
+
+def _carry_props(
+    record: dict, source: dict | None, props: Sequence[str] = _TABLE_PROPS
+) -> None:
+    """Set each of ``props`` on ``record`` to ``source``'s value, or
+    drop it where ``source`` leaves it empty — so an empty override
+    clears a property."""
+    for p in props:
+        if source and source.get(p):
+            record[p] = source[p]
+        else:
+            record.pop(p, None)
+
+
+def _retry(max_retries: int, attempt):
+    """THE optimistic loop: run ``attempt()`` (re-read the log,
+    re-validate, re-stage, publish) and re-run it on
+    :class:`CommitConflict`, ``max(1, max_retries)`` attempts in all;
+    the last attempt's conflict propagates to the caller."""
+    for _ in range(max(1, max_retries) - 1):
+        try:
+            return attempt()
+        except CommitConflict:
+            pass
+    return attempt()
+
+
+def _publish(
+    table: str,
+    record: dict,
+    rebase_bands: dict | str | None = None,
+    staged_touched=(),
+) -> int:
+    """THE one way a new commit record becomes a version: publish
+    ``record`` at ``record["version"]`` through the process-wide
+    arbiter, then run the auto-checkpoint cadence from the record's
+    ``checkpoint_interval``. Returns the published version.
+
+    A lost race raises :class:`CommitConflict` — unless
+    ``rebase_bands`` is given (see :func:`commit`) and
+    :func:`_appends_disjoint` proves every commit that got in first
+    benign against the staged write set ``staged_touched``: then the
+    SAME staged record (data files already written, zero extra Spark
+    jobs) is re-pointed (``version``/``ts``) at the advanced head.
+    Bounded: an append storm eventually surfaces the conflict to the
+    caller's retry loop."""
+    os.makedirs(os.path.join(table, _LOG_DIR), exist_ok=True)
+    for _ in range(20):
+        version = record["version"]
+        try:
+            _DEFAULT_ARBITER.publish(
+                _log_path(table, version), json.dumps(record)
+            )
+        except CommitConflict as e:
+            if rebase_bands is None:
+                raise
+            new_last = _last_commit(table)
+            new_head = new_last["version"] if new_last else -1
+            if new_head < version or not _appends_disjoint(
+                table, version - 1, new_head, rebase_bands, staged_touched
+            ):
+                raise CommitConflict(
+                    f"version {version} of {table} was committed "
+                    "concurrently"
+                ) from e
+            record["version"] = new_head + 1
+            record["ts"] = _next_commit_ts(table, new_last)
+            continue
+        _maybe_auto_checkpoint(
+            table, version, int(record.get("checkpoint_interval", 0))
+        )
+        return version
+    raise CommitConflict(
+        f"{table}: gave up rebasing past concurrent appends after 20 "
+        "attempts"
+    )
 
 
 def _log_versions(table: str) -> list[int]:
@@ -509,6 +616,36 @@ def _fill_sizes(table: str, rels: Sequence[str], sizes: dict) -> dict:
         else os.path.getsize(os.path.join(table, r))
         for r in rels
     }
+
+
+def _reref(table: str, snap: tuple, root: str | None = None) -> dict:
+    """The part of a commit record that RE-REFERENCES a
+    :func:`_snapshot`'s files exactly as they are — ``add``, byte
+    ``sizes``, zone-map ``stats``, deletion vectors ``dv`` and the
+    ``column_mapping`` naming their physical columns — the shape of
+    the metadata-only verbs (expiry rebase, RESTORE, ALTER, CLONE).
+    Paths are keyed relative to ``root`` (default the table itself;
+    a clone passes its own root, so ``../source/...`` resolves)."""
+    files, _, stats, sizes, dvs, mapping = snap
+    root = root or table
+    old = [os.path.relpath(f, table) for f in files]
+    new = [os.path.relpath(f, root) for f in files]
+    sizes = _fill_sizes(table, old, sizes)
+    part: dict = {
+        "add": new,
+        "sizes": {n: sizes[o] for o, n in zip(old, new)},
+    }
+    kept_stats = {n: stats[o] for o, n in zip(old, new) if stats.get(o)}
+    if kept_stats:
+        part["stats"] = kept_stats
+    kept_dvs = {n: dvs[o] for o, n in zip(old, new) if dvs.get(o)}
+    if kept_dvs:
+        # re-referenced files keep their vectors: losing them would
+        # resurrect merge-on-read deletes
+        part["dv"] = _encode_dv_entries(root, kept_dvs)
+    if mapping:
+        part["column_mapping"] = mapping
+    return part
 
 
 def _physical_reader(
@@ -1163,7 +1300,6 @@ def commit(
     meta: dict | None = None,
     merge_schema: bool = False,
     expected_version: int | None = None,
-    arbiter: CommitArbiter | None = None,
     stats_cols: Sequence[str] | None = None,
     remove: Sequence[str] | None = None,
     partition_by: Sequence[str] | None = None,
@@ -1218,7 +1354,7 @@ def commit(
     ``expected_version`` pins the commit's BASE: pass the version the
     caller's reads were taken against, and the commit targets exactly
     ``expected_version + 1`` — if another writer got there first, the
-    O_EXCL create loses and :class:`CommitConflict` surfaces the
+    publish loses and :class:`CommitConflict` surfaces the
     stale read instead of silently rebasing past it. Read-check-write
     patterns (e.g. dedup against a snapshot) NEED this; without it,
     commit() auto-rebases to the next free version and a concurrent
@@ -1628,7 +1764,6 @@ def commit(
                 ),
             )
 
-    os.makedirs(os.path.join(table, _LOG_DIR), exist_ok=True)
     commit_ts = _next_commit_ts(table, last)
     record = {
         "version": version,
@@ -1688,41 +1823,7 @@ def commit(
         record["stats_cols"] = stats_prop
     if ckpt_iv:
         record["checkpoint_interval"] = ckpt_iv
-    # publish, rebasing past benign (pure-append, band-disjoint)
-    # losses when the caller allows it: each rebase re-points the SAME
-    # staged record — data files already written, zero extra Spark
-    # jobs — at the advanced head. Bounded: a pathological append
-    # storm eventually surfaces the conflict to the caller's retry.
-    for _ in range(20):
-        path = _log_path(table, version)
-        try:
-            (arbiter or _DEFAULT_ARBITER).publish(
-                path, json.dumps(record)
-            )
-            _maybe_auto_checkpoint(table, version, ckpt_iv)
-            return version
-        except CommitConflict as e:
-            new_last = _last_commit(table)
-            new_head = new_last["version"] if new_last else -1
-            if (
-                rebase_bands is None
-                or new_head < version
-                or not _appends_disjoint(
-                    table, version - 1, new_head, rebase_bands,
-                    staged_touched,
-                )
-            ):
-                raise CommitConflict(
-                    f"version {version} of {table} was committed "
-                    "concurrently"
-                ) from e
-            version = new_head + 1
-            record["version"] = version
-            record["ts"] = _next_commit_ts(table, new_last)
-    raise CommitConflict(
-        f"{table}: gave up rebasing past concurrent appends after 20 "
-        "attempts"
-    )
+    return _publish(table, record, rebase_bands, staged_touched)
 
 
 def publish_files(
@@ -1790,7 +1891,9 @@ def publish_files(
     # key (by the caller's cache up to seen_through, then by our own
     # scans) — each attempt re-scans only the records beyond it
     scanned_through = seen_through if seen_through is not None else -1
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
+        nonlocal scanned_through
         last = _last_commit(table)
         version = (last["version"] + 1) if last else 0
         if epoch_key is not None:
@@ -1820,17 +1923,6 @@ def publish_files(
                 raise TypeError(
                     f"staged schema {have} != table schema {want}"
                 )
-        commit_ts = _next_commit_ts(table, last)
-        record = {
-            "version": version,
-            "action": "append",
-            "add": sorted(rels),
-            "schema": last["schema"] if last else schema_ddl,
-            "commit_id": uuid.uuid4().hex,
-            "ts": commit_ts,
-            "meta": meta or {},
-            "sizes": sizes,
-        }
         if last and last.get("column_mapping"):
             # staged files are written by session-less tasks that
             # know only the logical schema; under a live rename map
@@ -1871,19 +1963,26 @@ def publish_files(
                     f"{table} is partitioned by {spec}; staged files "
                     f"{flat} lack the col=value path segments"
                 )
+        record = {
+            "version": version,
+            "action": "append",
+            "add": sorted(rels),
+            "schema": last["schema"] if last else schema_ddl,
+            "commit_id": uuid.uuid4().hex,
+            "ts": _next_commit_ts(table, last),
+            "meta": meta or {},
+            "sizes": sizes,
+        }
+        # the table properties ride through; the bloom index covers
+        # only FUTURE commit()-written files' in-file pages (staged
+        # files predate the option threading — the same
+        # files-written-before-the-property story as Delta's bloom
+        # index), while the listing-level sidecars below cover these
+        _carry_props(record, last)
+        if spec:
             record["partition_by"] = spec
-        if last and last.get("constraints"):
-            record["constraints"] = last["constraints"]
-        if last and last.get("bloom_cols"):
-            # table property rides through (the native sink's staged
-            # files predate the option threading — only FUTURE
-            # commit()-written files embed the bloom pages, which is
-            # the same files-written-before-the-property story as
-            # Delta's bloom index)
-            record["bloom_cols"] = last["bloom_cols"]
-        if last and last.get("checkpoint_interval"):
-            record["checkpoint_interval"] = last["checkpoint_interval"]
-        if last and last.get("stats_cols"):
+        stats_cols = record.get("stats_cols")
+        if stats_cols:
             # the zone-map property, honored HERE too: footer-derived
             # stats on every staged file (session-less by design), so
             # streamed appends are visible to pruned reads and DML
@@ -1892,24 +1991,21 @@ def publish_files(
             # of refusing (VERDICT r12 #1 — stat-less native-sink
             # appends made the rebase inert for its motivating
             # workload)
-            record["stats_cols"] = list(last["stats_cols"])
             staged_stats = _collect_stats(
-                table, sorted(rels), last["stats_cols"], spec, {}
+                table, sorted(rels), stats_cols, spec, {}
             )
             if staged_stats:
                 record["stats"] = staged_stats
-        if last and last.get("bloom_cols"):
+        if record.get("bloom_cols"):
             # listing-level bloom sidecars for staged files too
-            # (session-less pyarrow pass, same as the stats above);
-            # the in-file parquet bloom PAGES remain commit()-only —
-            # staged files were written before the option threading
+            # (session-less pyarrow pass, same as the stats above)
             ident = {
                 _parse_partition_field(e)[2]
-                for e in (last.get("partition_by") or [])
+                for e in spec
                 if _parse_partition_field(e)[0] == "identity"
             }
             bloom_data_cols = [
-                c for c in sorted(last["bloom_cols"]) if c not in ident
+                c for c in sorted(record["bloom_cols"]) if c not in ident
             ]
             if bloom_data_cols:
                 record["stats"] = _merge_bloom_refs(
@@ -1918,20 +2014,9 @@ def publish_files(
                         table, sorted(rels), bloom_data_cols, {}
                     ),
                 )
-        os.makedirs(os.path.join(table, _LOG_DIR), exist_ok=True)
-        try:
-            _DEFAULT_ARBITER.publish(
-                _log_path(table, version), json.dumps(record)
-            )
-            _maybe_auto_checkpoint(
-                table, version, int(record.get("checkpoint_interval", 0))
-            )
-            return version
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _publish(table, record)
+
+    return _retry(max_retries, attempt)
 
 
 def _partition_values(rel: str) -> dict:
@@ -2960,10 +3045,9 @@ def _appends_disjoint(
       intervening commit — a ``merge_schema`` widening would make the
       staged replace/dv record (which carries the base schema
       verbatim) silently NARROW the table on rebase — and identical
-      TABLE PROPERTIES (constraints, partition spec, column mapping,
-      bloom_cols, stats_cols): the staged record carries the base's
-      verbatim, so rebasing past a property change would silently
-      revert it at the new head (ADVICE r12, low).
+      TABLE PROPERTIES (:data:`_TABLE_PROPS`): the staged record
+      carries the base's verbatim, so rebasing past a property change
+      would silently revert it at the new head (ADVICE r12, low).
     * a pure APPEND: its files' zone maps / path segments must be
       DISJOINT from at least one band each (:func:`_band_touched` —
       no appended row can satisfy the DML predicate, so the rebased
@@ -3016,18 +3100,10 @@ def _appends_disjoint(
         )
 
     for rec in recs[1:]:
-        if rec["schema"] != base["schema"]:
-            return False
-        for prop in (
-            "constraints",
-            "partition_by",
-            "column_mapping",
-            "bloom_cols",
-            "stats_cols",
-            "checkpoint_interval",
+        if rec["schema"] != base["schema"] or any(
+            rec.get(p) != base.get(p) for p in _TABLE_PROPS
         ):
-            if rec.get(prop) != base.get(prop):
-                return False
+            return False
         action = rec["action"]
         if action not in ("append", "dv", "replace"):
             return False  # overwrite/unknown: layout or schema reset
@@ -3675,12 +3751,12 @@ def optimize(
     it READ, so the commit pins that snapshot's version as its base
     (``expected_version``) — an append landing between the snapshot
     read and the publish (e.g. the streaming sink, which the docs
-    advertise as concurrent-safe) makes this commit lose the O_EXCL
+    advertise as concurrent-safe) makes this commit lose the publish
     race instead of silently excluding the new rows from the latest
     snapshot. On conflict the whole read-compact-commit is retried
     against the advanced table (up to ``max_retries``).
     """
-    for attempt in range(max(1, max_retries)):
+    def attempt() -> int | None:
         base = current_version(table)
         files, schema, snap_stats, snap_sizes, snap_dvs, snap_map = _snapshot(
             table, base if base >= 0 else None
@@ -3761,30 +3837,25 @@ def optimize(
             if where is not None:
                 inferred.update(bands)
             keep_stats = sorted(inferred) or None
-        try:
-            # a SCOPED rewrite is ROW-PRESERVING: it can rebase past
-            # ANY pure append (matching or not — the appended files
-            # just stay uncompacted this round); an unscoped
-            # overwrite replaces EVERYTHING and must re-read instead
-            return commit(
-                df,
-                table,
-                action=action,
-                meta=meta,
-                expected_version=base,
-                stats_cols=keep_stats,
-                partition_by=spec or None,
-                remove=remove,
-                data_change=False,
-                rebase_bands=(
-                    ROW_PRESERVING if where is not None else None
-                ),
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # re-read the advanced snapshot and re-compact
-    raise AssertionError("unreachable")
+        # a SCOPED rewrite is ROW-PRESERVING: it can rebase past ANY
+        # pure append (matching or not — the appended files just stay
+        # uncompacted this round); an unscoped overwrite replaces
+        # EVERYTHING and must re-read instead
+        return commit(
+            df,
+            table,
+            action=action,
+            meta=meta,
+            expected_version=base,
+            stats_cols=keep_stats,
+            partition_by=spec or None,
+            remove=remove,
+            data_change=False,
+            rebase_bands=ROW_PRESERVING if where is not None else None,
+        )
+
+    # a conflict re-reads the advanced snapshot and re-compacts
+    return _retry(max_retries, attempt)
 
 
 def compact_small_files(
@@ -3822,7 +3893,8 @@ def compact_small_files(
     if small_file_mb is None:
         small_file_mb = target_file_mb / 2
     threshold = small_file_mb * 1024 * 1024
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int | None:
         base = current_version(table)
         if base < 0:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -3852,26 +3924,23 @@ def compact_small_files(
             {c for r in rels for c in stats.get(r, {})}
         )
         df = _scan(spark, table, small, schema, dvs, mapping).coalesce(int(n_files))
-        try:
-            return commit(
-                df,
-                table,
-                action="replace",
-                remove=rels,
-                meta={"optimize": "bin-pack", "compacted": len(rels)},
-                expected_version=base,
-                stats_cols=keep_stats or None,
-                data_change=False,
-                # row-preserving: rebase past any pure append instead
-                # of re-packing — the streaming sink appending every
-                # few seconds must not starve its own compaction
-                rebase_bands=ROW_PRESERVING,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # re-read the advanced snapshot and re-pack
-    raise AssertionError("unreachable")
+        return commit(
+            df,
+            table,
+            action="replace",
+            remove=rels,
+            meta={"optimize": "bin-pack", "compacted": len(rels)},
+            expected_version=base,
+            stats_cols=keep_stats or None,
+            data_change=False,
+            # row-preserving: rebase past any pure append instead of
+            # re-packing — the streaming sink appending every few
+            # seconds must not starve its own compaction
+            rebase_bands=ROW_PRESERVING,
+        )
+
+    # a conflict re-reads the advanced snapshot and re-packs
+    return _retry(max_retries, attempt)
 
 
 def _raw_positions_df(
@@ -4020,57 +4089,12 @@ def _delete_where_dv(
     }
     if change_rels is not None:
         record["change_files"] = sorted(change_rels)
-    if last.get("constraints"):
-        record["constraints"] = last["constraints"]
-    if last.get("partition_by"):
-        record["partition_by"] = last["partition_by"]
-    if last.get("column_mapping"):
-        record["column_mapping"] = last["column_mapping"]
-    if last.get("bloom_cols"):
-        record["bloom_cols"] = last["bloom_cols"]
-    if last.get("stats_cols"):
-        record["stats_cols"] = last["stats_cols"]
-    if last.get("checkpoint_interval"):
-        record["checkpoint_interval"] = last["checkpoint_interval"]
+    _carry_props(record, last)
     # metadata-only publish with benign-conflict rebase: a concurrent
     # pure append disjoint from the delete's bands re-points this same
     # record (positions were computed on the base files, which appends
     # never touch) at the new head — zero extra Spark jobs
-    version = base + 1
-    for _ in range(20):
-        try:
-            _DEFAULT_ARBITER.publish(
-                _log_path(table, version), json.dumps(record)
-            )
-            _maybe_auto_checkpoint(
-                table, version, int(record.get("checkpoint_interval", 0))
-            )
-            return version
-        except CommitConflict as e:
-            new_last = _last_commit(table)
-            new_head = new_last["version"] if new_last else -1
-            if (
-                rebase_bands is None
-                or new_head < version
-                or not _appends_disjoint(
-                    table,
-                    version - 1,
-                    new_head,
-                    rebase_bands,
-                    frozenset(dv_entries),
-                )
-            ):
-                raise CommitConflict(
-                    f"version {version} of {table} was committed "
-                    "concurrently"
-                ) from e
-            version = new_head + 1
-            record["version"] = version
-            record["ts"] = _next_commit_ts(table, new_last)
-    raise CommitConflict(
-        f"{table}: gave up rebasing past concurrent appends after 20 "
-        "attempts"
-    )
+    return _publish(table, record, rebase_bands, frozenset(dv_entries))
 
 
 def delete_where(
@@ -4332,7 +4356,8 @@ def _delete_rows(
 
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         base = current_version(table)
         if base < 0:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -4345,16 +4370,10 @@ def _delete_rows(
         if not touched:
             return base
         if mode == "dv":
-            try:
-                return _delete_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    cond, meta, max_dv_rows, cdf=cdf,
-                    rebase_bands=bands,
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue
+            return _delete_where_dv(
+                spark, table, base, touched, schema, dvs, mapping,
+                cond, meta, max_dv_rows, cdf=cdf, rebase_bands=bands,
+            )
         change_rels = None
         if cdf:
             change_rels = _write_change_files(
@@ -4372,23 +4391,19 @@ def _delete_rows(
         survivors = _scan(
             spark, table, touched, schema, dvs, mapping
         ).where(~F.coalesce(cond, F.lit(False)))
-        try:
-            return commit(
-                survivors,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={"delete": meta},
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands=bands,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return commit(
+            survivors,
+            table,
+            action="replace",
+            remove=[os.path.relpath(f, table) for f in touched],
+            meta={"delete": meta},
+            expected_version=base,
+            stats_cols=stats_cols,
+            change_files=change_rels,
+            rebase_bands=bands,
+        )
+
+    return _retry(max_retries, attempt)
 
 
 def delete_where_expr(
@@ -4575,7 +4590,8 @@ def _update_rows(
 
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         base = current_version(table)
         if base < 0:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -4595,16 +4611,11 @@ def _update_rows(
             return base
         meta = {**meta, "set": sorted(set_exprs)}
         if mode == "dv":
-            try:
-                return _update_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    cond, set_exprs, meta, max_dv_rows, stats_cols,
-                    cdf=cdf, rebase_bands=bands,
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue
+            return _update_where_dv(
+                spark, table, base, touched, schema, dvs, mapping,
+                cond, set_exprs, meta, max_dv_rows, stats_cols,
+                cdf=cdf, rebase_bands=bands,
+            )
         change_rels = None
         if cdf:
             pre = _scan(
@@ -4627,23 +4638,19 @@ def _update_rows(
             cond,
             set_exprs,
         )
-        try:
-            return commit(
-                df,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={"update": meta},
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands=bands,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return commit(
+            df,
+            table,
+            action="replace",
+            remove=[os.path.relpath(f, table) for f in touched],
+            meta={"update": meta},
+            expected_version=base,
+            stats_cols=stats_cols,
+            change_files=change_rels,
+            rebase_bands=bands,
+        )
+
+    return _retry(max_retries, attempt)
 
 
 def update_where_expr(
@@ -4848,9 +4855,10 @@ def merge_into(
     ``bucket(N, prune_col)`` layout the batch's key set maps to its
     BUCKET SET per era — one Spark aggregate, JVM-identical to the
     writer's path arithmetic — so a narrow batch rewrites at most
-    |batch buckets| directories. A batch of ≤ 1024 distinct keys
-    additionally probes each file PER KEY through zone maps, path
-    segments, and listing-level bloom sidecars — so narrow CDC
+    |batch buckets| directories. A batch of ≤ 1024 rows additionally
+    probes each file PER KEY through zone maps, path segments, and
+    listing-level bloom sidecars (all through :func:`_band_touched`,
+    the one prune behind the DML verbs) — so narrow CDC
     against an UNCLUSTERED key (where the batch's [min, max]
     envelope spans every file) still rewrites only the files that
     actually hold the keys. Pruning is sound because ``prune_col``
@@ -4858,7 +4866,7 @@ def merge_into(
     so a file range-disjoint from every batch key value can contain
     no matched row (and unmatched rows are pure pass-through).
     Non-numeric zone maps, files without stats, or NULL batch keys
-    degrade to rewriting conservatively (:func:`_zone_disjoint` /
+    degrade to rewriting conservatively (:func:`_band_touched` /
     full-table fallback) — never to a missed match. Inserts land in
     the rewritten output regardless of pruning.
 
@@ -4960,75 +4968,51 @@ def merge_into(
                     return True
         return False
 
-    # narrow-batch POINT SET: for a small CDC batch (≤ 1024 distinct
-    # keys — a bounded driver list by construction), each file is
-    # probed per key through zone maps, hidden-partition paths, AND
-    # listing-level bloom sidecars — the Delta-bloom-index CDC shape:
-    # on an UNCLUSTERED key where the batch's [min, max] envelope
-    # spans every file, the per-key probes still prune to the files
-    # that actually hold the keys (inserts are unaffected: the batch
-    # rides into the rewritten output in full, pruning only narrows
-    # which base files are read)
-    point_vals = None
-    if prunable and bounds["n"] <= 1024:
-        point_vals = [
-            r[0]
-            for r in updates.select(prune_col).distinct().collect()
-        ]
-    for attempt in range(max(1, max_retries)):
+    # narrow-batch POINT SET: for a small CDC batch (≤ 1024 rows — a
+    # bounded driver list by construction), each file is probed per
+    # key through zone maps, hidden-partition paths, AND listing-level
+    # bloom sidecars (:func:`_band_touched`'s point probe) — the
+    # Delta-bloom-index CDC shape: on an UNCLUSTERED key where the
+    # batch's [min, max] envelope spans every file, the per-key probes
+    # still prune to the files that actually hold the keys (inserts
+    # are unaffected: the batch rides into the rewritten output in
+    # full, pruning only narrows which base files are read)
+    points = None
+    if prunable and bounds["n"] <= _POINT_SET_CAP:
+        points = {
+            prune_col: [
+                r[0]
+                for r in updates.select(prune_col).distinct().collect()
+            ]
+        }
+
+    def attempt() -> int:
         base = current_version(table)
         if base < 0:
             raise FileNotFoundError(f"{table} has no transaction log")
         files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        phys = mapping.get(prune_col, prune_col)
-        prune_dt = _dtype_map(schema).get(prune_col.lower())
-        sets = (
-            _batch_bucket_sets(files, phys) if prunable else {}
-        )
-        bloom_cache: dict = {}
-
-        def _points_disjoint(rel):
-            """True when NO batch key can live in the file (every key
-            refuted by its zone map, path segments, or bloom
-            sidecar)."""
-            if point_vals is None:
-                return False
-            s = stats.get(rel, {}).get(phys)
-            ref = (s or {}).get("bloom")
-            return all(
-                _zone_disjoint(s, v, v)
-                or _path_band_disjoint(rel, phys, v, v, prune_dt)
-                or (
-                    ref is not None
-                    and not _bloom_maybe_contains(
-                        table, ref, v, bloom_cache, dtype=prune_dt
+        touched = files
+        if prunable:
+            phys = mapping.get(prune_col, prune_col)
+            sets = _batch_bucket_sets(files, phys)
+            # the bucket-set aggregate is the only bucket prune for a
+            # batch over the point-set cap; it costs no I/O, so it
+            # runs before the sidecar probes
+            touched = _band_touched(
+                table,
+                [
+                    f
+                    for f in files
+                    if not _bucket_set_disjoint(
+                        os.path.relpath(f, table), phys, sets
                     )
-                )
-                for v in point_vals
+                ],
+                stats,
+                mapping,
+                {prune_col: (bounds["lo"], bounds["hi"])},
+                types=_dtype_map(schema),
+                points=points,
             )
-        touched = [
-            f
-            for f in files
-            if not prunable
-            or not (
-                _zone_disjoint(
-                    stats.get(os.path.relpath(f, table), {}).get(phys),
-                    bounds["lo"],
-                    bounds["hi"],
-                )
-                or _path_band_disjoint(
-                    os.path.relpath(f, table),
-                    phys,
-                    bounds["lo"],
-                    bounds["hi"],
-                    prune_dt,
-                )
-                or _bucket_set_disjoint(
-                    os.path.relpath(f, table), phys, sets
-                )
-                or _points_disjoint(os.path.relpath(f, table))
-            )
-        ]
         # through the deletion vectors: DV-deleted rows must not be
         # merge bases nor reappear in the rewritten files
         base_df = _scan(spark, table, touched, schema, dvs, mapping)
@@ -5054,55 +5038,55 @@ def merge_into(
                 _merge_change_frame(base_df, merged, keys, version_cols),
                 mapping,
             )
-        try:
-            return commit(
-                merged,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={
-                    "merge": {
-                        "keys": list(keys),
-                        "version_cols": list(version_cols),
-                        "prune_col": prune_col,
-                        "lo": _json_safe(bounds["lo"]),
-                        "hi": _json_safe(bounds["hi"]),
-                    }
-                },
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                # benign-conflict rebase: an append whose files are
-                # provably outside the batch's key band holds no row
-                # this merge could match OR collide with (inserts
-                # included — every batch key lies in [lo, hi] on
-                # prune_col), so the staged merge re-targets the new
-                # head instead of re-merging
-                rebase_bands=(
-                    {prune_col: (bounds["lo"], bounds["hi"])}
-                    if prunable
-                    else None
-                ),
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # table advanced: re-merge against the new snapshot
-    raise AssertionError("unreachable")
+        return commit(
+            merged,
+            table,
+            action="replace",
+            remove=[os.path.relpath(f, table) for f in touched],
+            meta={
+                "merge": {
+                    "keys": list(keys),
+                    "version_cols": list(version_cols),
+                    "prune_col": prune_col,
+                    "lo": _json_safe(bounds["lo"]),
+                    "hi": _json_safe(bounds["hi"]),
+                }
+            },
+            expected_version=base,
+            stats_cols=stats_cols,
+            change_files=change_rels,
+            # benign-conflict rebase: an append whose files are
+            # provably outside the batch's key band holds no row this
+            # merge could match OR collide with (inserts included —
+            # every batch key lies in [lo, hi] on prune_col), so the
+            # staged merge re-targets the new head instead of
+            # re-merging
+            rebase_bands=(
+                {prune_col: (bounds["lo"], bounds["hi"])}
+                if prunable
+                else None
+            ),
+        )
+
+    # table advanced: re-merge against the new snapshot
+    return _retry(max_retries, attempt)
 
 
 def _is_metadata_only_republish(table: str, rec: dict) -> bool:
     """True when an ``overwrite`` record merely RE-REFERENCES the
     immediately preceding version's exact file list, schema
     (normalized), and deletion vectors — the ALTER TABLE commit shape
-    published by ``_republish_head`` (CHECK constraint edits,
-    ``set_partition_spec``). Such a commit moves no data and changes
-    nothing a row-consumer can see, so incremental readers
-    (:func:`read_appends`, the ``txtable_changes`` streaming source)
-    ride through it instead of refusing — an ALTER must not kill
-    every streaming consumer of a table. RESTORE and real overwrites
-    change the file list, RENAME changes the logical schema: all
-    classify False and keep their refusal semantics. Cost: one
+    published by :func:`_republish_head`: :func:`add_constraint`,
+    :func:`drop_constraint`, :func:`set_partition_spec`,
+    :func:`set_stats_cols`, :func:`set_checkpoint_interval` (all five
+    classify True), and :func:`rename_column` / :func:`drop_column`
+    (these change the logical schema, so they classify False). A True
+    commit moves no data and changes nothing a row-consumer can see,
+    so incremental readers (:func:`read_appends`, the
+    ``txtable_changes`` streaming source) ride through it instead of
+    refusing — an ALTER must not kill every streaming consumer of a
+    table. RESTORE and real overwrites change the file list: they
+    classify False and keep their refusal semantics too. Cost: one
     snapshot resolve of the preceding version, only for
     overwrite-shaped candidates (ALTERs are rare)."""
     if rec.get("action") != "overwrite" or rec.get("remove"):
@@ -5463,40 +5447,23 @@ def expire_versions(table: str, keep_from: int) -> list[int]:
         )
     if keep_from == first:
         return []
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, keep_from)
+    snap = _snapshot(table, keep_from)
     base_rec = next(c for c in log if c["version"] == keep_from)
-    rels = [os.path.relpath(f, table) for f in files]
+    # the rebase reproduces the base snapshot's FULL state — files,
+    # sizes (resolved BEFORE the expired records are unlinked, so
+    # legacy sizes survive instead of degrading to stat() calls),
+    # zone maps, vectors, mapping — and carries the base's table
+    # properties: expiry never silently disarms enforcement, the
+    # layout, the bloom index or the zone-map property
     record = {
         "version": keep_from,
         "action": "overwrite",
-        "add": rels,
-        "schema": schema,
+        "schema": snap[1],
         "commit_id": base_rec["commit_id"],
         "meta": {**base_rec.get("meta", {}), "expired_through": keep_from - 1},
+        **_reref(table, snap),
     }
-    if base_rec.get("constraints"):
-        # CHECK constraints ride every record, so the rebase carries
-        # the base's set — expiry never silently disarms enforcement
-        record["constraints"] = base_rec["constraints"]
-    if base_rec.get("partition_by"):
-        # ...and so does the partition spec, or the next append would
-        # inherit "unpartitioned" and wedge the layout
-        record["partition_by"] = base_rec["partition_by"]
-    if base_rec.get("bloom_cols"):
-        # table properties ride every record: expiry must not
-        # silently disarm the bloom index or the zone-map property
-        record["bloom_cols"] = base_rec["bloom_cols"]
-    if base_rec.get("stats_cols"):
-        record["stats_cols"] = base_rec["stats_cols"]
-    if base_rec.get("checkpoint_interval"):
-        record["checkpoint_interval"] = base_rec["checkpoint_interval"]
-    if mapping:
-        # the rebased files keep their physical names — the map that
-        # resolves them must survive with them
-        record["column_mapping"] = mapping
-    # resolved BEFORE the expired records are unlinked, so legacy
-    # sizes survive the rebase instead of degrading to stat() calls
-    record["sizes"] = _fill_sizes(table, rels, sizes)
+    _carry_props(record, base_rec)
     # the rebase preserves the ORIGINAL commit instant, so TIMESTAMP
     # AS OF resolution is unchanged by expiry. A pre-'ts' record's
     # instant is its log file's mtime (_commit_ts fallback) — stamp
@@ -5507,14 +5474,6 @@ def expire_versions(table: str, keep_from: int) -> list[int]:
         record["ts"] = base_rec["ts"]
     else:
         record["ts"] = os.path.getmtime(_log_path(table, keep_from))
-    kept_stats = {r: stats[r] for r in rels if stats.get(r)}
-    if kept_stats:
-        record["stats"] = kept_stats
-    kept_dvs = {r: dvs[r] for r in rels if dvs.get(r)}
-    if kept_dvs:
-        # the rebase is the base snapshot's FULL state — losing the
-        # vectors here would resurrect merge-on-read deletes
-        record["dv"] = _encode_dv_entries(table, kept_dvs)
     path = _log_path(table, keep_from)
     tmp = path + ".rebase"
     with open(tmp, "w") as f:
@@ -5580,7 +5539,7 @@ def restore(
     the evolved schema would null-fill phantom columns forever).
 
     Concurrency: the restore pins the head it resolved against
-    (O_EXCL on head+1, the same arbiter-mediated race every commit
+    (publish at head+1, the same arbiter-mediated race every commit
     runs); a concurrent writer landing first surfaces as
     :class:`CommitConflict` and the restore re-resolves and retries
     up to ``max_retries`` — the target version is absolute, so the
@@ -5594,77 +5553,40 @@ def restore(
         raise ValueError("restore needs exactly one of version|timestamp")
     if timestamp is not None:
         version = version_at_timestamp(table, timestamp)
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         last = _last_commit(table)
         if last is None:
             raise FileNotFoundError(f"{table} has no transaction log")
         target = _resolve_version(table, version)
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, target)
-        rels = [os.path.relpath(f, table) for f in files]
+        snap = _snapshot(table, target)
         record = {
             "version": last["version"] + 1,
             "action": "overwrite",
-            "add": rels,
-            "schema": schema,
+            "schema": snap[1],
             "commit_id": uuid.uuid4().hex,
             "ts": _next_commit_ts(table, last),
             "meta": {"restore_of": target},
-        }
-        kept_stats = {r: stats[r] for r in rels if stats.get(r)}
-        if kept_stats:
-            record["stats"] = kept_stats
-        kept_dvs = {r: dvs[r] for r in rels if dvs.get(r)}
-        if kept_dvs:
             # restoring a version restores its deletion vectors too —
             # the target's LOGICAL rows, not its physical files alone
-            record["dv"] = _encode_dv_entries(table, kept_dvs)
-        record["sizes"] = _fill_sizes(table, rels, sizes)
-        # the FULL target state comes back, CHECK constraints included
-        # (a restore across an add_constraint must not keep enforcing
-        # a rule the restored rows were never validated against — and
-        # the restore of a constrained version re-arms its rules)
-        target_cons = _constraints_at(table, target)
-        if target_cons:
-            record["constraints"] = target_cons
+            **_reref(table, snap),
+        }
+        # the target's DATA-STATE properties come back with its files:
+        # CHECK constraints (a restore across an add_constraint must
+        # not keep enforcing a rule the restored rows were never
+        # validated against), the partition spec the files follow and
+        # their column mapping. WRITE-SIDE properties (zone-map cols,
+        # bloom index, checkpoint cadence) are PRESERVED from the
+        # current head, not rewound (Delta's RESTORE keeps current
+        # table properties too) — a restore must not silently disarm
+        # stats collection on future writes
         target_rec = _read_log(table, after=target - 1, through=target)
-        if target_rec and target_rec[0].get("partition_by"):
-            # the restored snapshot's files follow ITS layout — the
-            # spec must come back with them
-            record["partition_by"] = target_rec[0]["partition_by"]
-        if mapping:
-            # the restored files carry THEIR physical names
-            record["column_mapping"] = mapping
-        # WRITE-SIDE table properties (zone-map cols, bloom index,
-        # checkpoint cadence) are PRESERVED from the current head, not
-        # rewound: RESTORE restores the table's DATA state (Delta's
-        # RESTORE keeps current table properties too) — a restore
-        # must not silently disarm stats collection on future writes
-        for prop in ("bloom_cols", "stats_cols", "checkpoint_interval"):
-            if last.get(prop):
-                record[prop] = last[prop]
-        try:
-            _DEFAULT_ARBITER.publish(
-                _log_path(table, record["version"]), json.dumps(record)
-            )
-            _maybe_auto_checkpoint(
-                table,
-                record["version"],
-                int(record.get("checkpoint_interval", 0)),
-            )
-            return record["version"]
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # head advanced; re-resolve and republish
-    raise AssertionError("unreachable")
+        _carry_props(record, target_rec[0] if target_rec else None)
+        _carry_props(record, last, _WRITE_SIDE_PROPS)
+        return _publish(table, record)
 
-
-def _constraints_at(table: str, version: int) -> dict:
-    """Active CHECK constraints as of ``version``: every commit record
-    since the feature carries the full set, so this is one log-record
-    read (empty for records predating any add_constraint)."""
-    recs = _read_log(table, after=version - 1, through=version)
-    return dict(recs[0].get("constraints", {})) if recs else {}
+    # a conflict means the head advanced: re-resolve and republish
+    return _retry(max_retries, attempt)
 
 
 def constraints_of(table: str) -> dict:
@@ -5714,27 +5636,21 @@ def set_checkpoint_interval(
     every = int(every)
     if every < 0:
         raise ValueError(f"checkpoint interval must be >= 0, got {every}")
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
         if int(head.get("checkpoint_interval", 0)) == every:
             return head["version"]  # no-op: property already active
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"set_checkpoint_interval": every},
-                dict(head.get("constraints", {})),
-                # 0 must CLEAR, not inherit: -1 sentinel is never
-                # written (the record-write gate drops falsy/negative)
-                checkpoint_interval_override=every if every else -1,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"set_checkpoint_interval": every},
+            {"checkpoint_interval": every},  # 0 clears
+        )
+
+    return _retry(max_retries, attempt)
 
 
 def set_stats_cols(
@@ -5767,7 +5683,8 @@ def set_stats_cols(
     automatic stats; existing recorded stats remain and keep pruning).
     Returns the commit version the property landed in."""
     cols = list(cols or [])
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -5799,96 +5716,49 @@ def set_stats_cols(
                     )[rel]
             if not extra and list(head.get("stats_cols", [])) == cols:
                 return head["version"]  # fully statted already
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"set_stats_cols": cols},
-                dict(head.get("constraints", {})),
-                stats_cols_override=cols,  # [] clears (override wins)
-                extra_stats=extra or None,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"set_stats_cols": cols},
+            {"stats_cols": cols},  # [] clears
+            extra_stats=extra or None,
+        )
+
+    return _retry(max_retries, attempt)
 
 
 def _republish_head(
     table: str,
     head: dict,
     meta: dict,
-    constraints: dict,
-    schema_override: str | None = None,
-    mapping_override: dict | None = None,
-    partition_override: "Sequence[str] | None" = None,
-    stats_cols_override: "Sequence[str] | None" = None,
+    overrides: dict,
     extra_stats: dict | None = None,
-    checkpoint_interval_override: int | None = None,
 ) -> int:
     """Publish a METADATA-ONLY commit that re-references the head
-    snapshot's exact files with an updated constraint set — the
-    ALTER TABLE commit shape; ``schema_override`` /
-    ``mapping_override`` are the RENAME/DROP COLUMN shape (new
-    logical schema, new logical→physical map, same files);
-    ``partition_override`` is the SET PARTITION SPEC shape (new
-    active layout for future writes, same files — pass ``[]`` to
-    revert to flat). Raises :class:`CommitConflict` if the head
-    moved (callers run the optimistic retry loop)."""
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, head["version"])
-    if schema_override is not None:
-        schema = schema_override
-    if mapping_override is not None:
-        mapping = mapping_override
-    rels = [os.path.relpath(f, table) for f in files]
-    commit_ts = _next_commit_ts(table, head)
+    snapshot's exact files — the ALTER TABLE commit shape. The record
+    inherits the head's schema and table properties, with
+    ``overrides`` winning: any of :data:`_TABLE_PROPS` (an empty value
+    clears it — e.g. ``{"partition_by": []}`` reverts to flat) plus
+    ``schema``, so RENAME/DROP COLUMN pass a new logical schema and a
+    new logical→physical map over the same files. Raises
+    :class:`CommitConflict` if the head moved (callers run the
+    optimistic retry loop)."""
+    src = {**head, **overrides}
     record = {
         "version": head["version"] + 1,
         "action": "overwrite",
-        "add": rels,
-        "schema": schema,
+        "schema": src["schema"],
         "commit_id": uuid.uuid4().hex,
-        "ts": commit_ts,
+        "ts": _next_commit_ts(table, head),
         "meta": meta,
+        **_reref(table, _snapshot(table, head["version"])),
     }
-    kept_stats = {r: stats[r] for r in rels if stats.get(r)}
-    if kept_stats:
-        record["stats"] = kept_stats
-    kept_dvs = {r: dvs[r] for r in rels if dvs.get(r)}
-    if kept_dvs:
-        record["dv"] = _encode_dv_entries(table, kept_dvs)
-    record["sizes"] = _fill_sizes(table, rels, sizes)
-    if partition_override is not None:
-        if partition_override:
-            record["partition_by"] = list(partition_override)
-    elif head.get("partition_by"):
-        record["partition_by"] = head["partition_by"]
-    if mapping:
-        record["column_mapping"] = mapping
-    if constraints:
-        record["constraints"] = constraints
-    if head.get("bloom_cols"):
-        record["bloom_cols"] = head["bloom_cols"]
-    if stats_cols_override is not None:
-        if stats_cols_override:
-            record["stats_cols"] = list(stats_cols_override)
-    elif head.get("stats_cols"):
-        record["stats_cols"] = head["stats_cols"]
-    if checkpoint_interval_override is not None:
-        # a POSITIVE override sets; zero/negative clears (the -1
-        # sentinel set_checkpoint_interval uses to mean "clear")
-        if checkpoint_interval_override > 0:
-            record["checkpoint_interval"] = int(
-                checkpoint_interval_override
-            )
-    elif head.get("checkpoint_interval"):
-        record["checkpoint_interval"] = head["checkpoint_interval"]
+    _carry_props(record, src)
     if extra_stats:
         # backfilled zone maps (set_stats_cols) merge per file under
         # the snapshot's existing entries
         merged = dict(record.get("stats", {}))
-        keep = set(rels)
+        keep = set(record["add"])
         for r, e in extra_stats.items():
             if r in keep:
                 cur = dict(merged.get(r, {}))
@@ -5896,13 +5766,7 @@ def _republish_head(
                 merged[r] = cur
         if merged:
             record["stats"] = merged
-    _DEFAULT_ARBITER.publish(
-        _log_path(table, record["version"]), json.dumps(record)
-    )
-    _maybe_auto_checkpoint(
-        table, record["version"], int(record.get("checkpoint_interval", 0))
-    )
-    return record["version"]
+    return _publish(table, record)
 
 
 def set_partition_spec(
@@ -5939,7 +5803,8 @@ def set_partition_spec(
     (``user_id_bucket8``), so re-bucketing mints a new segment name
     and cross-era prunes stay conservative instead of wrong."""
     spec = list(spec or [])
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -5970,19 +5835,11 @@ def set_partition_spec(
             )
         if list(head.get("partition_by", [])) == spec:
             return head["version"]  # no-op: spec already active
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"set_partition_spec": spec},
-                dict(head.get("constraints", {})),
-                partition_override=spec,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table, head, {"set_partition_spec": spec}, {"partition_by": spec}
+        )
+
+    return _retry(max_retries, attempt)
 
 
 def add_constraint(
@@ -6012,7 +5869,8 @@ def add_constraint(
 
     if not name.isidentifier():
         raise ValueError(f"constraint name {name!r} is not an identifier")
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6031,22 +5889,20 @@ def add_constraint(
                 f"{bad} existing row(s) violate it"
             )
         cons[name] = expr
-        try:
-            return _republish_head(
-                table, head, {"add_constraint": name}, cons
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # head advanced: re-validate the new snapshot
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table, head, {"add_constraint": name}, {"constraints": cons}
+        )
+
+    # a conflict means the head advanced: re-validate the new snapshot
+    return _retry(max_retries, attempt)
 
 
 def drop_constraint(table: str, name: str, max_retries: int = 3) -> int:
     """ALTER TABLE ... DROP CONSTRAINT — stop enforcing ``name`` from
     the returned commit version onward (metadata-only; no data is
     read). Raises ``ValueError`` if the constraint doesn't exist."""
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6054,15 +5910,11 @@ def drop_constraint(table: str, name: str, max_retries: int = 3) -> int:
         if name not in cons:
             raise ValueError(f"no constraint {name} on {table}")
         del cons[name]
-        try:
-            return _republish_head(
-                table, head, {"drop_constraint": name}, cons
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table, head, {"drop_constraint": name}, {"constraints": cons}
+        )
+
+    return _retry(max_retries, attempt)
 
 
 def clone(
@@ -6101,57 +5953,26 @@ def clone(
     if _log_versions(target):
         raise FileExistsError(f"{target} already has a transaction log")
     src_version = _resolve_version(source, version)
-    files, schema, stats, sizes, dvs, mapping = _snapshot(
-        source, src_version
-    )
-    os.makedirs(os.path.join(target, _LOG_DIR), exist_ok=True)
-    old_key = {f: os.path.relpath(f, source) for f in files}
-    new_key = {f: os.path.relpath(f, target) for f in files}
-    rels = [new_key[f] for f in files]
+    snap = _snapshot(source, src_version)
     record = {
         "version": 0,
         "action": "append",
-        "add": sorted(rels),
-        "schema": schema,
+        "schema": snap[1],
         "commit_id": uuid.uuid4().hex,
         "ts": _next_commit_ts(target, None),
         "meta": {
             "clone_of": os.path.abspath(source),
             "clone_version": src_version,
         },
-        "sizes": {
-            new_key[f]: sizes[old_key[f]]
-            for f in files
-            if old_key[f] in sizes
-        },
+        **_reref(source, snap, root=target),
     }
-    kept_stats = {
-        new_key[f]: stats[old_key[f]]
-        for f in files
-        if stats.get(old_key[f])
-    }
-    if kept_stats:
-        record["stats"] = kept_stats
-    kept_dvs = {
-        new_key[f]: dvs[old_key[f]] for f in files if dvs.get(old_key[f])
-    }
-    if kept_dvs:
-        record["dv"] = _encode_dv_entries(target, kept_dvs)
-    if mapping:
-        record["column_mapping"] = mapping
+    record["add"].sort()
+    # the source snapshot's table properties ride too — a clone that
+    # silently dropped the zone-map / bloom / checkpoint-cadence
+    # properties would stop collecting stats on its very first append
     src_rec = _read_log(source, after=src_version - 1, through=src_version)
-    if src_rec and src_rec[0].get("partition_by"):
-        record["partition_by"] = src_rec[0]["partition_by"]
-    if src_rec and src_rec[0].get("constraints"):
-        record["constraints"] = src_rec[0]["constraints"]
-    # table PROPERTIES ride too — a clone that silently dropped the
-    # zone-map / bloom / checkpoint-cadence properties would stop
-    # collecting stats on its very first append
-    for prop in ("bloom_cols", "stats_cols", "checkpoint_interval"):
-        if src_rec and src_rec[0].get(prop):
-            record[prop] = src_rec[0][prop]
-    _DEFAULT_ARBITER.publish(_log_path(target, 0), json.dumps(record))
-    return 0
+    _carry_props(record, src_rec[0] if src_rec else None)
+    return _publish(target, record)
 
 
 def rename_column(
@@ -6177,7 +5998,8 @@ def rename_column(
 
     if not new.isidentifier():
         raise ValueError(f"new column name {new!r} is not an identifier")
-    for attempt in range(max(1, max_retries)):
+
+    def attempt() -> int:
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6227,20 +6049,14 @@ def rename_column(
             else:
                 new_fields.append([n, t])
         ddl = ", ".join(f"{n} {t}" for n, t in new_fields)
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"rename_column": [old, new]},
-                dict(head.get("constraints", {})),
-                schema_override=ddl,
-                mapping_override=mapping,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"rename_column": [old, new]},
+            {"schema": ddl, "column_mapping": mapping},
+        )
+
+    return _retry(max_retries, attempt)
 
 
 def drop_column(table: str, name: str, max_retries: int = 3) -> int:
@@ -6252,7 +6068,7 @@ def drop_column(table: str, name: str, max_retries: int = 3) -> int:
     :func:`rename_column`; the last column cannot be dropped."""
     import re as _re
 
-    for attempt in range(max(1, max_retries)):
+    def attempt() -> int:
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6285,20 +6101,14 @@ def drop_column(table: str, name: str, max_retries: int = 3) -> int:
         ddl = ", ".join(
             f"{n} {t}" for n, t in fields if n.lower() != name.lower()
         )
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"drop_column": name},
-                dict(head.get("constraints", {})),
-                schema_override=ddl,
-                mapping_override=mapping,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"drop_column": name},
+            {"schema": ddl, "column_mapping": mapping},
+        )
+
+    return _retry(max_retries, attempt)
 
 
 # --- bench phase clock ------------------------------------------------------

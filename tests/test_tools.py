@@ -754,7 +754,7 @@ def test_commit_arbiter_is_pluggable_and_races_surface(spark, tmp_path):
         def publish(self, path, payload):
             if not self.raced:
                 self.raced = True
-                txlog.commit(  # the concurrent winner (default arbiter)
+                txlog.commit(  # the concurrent winner (raced: plain publish)
                     spark.createDataFrame([Row(k=77)]), table
                 )
             self.fs.publish(path, payload)
@@ -762,10 +762,12 @@ def test_commit_arbiter_is_pluggable_and_races_surface(spark, tmp_path):
     import pytest as _pytest
 
     racing = RacingArbiter()
-    with _pytest.raises(txlog.CommitConflict):
-        txlog.commit(
-            spark.createDataFrame([Row(k=1)]), table, arbiter=racing
-        )
+    prev = txlog.set_arbiter(racing)
+    try:
+        with _pytest.raises(txlog.CommitConflict):
+            txlog.commit(spark.createDataFrame([Row(k=1)]), table)
+    finally:
+        txlog.set_arbiter(prev)
     # the loser left only unreferenced data files — vacuum garbage,
     # never a torn table
     assert txlog.read_table(spark, table).count() == 2  # k=0 and k=77
