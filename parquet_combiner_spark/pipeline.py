@@ -40,24 +40,7 @@ def top_items(data_a: DataFrame, data_b: DataFrame, top_x: int = 5) -> DataFrame
     deduped = dedup_first_wins(
         data_a.select(LOC, "detection_oid", "item_name"), ["detection_oid"]
     )
-    counts = group_counts(deduped, [LOC, "item_name"], count_col="count")
-    ranked = top_k_per_group(
-        counts,
-        [LOC],
-        [F.desc("count"), F.asc_nulls_first("item_name")],
-        top_x,
-        rank_col="item_rank",
-    )
-    return broadcast_dim_join(
-        ranked,
-        data_b,
-        key=LOC,
-        defaults={"geographical_location": "Unknown"},
-    ).select(
-        "geographical_location",
-        F.col("item_rank").cast("string").alias("item_rank"),
-        "item_name",
-    )
+    return _top_items_of(deduped, data_b, top_x)
 
 
 def item_count(data_a: DataFrame, data_b: DataFrame | None = None) -> DataFrame:
@@ -88,6 +71,37 @@ def location_stats(
         data_a.select(LOC, "video_camera_oid", "detection_oid", "item_name"),
         ["detection_oid"],
     )
+    return _location_stats_of(deduped)
+
+
+def _top_items_of(
+    deduped: DataFrame, data_b: DataFrame, top_x: int
+) -> DataFrame:
+    """:func:`top_items` over an already-deduped detection frame:
+    count → window rank → filter ≤ topX → broadcast-left-join dataB."""
+    counts = group_counts(deduped, [LOC, "item_name"], count_col="count")
+    ranked = top_k_per_group(
+        counts,
+        [LOC],
+        [F.desc("count"), F.asc_nulls_first("item_name")],
+        top_x,
+        rank_col="item_rank",
+    )
+    return broadcast_dim_join(
+        ranked,
+        data_b,
+        key=LOC,
+        defaults={"geographical_location": "Unknown"},
+    ).select(
+        "geographical_location",
+        F.col("item_rank").cast("string").alias("item_rank"),
+        "item_name",
+    )
+
+
+def _location_stats_of(deduped: DataFrame) -> DataFrame:
+    """:func:`location_stats` over an already-deduped detection frame
+    that keeps the camera column."""
     return group_stats(
         deduped,
         group_col=LOC,
@@ -118,30 +132,8 @@ def all_aggregations(
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     counts = group_counts(deduped, [LOC, "item_name"], count_col="count")
-    ranked = top_k_per_group(
-        counts,
-        [LOC],
-        [F.desc("count"), F.asc_nulls_first("item_name")],
-        top_x,
-        rank_col="item_rank",
-    )
-    top = broadcast_dim_join(
-        ranked, data_b, key=LOC,
-        defaults={"geographical_location": "Unknown"},
-    ).select(
-        "geographical_location",
-        F.col("item_rank").cast("string").alias("item_rank"),
-        "item_name",
-    )
-    stats = group_stats(
-        deduped,
-        group_col=LOC,
-        item_col="item_name",
-        mode_col="video_camera_oid",
-        total_alias="total_detections",
-        unique_alias="unique_items",
-        mode_alias="most_active_camera",
-    )
+    top = _top_items_of(deduped, data_b, top_x)
+    stats = _location_stats_of(deduped)
     return {
         "top_items": top,
         "item_count": counts,

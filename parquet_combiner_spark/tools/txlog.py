@@ -648,6 +648,37 @@ def _reref(table: str, snap: tuple, root: str | None = None) -> dict:
     return part
 
 
+def _pct_decode(col):
+    """ONE '+'-safe percent-decode of a string Column. Neither the URI
+    nor the Hive path escaper ever escapes '+', but ``F.url_decode``
+    is x-www-form-urlencoded and would turn it into a space (ADVICE
+    r10), so a literal '+' is pre-escaped as %2B — this keeps the JVM
+    side consistent with :func:`_partition_values`' ``unquote``."""
+    from pyspark.sql import functions as F
+
+    return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
+
+
+def _file_key(path: str) -> str:
+    """THE deletion-vector file key: ``file:`` + the file's absolute,
+    normalized on-disk path. It equals :func:`_file_key_col` of every
+    row Spark reads from that file, so vectors key by one rule on both
+    sides with no probe. Normalizing resolves the ".."-climbing rel
+    paths of shallow clones (the JVM reports the resolved path) and
+    cwd-relative table paths."""
+    return "file:" + os.path.abspath(path)
+
+
+def _file_key_col():
+    """:func:`_file_key` of the row's file, JVM-side: the scan's file
+    path is a URI whose ONE decode is the on-disk path (Hive-escaped
+    partition dirs survive, because the URI layer escaped their
+    '%')."""
+    from pyspark.sql import functions as F
+
+    return _pct_decode(F.col("_metadata.file_path"))
+
+
 def _physical_reader(
     spark: SparkSession,
     table: str,
@@ -671,7 +702,7 @@ def _physical_reader(
     custom FileIndex. The Python-reachable equivalent: partition
     columns materialize as JVM expressions over
     ``_metadata.file_path`` (regexp_extract the col=value segment,
-    url_decode, cast to the declared type) — codegen-friendly, no
+    percent-decode, cast to the declared type) — codegen-friendly, no
     discovery, any layout. Path segments carry physical names."""
     from pyspark.sql import functions as F
 
@@ -698,27 +729,16 @@ def _physical_reader(
             raw = F.regexp_extract(
                 F.col("_metadata.file_path"), f"/{p}=([^/]+)/", 1
             )
-            # TWO percent-decodes, both '+'-safe: ``_metadata.
-            # file_path`` is a URI, so the ON-DISK directory name
-            # (itself Hive-escapePathName-encoded: ':' → %3A) is
-            # URI-escaped again ('%' → %25; 'p:q' stores as p%3Aq
-            # and reads back p%253Aq). Decode the URI layer, then
-            # the Hive layer. Each decode pre-escapes literal '+'
-            # as %2B because neither encoder ever escapes '+' but
-            # F.url_decode is x-www-form-urlencoded and would turn
-            # it into a space (ADVICE r10) — this keeps the JVM
-            # scan consistent with the Python reader's single
-            # urllib.unquote over the on-disk name.
-            def _pct(col):
-                return F.url_decode(
-                    F.regexp_replace(col, r"\+", "%2B")
-                )
-
+            # TWO '+'-safe percent-decodes: the file path is a URI, so
+            # the ON-DISK directory name (itself Hive-escapePathName-
+            # encoded: ':' → %3A) is URI-escaped again ('%' → %25;
+            # 'p:q' stores as p%3Aq and reads back p%253Aq). Decode
+            # the URI layer, then the Hive layer.
             decoded = (
                 F.when(
                     raw == "__HIVE_DEFAULT_PARTITION__", F.lit(None)
                 )
-                .otherwise(_pct(_pct(raw)))
+                .otherwise(_pct_decode(_pct_decode(raw)))
                 .cast(type_of[n])
             )
             # PER-FILE era resolution (partition spec evolution): a
@@ -753,20 +773,19 @@ def _scan(
     plain vectorized JVM scan untouched (full pushdown, zero
     overhead). Files WITH a vector are read in one sibling scan and
     anti-joined against a broadcast (file, position) frame on the
-    ``_metadata`` pseudo-columns (``file_path``, ``row_index`` —
-    stable parquet row order, the position space the vectors were
-    recorded in); the two branches union. At 100 TB the anti-join is
-    a broadcast hash probe riding the scan — no shuffle, no extra
-    pass — and its build side is bounded by the DV-size guard at
-    delete time.
+    scan's file path and ``_metadata.row_index`` (stable parquet row
+    order, the position space the vectors were recorded in); the two
+    branches union. At 100 TB the anti-join is a broadcast hash probe
+    riding the scan — no shuffle, no extra pass — and its build side
+    is bounded by the DV-size guard at delete time.
 
-    The file-path keys for the broadcast frame are derived from a
-    one-row PROBE of one DV'd file (``_metadata.file_path`` is a URI
-    whose exact scheme/encoding belongs to Spark): the probe's path
-    minus its known rel-path suffix gives the table's URI prefix
-    exactly, with no fragile hand-parsing of URI formats. One
-    driver-side one-task job, only on scans that actually carry DVs.
+    The broadcast frame keys each file by :func:`_file_key`, the rule
+    :func:`_file_key_col` applies to the scanned rows, and is built
+    from an Arrow table of one row per DV'd file whose position array
+    explodes JVM-side: it plans as a local table scan, so building
+    the frame runs no Spark job and broadcasting it no Python worker.
     """
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     mapping = mapping or {}
@@ -783,51 +802,19 @@ def _scan(
     if clean:
         parts.append(_read(clean).select(*logical))
     if dirty:
-        # keys are built from NORMALIZED absolute paths so rel paths
-        # that climb out of the table root (shallow clones reference
-        # the source's files via "../" rels) still key correctly —
-        # the JVM reports the resolved path, never the ".." form
-        from urllib.parse import unquote
-
-        probe_rel = next(iter(dirty))
-        probe_abs = os.path.normpath(by_rel[probe_rel])
-        probe = (
-            spark.read.parquet(by_rel[probe_rel])
-            .select(F.col("_metadata.file_path").alias("p"))
-            .first()
-        )
-        # file_path is a URI: the ON-DISK name (which may itself hold
-        # Hive-escaped %XX from partition values) is percent-escaped
-        # once more, so exactly ONE unquote recovers the on-disk path
-        # — matching raw would break for any escaped directory
-        fp = unquote(probe["p"])
-        if not fp.endswith(probe_abs):
-            raise AssertionError(
-                f"_metadata.file_path {probe['p']!r} (decoded {fp!r}) "
-                f"does not end with the file's normalized path "
-                f"{probe_abs!r}; cannot key deletion vectors"
-            )
-        scheme = fp[: len(fp) - len(probe_abs)]
-        dv_rows = [
-            (scheme + os.path.normpath(by_rel[rel]), int(pos))
-            for rel, positions in dirty.items()
-            for pos in positions
-        ]
         dv_df = spark.createDataFrame(
-            dv_rows, "__dv_path string, __dv_pos long"
-        )
-        scanned = _read([by_rel[r] for r in dirty])
-        # decode the URI layer JVM-side the same '+'-safe way the
-        # partition-value derivation does (url_decode is form
-        # decoding; literal '+' must survive)
-        jvm_path = F.url_decode(
-            F.regexp_replace(
-                F.col("_metadata.file_path"), r"\+", "%2B"
+            pa.table(
+                {
+                    "__dv_path": [_file_key(by_rel[r]) for r in dirty],
+                    "__dv_pos": pa.array(
+                        list(dirty.values()), pa.list_(pa.int64())
+                    ),
+                }
             )
-        )
-        kept = scanned.join(
+        ).select("__dv_path", F.explode("__dv_pos").alias("__dv_pos"))
+        kept = _read([by_rel[r] for r in dirty]).join(
             F.broadcast(dv_df),
-            (jvm_path == F.col("__dv_path"))
+            (_file_key_col() == F.col("__dv_path"))
             & (F.col("_metadata.row_index") == F.col("__dv_pos")),
             "left_anti",
         ).select(*logical)
@@ -3943,76 +3930,73 @@ def compact_small_files(
     return _retry(max_retries, attempt)
 
 
-def _raw_positions_df(
+def _dv_positions(
     spark: SparkSession,
     table: str,
     touched: list,
     schema: str,
+    dvs: dict,
     mapping: dict,
     cond,
-) -> DataFrame:
-    """(file_path, row_index) of every RAW row in ``touched`` files
-    matching ``cond`` — a Column over LOGICAL names (the physical
-    scan is aliased back through the column mapping before the filter
-    binds). Raw = ``_metadata.row_index`` over the physical rows,
-    already-deleted rows included: the position space never depends
-    on any earlier vector's content."""
+    max_dv_rows: int,
+    verb: str,
+) -> tuple[dict, int, int]:
+    """THE merge-on-read position resolver behind
+    :func:`_delete_where_dv` and :func:`_update_where_dv`: the RAW
+    positions (``_metadata.row_index`` over the physical rows,
+    already-deleted rows included, so the position space never depends
+    on any earlier vector's content) of the rows in ``touched`` files
+    where ``cond`` — a Column over LOGICAL names, bound after the
+    physical scan is aliased back through the column mapping — is
+    TRUE, keyed by :func:`_file_key`. Returns ``(rel → new full
+    vector for every file gaining a live position, raw hit count, live
+    hit count)``; the union with each file's existing vector makes a
+    replayed or overlapping call idempotent."""
     from pyspark.sql import functions as F
 
-    rels_in = [os.path.relpath(f, table) for f in touched]
     read_fn, phys_of, names = _physical_reader(
-        spark, table, rels_in, schema, mapping
+        spark, table, [os.path.relpath(f, table) for f in touched],
+        schema, mapping,
     )
-    return (
+    # ONE job resolves positions AND enforces the size guard: collect
+    # at most max+1 rows — the sentinel row proves the overflow
+    # without ever materializing an oversized vector on the driver
+    hits = (
         read_fn(list(touched))
         .select(
-            *[F.col(phys_of.get(n, n)).alias(n) for n in names],
-            F.col("_metadata.file_path").alias("__pcs_p"),
+            *[F.col(phys_of[n]).alias(n) for n in names],
+            _file_key_col().alias("__pcs_p"),
             F.col("_metadata.row_index").alias("__pcs_i"),
         )
         .where(cond)
-        .select(
-            F.col("__pcs_p").alias("p"), F.col("__pcs_i").alias("i")
-        )
+        .select("__pcs_p", "__pcs_i")
+        .limit(max_dv_rows + 1)
+        .collect()
     )
-
-
-def _dv_positions_by_rel(
-    table: str, touched: list, hits: list
-) -> dict:
-    """Key collected (file_path, row_index) hits by table-relative
-    path: ``file_path`` is a URI whose single percent-decode is the
-    ON-DISK path (Hive-escaped partition dirs survive, because the
-    URI layer escaped their '%'), and after one linear probe
-    establishes the URI prefix, every row resolves with ONE dict
-    lookup — O(hits), not O(hits × touched files). Normalized
-    absolutes handle clones' \"..\"-climbing rel paths (same rule as
-    :func:`_scan`)."""
-    from urllib.parse import unquote
-
-    by_norm = {
-        os.path.normpath(f): os.path.relpath(f, table) for f in touched
-    }
-    out: dict = {}
-    prefix = None
-    for row in hits:
-        p = unquote(row["p"])
-        if (
-            prefix is None
-            or not p.startswith(prefix)
-            or p[len(prefix):] not in by_norm
-        ):
-            ms = [n for n in by_norm if p.endswith(n)]
-            if len(ms) != 1:
-                raise AssertionError(
-                    f"file path {row['p']!r} resolves to {ms} of the "
-                    "touched rel paths; cannot key the deletion vector"
-                )
-            prefix = p[: len(p) - len(ms[0])]
-        out.setdefault(by_norm[p[len(prefix):]], set()).add(
-            int(row["i"])
+    if len(hits) > max_dv_rows:
+        raise ValueError(
+            f"{verb} matches more than max_dv_rows={max_dv_rows} "
+            "rows: a deletion vector that size stops being metadata — "
+            f"use mode='cow' (copy-on-write) for wide {verb}s"
         )
-    return out
+    rel_of = {_file_key(f): os.path.relpath(f, table) for f in touched}
+    new: dict = {}
+    for key, pos in hits:
+        rel = rel_of.get(key)
+        if rel is None:
+            raise AssertionError(
+                f"file key {key!r} is none of the touched files; "
+                "cannot key the deletion vector"
+            )
+        new.setdefault(rel, set()).add(int(pos))
+    entries: dict = {}
+    n_live = 0
+    for rel, pos in new.items():
+        live = pos - set(dvs.get(rel, []))
+        if live:
+            entries[rel] = sorted(live.union(dvs.get(rel, [])))
+            n_live += len(live)
+    return entries, len(hits), n_live
 
 
 def _delete_where_dv(
@@ -4034,35 +4018,15 @@ def _delete_where_dv(
     positions matching ``cond`` (a Column over logical names — rows
     are deleted exactly where it is TRUE; FALSE and NULL survive,
     same contract as the copy-on-write path) in the pruned
-    ``touched`` files, union them into those files' vectors, and
-    publish ONE metadata-only ``action="dv"`` commit pinned at
-    ``base + 1`` (raises :class:`CommitConflict` for the caller's
-    retry loop).
-
-    Positions are computed on the RAW files (already-deleted rows
-    included) — the union with the existing vector makes a replayed
-    or overlapping delete idempotent."""
+    ``touched`` files (:func:`_dv_positions`), union them into those
+    files' vectors, and publish ONE metadata-only ``action="dv"``
+    commit pinned at ``base + 1`` (raises :class:`CommitConflict` for
+    the caller's retry loop)."""
     last = _last_commit(table)
-    hits_df = _raw_positions_df(
-        spark, table, touched, schema, mapping, cond
+    dv_entries, n, _ = _dv_positions(
+        spark, table, touched, schema, dvs, mapping, cond, max_dv_rows,
+        "delete",
     )
-    # ONE job resolves positions AND enforces the size guard: collect
-    # at most max+1 rows — the sentinel row proves the overflow
-    # without ever materializing an oversized vector on the driver
-    hits = hits_df.limit(max_dv_rows + 1).collect()
-    n = len(hits)
-    if n > max_dv_rows:
-        raise ValueError(
-            f"delete matches more than max_dv_rows={max_dv_rows} "
-            "rows: a deletion vector that size stops being metadata — "
-            "use mode='cow' (copy-on-write) for wide deletes"
-        )
-    new_pos = _dv_positions_by_rel(table, touched, hits)
-    dv_entries = {}
-    for rel, pos in new_pos.items():
-        merged = sorted(set(dvs.get(rel, [])) | pos)
-        if merged != list(dvs.get(rel, [])):
-            dv_entries[rel] = merged
     if not dv_entries:
         return base  # nothing newly deleted: publish no version
     change_rels = None
@@ -4145,15 +4109,16 @@ def delete_where(
     commit (``action="dv"``; each file's entry carries its FULL
     deleted-position set, union'd with any prior vector) and every
     reader anti-filters them at scan time (:func:`_scan` — a
-    broadcast probe riding the scan, no extra pass). The vectors are
-    purged into real rewrites by :func:`optimize` /
+    broadcast hash anti-join riding the scan, no extra pass). The
+    vectors are purged into real rewrites by :func:`optimize` /
     :func:`compact_small_files` (which treat a DV'd file as
     rewrite-worthy regardless of size); physical erasure is then the
-    same expire→vacuum discipline as copy-on-write. ``max_dv_rows``
-    bounds one call's vector growth — the records are JSON position
-    lists, metadata-sized only while deletes are narrow (production
-    DVs are roaring bitmaps; the guard keeps this representation
-    honest) — and a wider delete must use ``mode="cow"``.
+    same expire→vacuum discipline as copy-on-write. A vector of up to
+    512 positions rides the record as a JSON list; a larger one moves
+    to a compressed varint sidecar under ``_dv/`` that the record
+    references. ``max_dv_rows`` bounds one call's vector growth, since
+    every reader broadcasts the vectors it scans (production DVs are
+    roaring bitmaps), and a wider delete must use ``mode="cow"``.
     """
     return _delete_rows(
         spark, table, _band_where(col, lo, hi),
@@ -4238,13 +4203,11 @@ def table_changes_cdf(
         if rec["action"] == "append":
             if not rec["add"]:
                 continue
-            read_fn, phys_of, names = _physical_reader(
-                spark, table, rec["add"], rec["schema"], mapping
-            )
             frames.append(
-                read_fn([os.path.join(table, r) for r in rec["add"]])
-                .select(
-                    *[F.col(phys_of[n]).alias(n) for n in names]
+                _scan(
+                    spark, table,
+                    [os.path.join(table, r) for r in rec["add"]],
+                    rec["schema"], {}, mapping,
                 )
                 .withColumn("_change_type", F.lit("insert"))
                 .withColumn(
@@ -4513,30 +4476,12 @@ def _update_where_dv(
     of the commit cover exactly the same live row set."""
     from pyspark.sql import functions as F
 
-    hits = (
-        _raw_positions_df(spark, table, touched, schema, mapping, cond)
-        .limit(max_dv_rows + 1)
-        .collect()
+    dv_entries, _, n_live = _dv_positions(
+        spark, table, touched, schema, dvs, mapping, cond, max_dv_rows,
+        "update",
     )
-    if len(hits) > max_dv_rows:
-        raise ValueError(
-            f"update matches more than max_dv_rows={max_dv_rows} "
-            "rows: a deletion vector that size stops being metadata — "
-            "use mode='cow' (copy-on-write) for wide updates"
-        )
-    matched = _dv_positions_by_rel(table, touched, hits)
-    live = {
-        rel: pos - set(dvs.get(rel, []))
-        for rel, pos in matched.items()
-    }
-    live = {rel: pos for rel, pos in live.items() if pos}
-    n_live = sum(len(pos) for pos in live.values())
-    if n_live == 0:
+    if not dv_entries:
         return base  # every match already deleted: publish nothing
-    dv_entries = {
-        rel: sorted(set(dvs.get(rel, [])) | pos)
-        for rel, pos in live.items()
-    }
     # the append half: the SAME live rows (scan is DV-filtered, same
     # predicate, same files) with the SET expressions applied — no
     # when() needed, every row here matched; one pre-image select so
@@ -5139,11 +5084,12 @@ def read_appends(
     if to_version is None:
         to_version = log[-1]["version"]
     files: list[str] = []
-    schema = ""
+    schema, mapping = "", {}
     for commit in log:
         if commit["version"] > to_version:
             break
         schema = commit["schema"]
+        mapping = commit.get("column_mapping", {})
         if commit["version"] <= after_version:
             continue
         if commit["action"] in ("overwrite", "replace", "dv"):
@@ -5165,9 +5111,11 @@ def read_appends(
                 "it; recompute from the full snapshot"
             )
         files.extend(os.path.join(table, f) for f in commit["add"])
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*files)
+    # the same physical reader as every snapshot read: renamed
+    # columns resolve through the column mapping and partition
+    # columns come from the file paths (no vectors: a dv commit in
+    # range raised above)
+    return _scan(spark, table, files, schema, {}, mapping)
 
 
 def checkpoint(table: str, version: int | None = None) -> int:

@@ -217,6 +217,23 @@ def test_optimize_materializes_logical_names(spark, tmp_path):
     assert got.count() == 50
 
 
+def test_read_appends_resolves_renamed_columns(spark, tmp_path):
+    """A file appended after a rename keeps the column's PHYSICAL
+    name: the append delta must resolve it through the mapping (the
+    incremental materialized-view refresh reads this delta), not
+    null-fill the logical name."""
+    table = str(tmp_path / "t")
+    _mk(spark, table, n=10)
+    v = txlog.rename_column(table, "v", "text")
+    txlog.commit(
+        spark.createDataFrame([(100, 0, "new")], "k int, grp int, text string"),
+        table,
+    )
+    got = txlog.read_appends(spark, table, after_version=v)
+    assert got.columns == ["k", "grp", "text"]
+    assert [tuple(r) for r in got.collect()] == [(100, 0, "new")]
+
+
 def test_cdf_consumers_get_loud_signal_at_rename_boundary(spark, tmp_path):
     """A rename is an ``overwrite``-class metadata commit: append-
     delta consumers and the commit-log stream source refuse to read

@@ -55,6 +55,22 @@ def test_partitioned_commit_roundtrip_and_layout(spark, tmp_path):
         ).schema_arrow.names
 
 
+def test_read_appends_derives_partition_values(spark, tmp_path):
+    """Partition values live in the directory names, not the data
+    files: the append delta must derive them from the paths like every
+    snapshot read, in schema order."""
+    table = str(tmp_path / "t")
+    _mk(spark, table)
+    txlog.commit(
+        spark.createDataFrame([(100, 2, "new")], "k int, day int, v string"),
+        table,
+        partition_by=["day"],
+    )
+    got = txlog.read_appends(spark, table, after_version=0)
+    assert got.columns == ["k", "day", "v"]
+    assert [tuple(r) for r in got.collect()] == [(100, 2, "new")]
+
+
 def test_partition_spec_is_enforced_table_metadata(spark, tmp_path):
     table = str(tmp_path / "t")
     _mk(spark, table)
