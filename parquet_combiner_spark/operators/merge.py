@@ -26,17 +26,25 @@ small but the base is not. The window (``row_number() = 1``)
 formulation would shuffle and sort EVERY row of base+updates; see
 operators/dedup.py for the same tradeoff measured on the dedup
 family.
+
+:func:`merge_upsert_cdf` is the change-data twin: the same
+aggregate also collects each key's base rows, so the change rows
+(Delta's CDF classes) come out of one explode over the per-key rows
+instead of a diff of the merge's input against its output. Both
+kernels share one latest-wins rule (:func:`_latest_wins`).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _PRIORITY = "__src_priority"
 _IS_DELETE = "__is_delete"
+# the change-data column (Delta's CDF name); NULL marks a data row
+CHANGE_TYPE = "_change_type"
 
 
 def compact_tombstones(
@@ -70,6 +78,62 @@ def compact_tombstones(
         *[F.lit(w).alias(c) for c, w in zip(version_cols, watermark)]
     )
     return state.where(~F.col(retain_col) | (vstruct > wstruct))
+
+
+def _latest_wins(
+    base: DataFrame,
+    updates: DataFrame,
+    keys: Sequence[str],
+    version_cols: Sequence[str],
+    op_col: str | None,
+    delete_op: str,
+    retain_col: str | None = None,
+):
+    """THE latest-wins rule behind :func:`merge_upsert` and
+    :func:`merge_upsert_cdf`: check both sides' columns, union them
+    with every row tagged by source priority (base 0, update 1) and,
+    with ``op_col``, the NULL-safe tombstone flag. Returns ``(tagged,
+    data columns, order)``; the per-key winner is the row with the
+    greatest ``order`` — the ``version_cols`` tuple, then the
+    priority, so an exact version tie goes to the update."""
+    if retain_col is not None and op_col is None:
+        raise ValueError("retain_col requires op_col")
+    data_cols = [
+        c for c in base.columns if retain_col is None or c != retain_col
+    ]
+    want_update_cols = set(data_cols) | ({op_col} if op_col else set())
+    if want_update_cols != set(updates.columns):
+        raise ValueError(
+            "merge_upsert needs identical columns (plus op_col on the "
+            f"update side, retain_col on the base side); got "
+            f"base={base.columns} updates={updates.columns} "
+            f"op_col={op_col} retain_col={retain_col}"
+        )
+    missing = [c for c in (*keys, *version_cols) if c not in data_cols]
+    if missing:
+        raise ValueError(f"key/version columns absent from inputs: {missing}")
+    if op_col is not None:
+        if retain_col is not None:
+            tagged_base = base.withColumnRenamed(retain_col, _IS_DELETE)
+        else:
+            tagged_base = base.withColumn(_IS_DELETE, F.lit(False))
+        # NULL-safe: a NULL op is NOT a delete. A bare == yields NULL
+        # for NULL ops, which the tombstone filter (where(~flag)) then
+        # DROPS — a null-op change row would silently act as a DELETE
+        # (and in retain_col mode poison the retain flag) (ADVICE r8).
+        tagged_updates = updates.withColumn(
+            _IS_DELETE,
+            F.coalesce(F.col(op_col) == F.lit(delete_op), F.lit(False)),
+        ).drop(op_col)
+    else:
+        tagged_base, tagged_updates = base, updates
+    tagged = tagged_base.withColumn(_PRIORITY, F.lit(0)).unionByName(
+        tagged_updates.withColumn(_PRIORITY, F.lit(1))
+    )
+    order = F.struct(
+        *[F.col(c) for c in version_cols], F.col(_PRIORITY)
+    )
+    return tagged, data_cols, order
 
 
 def merge_upsert(
@@ -117,46 +181,12 @@ def merge_upsert(
     retained) converges to the one-shot compaction — pinned by
     pytest.
     """
-    if retain_col is not None and op_col is None:
-        raise ValueError("retain_col requires op_col")
-    data_cols = [
-        c for c in base.columns if retain_col is None or c != retain_col
-    ]
-    want_update_cols = set(data_cols) | ({op_col} if op_col else set())
-    if want_update_cols != set(updates.columns):
-        raise ValueError(
-            "merge_upsert needs identical columns (plus op_col on the "
-            f"update side, retain_col on the base side); got "
-            f"base={base.columns} updates={updates.columns} "
-            f"op_col={op_col} retain_col={retain_col}"
-        )
-    missing = [c for c in (*keys, *version_cols) if c not in data_cols]
-    if missing:
-        raise ValueError(f"key/version columns absent from inputs: {missing}")
-    if op_col is not None:
-        if retain_col is not None:
-            tagged_base = base.withColumnRenamed(retain_col, _IS_DELETE)
-        else:
-            tagged_base = base.withColumn(_IS_DELETE, F.lit(False))
-        # NULL-safe: a NULL op is NOT a delete. A bare == yields NULL
-        # for NULL ops, which the tombstone filter (where(~flag)) then
-        # DROPS — a null-op change row would silently act as a DELETE
-        # (and in retain_col mode poison the retain flag) (ADVICE r8).
-        tagged_updates = updates.withColumn(
-            _IS_DELETE,
-            F.coalesce(F.col(op_col) == F.lit(delete_op), F.lit(False)),
-        ).drop(op_col)
-    else:
-        tagged_base, tagged_updates = base, updates
-    tagged = tagged_base.withColumn(_PRIORITY, F.lit(0)).unionByName(
-        tagged_updates.withColumn(_PRIORITY, F.lit(1))
+    tagged, data_cols, order = _latest_wins(
+        base, updates, keys, version_cols, op_col, delete_op, retain_col
     )
     payload = [c for c in data_cols if c not in keys]
     if op_col is not None:
         payload = [*payload, _IS_DELETE]
-    order = F.struct(
-        *[F.col(c) for c in version_cols], F.col(_PRIORITY)
-    )
     picked = tagged.groupBy(*[F.col(k) for k in keys]).agg(
         F.max_by(F.struct(*payload), order).alias("__p")
     )
@@ -171,6 +201,106 @@ def merge_upsert(
             # filter on the one combined row per key — no extra shuffle
             picked = picked.where(~F.col(f"__p.{_IS_DELETE}"))
     return picked.select(*out_cols)
+
+
+def merge_upsert_cdf(
+    base: DataFrame,
+    updates: DataFrame,
+    keys: Sequence[str],
+    version_cols: Sequence[str],
+    op_col: str | None = None,
+    delete_op: str = "D",
+) -> DataFrame:
+    """:func:`merge_upsert` together with its row-level CHANGE DATA
+    (Delta's CDF classes), classified inside the same per-key
+    aggregate. Output: the data columns plus ``_change_type``, which
+    is NULL on the surviving data rows (exactly :func:`merge_upsert`'s
+    output) and names each change row:
+
+    * ``insert`` — the winner of a key with no base row;
+    * ``update_postimage`` / ``update_preimage`` — a winner equal to
+      none of its key's base rows, paired with the key's latest base
+      row (greatest ``version_cols``);
+    * ``delete`` — every other base row that leaves: a tombstoned
+      key's rows, the older duplicates of an updated key, and base
+      rows differing from a winner that equals another base row;
+    * nothing — for a winner equal (NULL-safe, every column) to a
+      base row, e.g. a stale update or a replayed batch.
+
+    Plan: the one ``groupBy(keys)`` picks the winner with ``max_by``
+    and collects the key's base rows newest first; array functions
+    classify them and one explode emits data and change rows — no
+    join and no second pass over the inputs."""
+    tagged, data_cols, order = _latest_wins(
+        base, updates, keys, version_cols, op_col, delete_op
+    )
+    row = F.struct(*data_cols)
+    gone = F.col(_IS_DELETE) if op_col is not None else F.lit(False)
+    base_row = F.struct(F.struct(*version_cols).alias("v"), row.alias("r"))
+    per_key = tagged.groupBy(*keys).agg(
+        F.max_by(F.struct(row.alias("r"), gone.alias("d")), order).alias(
+            "__w"
+        ),
+        F.sort_array(
+            F.collect_list(F.when(F.col(_PRIORITY) == 0, base_row)),
+            asc=False,
+        ).alias("__b"),
+    )
+    # one projection per derived column, so each is computed once
+    win, live, bases = F.col("__r"), F.col("__live"), F.col("__bs")
+    cls = per_key.select(
+        F.col("__w.r").alias("__r"),
+        (~F.col("__w.d")).alias("__live"),
+        F.transform("__b", lambda b: b["r"]).alias("__bs"),
+    ).withColumn(
+        "__arr", live & ~F.exists(bases, lambda b: b.eqNullSafe(win))
+    )
+    arriving = F.col("__arr")
+    entries = F.concat(
+        F.array(
+            change_entry(win, None, live),
+            change_entry(
+                win,
+                F.when(F.size(bases) > 0, "update_postimage").otherwise(
+                    "insert"
+                ),
+                arriving,
+            ),
+        ),
+        F.transform(
+            F.filter(bases, lambda b: ~live | ~b.eqNullSafe(win)),
+            lambda b, i: change_entry(
+                b,
+                F.when(arriving & (i == 0), "update_preimage").otherwise(
+                    "delete"
+                ),
+            ),
+        ),
+    )
+    return explode_changes(cls, entries, data_cols)
+
+
+def change_entry(row, kind, keep=True):
+    """One candidate output row of :func:`explode_changes`: the ``row``
+    struct, its change type (a Column or string; None marks a data
+    row) and whether it is emitted."""
+    kind = kind if isinstance(kind, Column) else F.lit(kind)
+    keep = keep if isinstance(keep, Column) else F.lit(keep)
+    return F.struct(
+        row.alias("r"), kind.cast("string").alias("t"), keep.alias("k")
+    )
+
+
+def explode_changes(
+    df: DataFrame, entries, cols: Sequence[str]
+) -> DataFrame:
+    """Each input row's kept :func:`change_entry` structs (``entries``,
+    an array Column) as output rows of ``cols`` plus ``_change_type``
+    — the one generator behind the change-data writers."""
+    e = F.col("__e")
+    return df.select(
+        F.explode(F.filter(entries, lambda x: x["k"])).alias("__e")
+    ).select(*[e["r"][c].alias(c) for c in cols], e["t"].alias(CHANGE_TYPE))
 
 
 def merge_additive(

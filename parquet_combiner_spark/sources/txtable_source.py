@@ -667,14 +667,17 @@ class TxTableChangesStreamReader(DataSourceStreamReader):
                             "(Delta's 'change data was not recorded' "
                             "rule)"
                         )
-                    # serve the commit's recorded row-level delta —
-                    # the change files carry their own _change_type
-                    # column; an empty list is a zero-delta commit
+                    # serve the commit's recorded row-level delta; an
+                    # empty list is a zero-delta commit. _change_type
+                    # and identity partition values ride each change
+                    # file's path; files written before the change
+                    # type moved into the path hold both in-file, and
+                    # the reader prefers in-file columns per file
                     parts.extend(
                         _ChangeFilePartition(
                             os.path.join(self._table, rel),
                             v,
-                            (),  # changes/ dirs carry no hive values
+                            tuple(sorted(_partition_values(rel).items())),
                             cmap,
                         )
                         for rel in rec["change_files"]

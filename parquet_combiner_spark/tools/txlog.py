@@ -48,6 +48,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parquet_combiner_spark.operators.merge import CHANGE_TYPE
+
 _LOG_DIR = "_txlog"
 _VERSION_DIGITS = 20
 
@@ -1380,6 +1382,17 @@ def commit(
     compaction) and DML replaces inherit automatically, so the index
     never silently erodes.
 
+    ``change_files`` records a DML commit's CHANGE DATA (Delta's CDF
+    files): either a list of already-written change files
+    (table-relative), or :data:`CHANGE_TYPE` — then ``df`` carries a
+    ``_change_type`` string column, NULL on the commit's data rows and
+    the change class on its change rows, and ONE write lands both,
+    partitioned by that column: the data directory's files publish as
+    ``add``, every other directory's as ``change_files``. Schema
+    checks, CHECK constraints, zone maps and bloom sidecars see the
+    data rows only; data files hold exactly the table's physical
+    columns, and the change type rides the path.
+
     ``partition_by`` lays the data files out Hive-style
     (``col=value/`` directories — what a 100 TB events table does
     with its date column): reads prune whole partitions from the
@@ -1418,6 +1431,13 @@ def commit(
             "rebase_bands must be a {column: (lo, hi)} dict or "
             f"ROW_PRESERVING ({ROW_PRESERVING!r}), got {rebase_bands!r}"
         )
+    # the change-type split: ``out`` is what the ONE write lands (data
+    # rows plus change rows), ``df`` the data rows every table check
+    # below applies to
+    split = change_files == CHANGE_TYPE
+    out = df
+    if split:
+        df = df.drop(CHANGE_TYPE)
     last = _last_commit(table)
     # partition spec: table metadata with schema-like enforcement —
     # appends/replaces inherit the active spec (a conflicting caller
@@ -1645,16 +1665,17 @@ def commit(
         # a row violates only when the expression is FALSE — NULL
         # passes. Violation counts ride the write job itself as an
         # Observation, so enforcement costs ZERO extra passes over the
-        # data (Delta does the same with write-job metrics).
+        # data (Delta does the same with write-job metrics). Change
+        # rows are history, not table rows: only data rows count.
+        def violates(expr):
+            bad = ~F.coalesce(F.expr(expr), F.lit(True))
+            return F.col(CHANGE_TYPE).isNull() & bad if split else bad
+
         obs = Observation()
-        df = df.observe(
+        out = out.observe(
             obs,
             *[
-                F.sum(
-                    F.when(
-                        ~F.coalesce(F.expr(expr), F.lit(True)), 1
-                    ).otherwise(0)
-                ).alias(name)
+                F.sum(F.when(violates(expr), 1).otherwise(0)).alias(name)
                 for name, expr in sorted(constraints.items())
             ],
         )
@@ -1668,20 +1689,23 @@ def commit(
         if last and action != "overwrite"
         else {}
     )
-    write_df = df
+    write_df = out
     if cmap:
         from pyspark.sql import functions as F
 
-        write_df = df.select(
-            *[F.col(c).alias(cmap.get(c, c)) for c in df.columns]
+        write_df = out.select(
+            *[F.col(c).alias(cmap.get(c, c)) for c in out.columns]
         )
     commit_id = uuid.uuid4().hex
     rel_dir = os.path.join("data", commit_id)
     out_dir = os.path.join(table, rel_dir)
-    if spec:
+    if spec or split:
         from pyspark.sql import functions as F
 
-        part_cols = []
+        # the change type leads: data rows (NULL) land under
+        # _change_type=__HIVE_DEFAULT_PARTITION__/, each change class
+        # under its own directory, all in one write action
+        part_cols = [CHANGE_TYPE] if split else []
         for kind, param, src, derived in spec_fields:
             phys = cmap.get(src, src)
             if kind == "identity":
@@ -1726,6 +1750,11 @@ def commit(
                 )
             )
     added = _list_added(table, rel_dir)
+    if split:
+        change_files = [
+            r for r in added if _partition_values(r).get(CHANGE_TYPE)
+        ]
+        added = [r for r in added if r not in set(change_files)]
     stats = (
         _collect_stats(table, added, eff_stats, spec, cmap)
         if eff_stats
@@ -1773,12 +1802,13 @@ def commit(
     if not data_change:
         record["data_change"] = False
     if change_files is not None:
-        # CDF: already-written change-data files (rows+_change_type)
-        # ride the record so table_changes_cdf serves row-level
-        # deltas without snapshot diffs (and vacuum keeps them alive).
-        # An explicit EMPTY list is recorded too: it means "this DML
-        # ran with cdf=True and changed zero rows" — a zero-delta
-        # commit the feed rides through, not missing change data.
+        # CDF: the change-data files (the split write's non-data
+        # partitions, or files a caller wrote) ride the record so
+        # table_changes_cdf serves row-level deltas without snapshot
+        # diffs (and vacuum keeps them alive). An explicit EMPTY list
+        # is recorded too: it means "this DML ran with cdf=True and
+        # changed zero rows" — a zero-delta commit the feed rides
+        # through, not missing change data.
         record["change_files"] = sorted(change_files)
     if dv_entries:
         record["dv"] = _encode_dv_entries(
@@ -4029,16 +4059,23 @@ def _delete_where_dv(
     )
     if not dv_entries:
         return base  # nothing newly deleted: publish no version
-    change_rels = None
+    meta = {"delete": {**meta_delete, "mode": "dv", "rows": n}}
     if cdf:
         from pyspark.sql import functions as F
 
-        change_rels = _write_change_files(
-            table,
+        # the deleted rows are the commit's only written rows: change
+        # rows of one split write, no data rows
+        return commit(
             _scan(spark, table, touched, schema, dvs, mapping)
             .where(cond)
-            .withColumn("_change_type", F.lit("delete")),
-            mapping,
+            .withColumn(CHANGE_TYPE, F.lit("delete")),
+            table,
+            action="dv",
+            dv_entries=dv_entries,
+            meta=meta,
+            expected_version=base,
+            change_files=CHANGE_TYPE,
+            rebase_bands=rebase_bands,
         )
     record = {
         "version": base + 1,
@@ -4047,12 +4084,10 @@ def _delete_where_dv(
         "schema": last["schema"],
         "commit_id": uuid.uuid4().hex,
         "ts": _next_commit_ts(table, last),
-        "meta": {"delete": {**meta_delete, "mode": "dv", "rows": n}},
+        "meta": meta,
         "dv": _encode_dv_entries(table, dv_entries),
         "sizes": {},
     }
-    if change_rels is not None:
-        record["change_files"] = sorted(change_rels)
     _carry_props(record, last)
     # metadata-only publish with benign-conflict rebase: a concurrent
     # pure append disjoint from the delete's bands re-points this same
@@ -4126,34 +4161,9 @@ def delete_where(
     )
 
 
+# where change files were written before they joined the data
+# write; vacuum still collects them
 _CHANGE_DIR = "changes"
-
-
-def _write_change_files(
-    table: str, change_df: DataFrame, mapping: dict
-) -> list[str]:
-    """Materialize a DML commit's CHANGE DATA (rows + ``_change_type``
-    — Delta's CDF ``_change_data`` files): written under
-    ``<table>/changes/<uuid>/`` BEFORE the commit record publishes
-    (losers/crashes leave only vacuum garbage, the same
-    data-before-log story as every other write), under PHYSICAL
-    column names so readers resolve them through the same column
-    mapping as data files. Returns the table-relative paths for the
-    record's ``change_files`` field. Cost: one extra write of
-    O(changed rows) — the price Delta's CDF pays for giving
-    consumers row-level deltas without snapshot diffs."""
-    from pyspark.sql import functions as F
-
-    if mapping:
-        change_df = change_df.select(
-            *[
-                F.col(c).alias(mapping.get(c, c))
-                for c in change_df.columns
-            ]
-        )
-    rel_dir = os.path.join(_CHANGE_DIR, uuid.uuid4().hex)
-    change_df.write.mode("error").parquet(os.path.join(table, rel_dir))
-    return _list_added(table, rel_dir)
 
 
 def table_changes_cdf(
@@ -4173,7 +4183,12 @@ def table_changes_cdf(
 
     Per commit: appends contribute their added rows as ``insert``;
     DML commits contribute their recorded ``change_files`` (written
-    by the verbs when called with ``cdf=True``); maintenance
+    by the verbs, in the same write as their data files, when called
+    with ``cdf=True``). A change file's ``_change_type`` comes from
+    its ``_change_type=<class>`` path segment, or, for files written
+    before the change type moved into the path, from the column in
+    the file — the per-file rule :func:`_physical_reader` applies to
+    every partition column; maintenance
     rewrites (``data_change=False``) and ALTER-shaped republishes
     contribute nothing. A data-changing commit WITHOUT change files
     raises — the consumer must fall back to :func:`table_changes` or
@@ -4199,61 +4214,37 @@ def table_changes_cdf(
             continue
         if rec.get("data_change") is False:
             continue  # compaction: rows rearranged, none changed
-        mapping = dict(rec.get("column_mapping", {}))
         if rec["action"] == "append":
-            if not rec["add"]:
-                continue
-            frames.append(
-                _scan(
-                    spark, table,
-                    [os.path.join(table, r) for r in rec["add"]],
-                    rec["schema"], {}, mapping,
-                )
-                .withColumn("_change_type", F.lit("insert"))
-                .withColumn(
-                    "_commit_version", F.lit(v).cast("long")
-                )
-            )
+            rels, schema = rec["add"], rec["schema"]
+        elif rec.get("change_files") is not None:
+            # an explicit empty list: DML ran with cdf=True but
+            # changed zero rows (zone-map touch, no matches) — a
+            # zero-delta commit, not missing change data
+            rels = rec["change_files"]
+            schema = f"{rec['schema']}, {CHANGE_TYPE} string"
+        elif _is_metadata_only_republish(table, rec):
             continue
-        if rec.get("change_files") is not None:
-            if not rec["change_files"]:
-                # explicit empty list: DML ran with cdf=True but
-                # changed zero rows (zone-map touch, no matches) —
-                # a zero-delta commit, not missing change data
-                continue
-            fields = _split_ddl(rec["schema"])
-            phys_ddl = ", ".join(
-                f"{mapping.get(n, n)} {t}" for n, t in fields
+        else:
+            raise ValueError(
+                f"version {v} of {table} is a {rec['action']} with no "
+                "recorded change data; run DML with cdf=True, or fall "
+                "back to table_changes (snapshot diff)"
             )
-            df = spark.read.schema(
-                f"{phys_ddl}, _change_type string"
-            ).parquet(
-                *[os.path.join(table, r) for r in rec["change_files"]]
-            )
-            frames.append(
-                df.select(
-                    *[
-                        F.col(mapping.get(n, n)).alias(n)
-                        for n, _ in fields
-                    ],
-                    "_change_type",
-                )
-                .withColumn("_commit_version", F.lit(v).cast("long"))
-            )
+        if not rels:
             continue
-        if _is_metadata_only_republish(table, rec):
-            continue
-        raise ValueError(
-            f"version {v} of {table} is a {rec['action']} with no "
-            "recorded change data; run DML with cdf=True, or fall "
-            "back to table_changes (snapshot diff)"
+        df = _scan(
+            spark, table, [os.path.join(table, r) for r in rels], schema,
+            {}, dict(rec.get("column_mapping", {})),
+        )
+        if rec["action"] == "append":
+            df = df.withColumn(CHANGE_TYPE, F.lit("insert"))
+        frames.append(
+            df.withColumn("_commit_version", F.lit(v).cast("long"))
         )
     if not frames:
-        base = spark.createDataFrame([], empty_schema or "x int")
-        return (
-            base.withColumn("_change_type", F.lit(""))
-            .withColumn("_commit_version", F.lit(0).cast("long"))
-            .limit(0)
+        return spark.createDataFrame(
+            [], f"{empty_schema or 'x int'}, {CHANGE_TYPE} string, "
+            "_commit_version bigint",
         )
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
@@ -4337,32 +4328,29 @@ def _delete_rows(
                 spark, table, base, touched, schema, dvs, mapping,
                 cond, meta, max_dv_rows, cdf=cdf, rebase_bands=bands,
             )
-        change_rels = None
-        if cdf:
-            change_rels = _write_change_files(
-                table,
-                _scan(spark, table, touched, schema, dvs, mapping)
-                .where(cond)
-                .withColumn("_change_type", F.lit("delete")),
-                mapping,
-            )
         # survivors = NOT coalesce(pred, false): FALSE and NULL rows
         # stay — a bare ~pred is NULL for NULL-predicate rows (a NULL
         # column under a band) and the WHERE would silently drop them
         # (ADVICE r8, high). The read goes through _scan so rows
         # already deleted by a vector stay deleted in the rewrite.
-        survivors = _scan(
-            spark, table, touched, schema, dvs, mapping
-        ).where(~F.coalesce(cond, F.lit(False)))
+        # With cdf every row is written: survivors as data rows, the
+        # deleted ones as change rows of the same write.
+        rows = _scan(spark, table, touched, schema, dvs, mapping)
+        hit = F.coalesce(cond, F.lit(False))
+        rows = (
+            rows.withColumn(CHANGE_TYPE, F.when(hit, F.lit("delete")))
+            if cdf
+            else rows.where(~hit)
+        )
         return commit(
-            survivors,
+            rows,
             table,
             action="replace",
             remove=[os.path.relpath(f, table) for f in touched],
             meta={"delete": meta},
             expected_version=base,
             stats_cols=stats_cols,
-            change_files=change_rels,
+            change_files=CHANGE_TYPE if cdf else None,
             rebase_bands=bands,
         )
 
@@ -4442,6 +4430,39 @@ def _apply_set_preimage(df: DataFrame, cond, set_exprs: dict) -> DataFrame:
     return df.select(*out)
 
 
+def _updated(df: DataFrame, cond, set_exprs: dict, cdf: bool) -> DataFrame:
+    """The rows an UPDATE writes: ``df`` with ``set_exprs`` applied
+    where ``cond`` is TRUE (:func:`_apply_set_preimage`; ``cond=None``
+    updates every row). With ``cdf`` each updated row also yields its
+    ``update_preimage`` and ``update_postimage`` change rows, with
+    ``_change_type`` NULL on the data rows — the frame of one split
+    :func:`commit`, from one scan."""
+    if not cdf:
+        return _apply_set_preimage(df, cond, set_exprs)
+    from pyspark.sql import functions as F
+
+    from parquet_combiner_spark.operators.merge import (
+        change_entry,
+        explode_changes,
+    )
+
+    cols = df.columns
+    hit = F.lit(True) if cond is None else F.coalesce(cond, F.lit(False))
+    pre = df.select(*cols, F.struct(*cols).alias("__pre"), hit.alias("__hit"))
+    hit = F.col("__hit")
+    new = _apply_set_preimage(pre, hit, set_exprs)
+    post = F.struct(*cols)
+    return explode_changes(
+        new,
+        F.array(
+            change_entry(post, None),
+            change_entry(F.col("__pre"), "update_preimage", hit),
+            change_entry(post, "update_postimage", hit),
+        ),
+        cols,
+    )
+
+
 def _update_where_dv(
     spark: SparkSession,
     table: str,
@@ -4474,8 +4495,6 @@ def _update_where_dv(
     deleted row through its append half. The appended-row frame reads
     through :func:`_scan` with the same predicate, so the two halves
     of the commit cover exactly the same live row set."""
-    from pyspark.sql import functions as F
-
     dv_entries, _, n_live = _dv_positions(
         spark, table, touched, schema, dvs, mapping, cond, max_dv_rows,
         "update",
@@ -4486,21 +4505,10 @@ def _update_where_dv(
     # predicate, same files) with the SET expressions applied — no
     # when() needed, every row here matched; one pre-image select so
     # dependent SETs (SET a=b, b=a) swap like SQL
-    pre = _scan(spark, table, touched, schema, dvs, mapping).where(cond)
-    upd = _apply_set_preimage(pre, None, set_exprs)
-    change_rels = None
-    if cdf:
-        change_rels = _write_change_files(
-            table,
-            pre.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                upd.withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            ),
-            mapping,
-        )
+    upd = _updated(
+        _scan(spark, table, touched, schema, dvs, mapping).where(cond),
+        None, set_exprs, cdf,
+    )
     return commit(
         upd,
         table,
@@ -4509,7 +4517,7 @@ def _update_where_dv(
         meta={"update": {**meta_update, "mode": "dv", "rows": n_live}},
         expected_version=base,
         stats_cols=stats_cols,
-        change_files=change_rels,
+        change_files=CHANGE_TYPE if cdf else None,
         rebase_bands=rebase_bands,
     )
 
@@ -4531,8 +4539,6 @@ def _update_rows(
     ``(bands, points, row condition, commit meta)``, prunes, and
     lands a merge-on-read (:func:`_update_where_dv`) or copy-on-write
     commit; the whole attempt retries on :class:`CommitConflict`."""
-    from pyspark.sql import functions as F
-
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be cow|dv, got {mode!r}")
 
@@ -4561,27 +4567,9 @@ def _update_rows(
                 cond, set_exprs, meta, max_dv_rows, stats_cols,
                 cdf=cdf, rebase_bands=bands,
             )
-        change_rels = None
-        if cdf:
-            pre = _scan(
-                spark, table, touched, schema, dvs, mapping
-            ).where(cond)
-            post = _apply_set_preimage(pre, None, set_exprs)
-            change_rels = _write_change_files(
-                table,
-                pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                mapping,
-            )
-        df = _apply_set_preimage(
+        df = _updated(
             _scan(spark, table, touched, schema, dvs, mapping),
-            cond,
-            set_exprs,
+            cond, set_exprs, cdf,
         )
         return commit(
             df,
@@ -4591,7 +4579,7 @@ def _update_rows(
             meta={"update": meta},
             expected_version=base,
             stats_cols=stats_cols,
-            change_files=change_rels,
+            change_files=CHANGE_TYPE if cdf else None,
             rebase_bands=bands,
         )
 
@@ -4670,105 +4658,6 @@ def update_where(
     )
 
 
-def _merge_change_frame(
-    base_df: DataFrame,
-    merged: DataFrame,
-    keys: Sequence[str],
-    version_cols: Sequence[str],
-) -> DataFrame:
-    """Row-level CHANGE classification for a MERGE commit (Delta's
-    CDF classes): diff the merge's INPUT state against its OUTPUT —
-    both already restricted to the zone-map-touched files plus the
-    batch, so the diff is O(merge scope), never a snapshot diff.
-
-    Exact replay invariant: ``base − deletes − update_preimages +
-    update_postimages + inserts == merged`` as multisets. Rows that
-    LEAVE the state (present in base, absent verbatim from the
-    output) pair with the arriving winner of their key as
-    update_preimage/update_postimage; a key whose winner vanished
-    (tombstone) or whose extra duplicate rows leave while the winner
-    stays put yields plain deletes; a winner on a key with no
-    preimage is an insert. On the key-unique base every state table
-    maintains (merge's own output is one row per key), this reduces
-    to exactly Delta MERGE's insert/delete/update classes."""
-    from functools import reduce
-    from operator import and_
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    cols = list(base_df.columns)
-    # merged derives from base_df, so every cross-reference below is
-    # a self-join; renaming one side through alias projections mints
-    # fresh attribute ids and sidesteps ambiguous-self-join analysis
-    old = base_df.select(*[F.col(c).alias(f"__old_{c}") for c in cols])
-
-    def row_eq(a: DataFrame) -> object:
-        return reduce(
-            and_, [a[c].eqNullSafe(old[f"__old_{c}"]) for c in cols]
-        )
-
-    def key_eq(a: DataFrame, b: DataFrame, b_pfx: str = "") -> object:
-        return reduce(
-            and_,
-            [a[k].eqNullSafe(b[f"{b_pfx}{k}"]) for k in keys],
-        )
-
-    # arriving = winners not present verbatim in the input state
-    arr = merged.join(old, row_eq(merged), "left_anti")
-    # leaving = input rows not present verbatim in the output
-    lv = old.join(
-        merged,
-        reduce(
-            and_,
-            [old[f"__old_{c}"].eqNullSafe(merged[c]) for c in cols],
-        ),
-        "left_anti",
-    )
-    # arriving rows split: key had a preimage → update_postimage,
-    # fresh key → insert
-    old_keys = old.select(*[f"__old_{k}" for k in keys]).distinct()
-    post = arr.join(old_keys, key_eq(arr, old_keys, "__old_"), "left_semi")
-    ins = arr.join(old_keys, key_eq(arr, old_keys, "__old_"), "left_anti")
-    # leaving rows split: keys with an arriving winner pair their
-    # LATEST-versioned row as the preimage (extra duplicate-key rows
-    # are deletes); keys with no arriving winner are deletes
-    arr_keys = arr.select(*keys).distinct()
-    lv_on = reduce(
-        and_,
-        [lv[f"__old_{k}"].eqNullSafe(arr_keys[k]) for k in keys],
-    )
-    lv_upd = lv.join(arr_keys, lv_on, "left_semi")
-    lv_del = lv.join(arr_keys, lv_on, "left_anti")
-    rn = F.row_number().over(
-        Window.partitionBy(*[f"__old_{k}" for k in keys]).orderBy(
-            *[
-                F.col(f"__old_{c}").desc_nulls_last()
-                for c in version_cols
-            ]
-        )
-    )
-    lv_upd = lv_upd.withColumn("__rn", rn)
-    pre = lv_upd.where(F.col("__rn") == 1)
-    dup_del = lv_upd.where(F.col("__rn") > 1)
-
-    def tag_old(df: DataFrame, t: str) -> DataFrame:
-        return df.select(
-            *[F.col(f"__old_{c}").alias(c) for c in cols]
-        ).withColumn("_change_type", F.lit(t))
-
-    def tag_new(df: DataFrame, t: str) -> DataFrame:
-        return df.select(*cols).withColumn("_change_type", F.lit(t))
-
-    return (
-        tag_old(pre, "update_preimage")
-        .unionByName(tag_new(post, "update_postimage"))
-        .unionByName(tag_new(ins, "insert"))
-        .unionByName(tag_old(lv_del, "delete"))
-        .unionByName(tag_old(dup_del, "delete"))
-    )
-
-
 def merge_into(
     spark: SparkSession,
     table: str,
@@ -4825,12 +4714,13 @@ def merge_into(
     the already-applied row).
 
     ``cdf=True`` records row-level change files (Delta's CDF on
-    MERGE): :func:`_merge_change_frame` diffs the merge's input
-    against its output — O(touched files + batch), never a snapshot
-    diff — into insert / delete / update_preimage /
-    update_postimage rows served by :func:`table_changes_cdf`, so
-    the most common CDC driver feeds downstream consumers without
-    full-table rescans.
+    MERGE): :func:`~parquet_combiner_spark.operators.merge.
+    merge_upsert_cdf` classifies insert / delete / update_preimage /
+    update_postimage rows inside the merge's own per-key aggregate
+    (O(touched files + batch), never a snapshot diff), and the
+    commit lands data and change rows in ONE write; the feed is
+    served by :func:`table_changes_cdf`, so the most common CDC
+    driver feeds downstream consumers without full-table rescans.
     """
     if prune_col is None:
         prune_col = keys[0]
@@ -4841,7 +4731,10 @@ def merge_into(
         )
     from pyspark.sql import functions as F
 
-    from parquet_combiner_spark.operators.merge import merge_upsert
+    from parquet_combiner_spark.operators.merge import (
+        merge_upsert,
+        merge_upsert_cdf,
+    )
 
     bounds = updates.agg(
         F.min(prune_col).alias("lo"),
@@ -4960,29 +4853,16 @@ def merge_into(
             )
         # through the deletion vectors: DV-deleted rows must not be
         # merge bases nor reappear in the rewritten files
-        base_df = _scan(spark, table, touched, schema, dvs, mapping)
-        merged = merge_upsert(
-            base_df,
+        # with cdf, the change rows come out of the merge's own
+        # aggregate and share its one write
+        merged = (merge_upsert_cdf if cdf else merge_upsert)(
+            _scan(spark, table, touched, schema, dvs, mapping),
             updates,
             keys,
             version_cols,
             op_col=op_col,
             delete_op=delete_op,
         )
-        change_rels = None
-        if cdf:
-            # row-level diff of the merge's input vs output, both
-            # bounded to the touched files + batch (O(merge scope)).
-            # NOT persisted (r15 optimization round, probed): the
-            # change-frame plan's four references to ``merged``
-            # already share one computation through ReusedExchange,
-            # so a persist only adds cache-materialization cost —
-            # the A/B read neutral-to-worse at sf0.1.
-            change_rels = _write_change_files(
-                table,
-                _merge_change_frame(base_df, merged, keys, version_cols),
-                mapping,
-            )
         return commit(
             merged,
             table,
@@ -4999,7 +4879,7 @@ def merge_into(
             },
             expected_version=base,
             stats_cols=stats_cols,
-            change_files=change_rels,
+            change_files=CHANGE_TYPE if cdf else None,
             # benign-conflict rebase: an append whose files are
             # provably outside the batch's key band holds no row this
             # merge could match OR collide with (inserts included —
@@ -5268,25 +5148,25 @@ def vacuum(
     referenced |= {
         f for c in log for f in c.get("change_files", [])
     }
-    data_root = os.path.join(table, "data")
     cutoff = _time.time() - min_age_seconds
     garbage: list[str] = []
-    if os.path.isdir(data_root):
-        for cdir in os.listdir(data_root):
-            # partitioned commits nest col=value dirs below the
-            # commit dir — walk, don't listdir one level
-            for dirpath, _, names in os.walk(
-                os.path.join(data_root, cdir)
-            ):
-                for f in names:
-                    full = os.path.join(dirpath, f)
-                    rel = os.path.relpath(full, table)
-                    if (
-                        f.endswith(".parquet")
-                        and rel not in referenced
-                        and os.path.getmtime(full) <= cutoff
-                    ):
-                        garbage.append(rel)
+    # data and CDF change files (partitioned commits nest col=value
+    # dirs below the commit dir — walk, don't listdir one level), and
+    # the change files older DML wrote under changes/<uuid>/: the same
+    # data-before-log story — unreferenced (crashed/raced commit,
+    # expired history) → garbage; referenced → the snapshot and the
+    # feed stay readable
+    for top in ("data", _CHANGE_DIR):
+        for dirpath, _, names in os.walk(os.path.join(table, top)):
+            for f in names:
+                full = os.path.join(dirpath, f)
+                rel = os.path.relpath(full, table)
+                if (
+                    f.endswith(".parquet")
+                    and rel not in referenced
+                    and os.path.getmtime(full) <= cutoff
+                ):
+                    garbage.append(rel)
     # deletion-vector SIDECARS: referenced by any retained commit
     # record or checkpoint → alive; otherwise (expired history,
     # superseded vectors whose records were expired) → garbage, which
@@ -5320,21 +5200,6 @@ def vacuum(
                 )
                 if isinstance(ref, dict) and "sidecar" in ref:
                     bloom_refs.add(ref["sidecar"])
-    # CDF change files live under changes/<uuid>/ with the same
-    # data-before-log story: unreferenced (crashed/raced DML, expired
-    # history) → garbage; referenced → the feed stays replayable
-    ch_root = os.path.join(table, _CHANGE_DIR)
-    if os.path.isdir(ch_root):
-        for dirpath, _, names in os.walk(ch_root):
-            for f in names:
-                full = os.path.join(dirpath, f)
-                rel = os.path.relpath(full, table)
-                if (
-                    f.endswith(".parquet")
-                    and rel not in referenced
-                    and os.path.getmtime(full) <= cutoff
-                ):
-                    garbage.append(rel)
     dv_root = os.path.join(table, _DV_DIR)
     if os.path.isdir(dv_root):
         for f in os.listdir(dv_root):

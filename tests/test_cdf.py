@@ -1,12 +1,15 @@
 """Change data feed from RECORDED change files (Delta's CDF): DML
-verbs called with ``cdf=True`` write (rows + ``_change_type``) files
-under ``changes/`` and reference them from the commit record;
-``table_changes_cdf`` then serves row-level deltas — insert /
-delete / update_preimage / update_postimage, stamped
-``_commit_version`` — reading O(changed rows) instead of diffing two
-full snapshots. Maintenance (dataChange=false) and ALTER commits
-contribute nothing; a data-changing commit without change files
-refuses loudly."""
+verbs called with ``cdf=True`` write their change rows (insert /
+delete / update_preimage / update_postimage) in the SAME Parquet
+write as their data rows, partitioned by ``_change_type``: the data
+partition's files are the commit's ``add``, the others its
+``change_files``, and the change type rides the path.
+``table_changes_cdf`` then serves row-level deltas stamped
+``_commit_version``, reading O(changed rows) instead of diffing two
+full snapshots; change files written before the type moved into the
+path (an in-file ``_change_type`` column) still read back.
+Maintenance (dataChange=false) and ALTER commits contribute nothing;
+a data-changing commit without change files refuses loudly."""
 
 from __future__ import annotations
 
@@ -336,3 +339,282 @@ def test_merge_into_cdf_duplicate_key_base_still_replays(
         for r in txlog.read_table(spark, t).collect()
     )
     assert replayed == now == [(1, "new", 5), (2, "b", 1)]
+
+
+def _kv_table(spark, table, n=20):
+    txlog.commit(
+        spark.createDataFrame(
+            [Row(k=i, v=f"v{i}", ver=1) for i in range(n)],
+            "k int, v string, ver int",
+        ).coalesce(1),
+        table,
+        stats_cols=["k"],
+    )
+
+
+def _batch(spark, rows):
+    return spark.createDataFrame(rows, "k int, val string, ver int, op string")
+
+
+_VERBS = {
+    "merge": lambda spark, t: txlog.merge_into(
+        spark, t,
+        _batch(
+            spark, [(1, "u", 2, "U"), (2, None, 2, "D"), (50, "n", 1, "U")]
+        ),
+        keys=["k"], version_cols=["ver"], op_col="op", cdf=True,
+    ),
+    "cow_delete": lambda spark, t: txlog.delete_where_expr(
+        spark, t, "k < 3", cdf=True
+    ),
+    "cow_update": lambda spark, t: txlog.update_where_expr(
+        spark, t, "k < 3", {"val": "upper(val)"}, cdf=True
+    ),
+    "dv_update": lambda spark, t: txlog.update_where_expr(
+        spark, t, "k < 3", {"val": "upper(val)"}, mode="dv", cdf=True
+    ),
+    "dv_delete": lambda spark, t: txlog.delete_where_expr(
+        spark, t, "k < 3", mode="dv", cdf=True
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_VERBS))
+def test_cdf_dml_lands_data_and_change_files_in_one_write(
+    spark, tmp_path, verb
+):
+    """Every cdf=True DML verb runs ONE Parquet write: the commit's
+    data and change files share the one write directory the verb
+    creates, and every file — data or change — holds exactly the
+    table's physical columns (``v`` survives the rename to ``val``;
+    the change type rides the path, not the file)."""
+    import pyarrow.parquet as pq
+
+    def write_dirs():
+        return {
+            os.path.join(top, d)
+            for top in ("data", "changes")
+            if os.path.isdir(os.path.join(t, top))
+            for d in os.listdir(os.path.join(t, top))
+        }
+
+    t = str(tmp_path / "t")
+    _kv_table(spark, t)
+    txlog.rename_column(t, "v", "val")
+    before = write_dirs()
+    _VERBS[verb](spark, t)
+    rec = txlog._last_commit(t)
+    assert rec["version"] == 2 and rec["change_files"]
+    # every write action lands in a directory of its own
+    write_dir = os.path.join("data", rec["commit_id"])
+    assert write_dirs() - before == {write_dir}
+    rels = rec["add"] + rec["change_files"]
+    assert all(r.startswith(write_dir + os.sep) for r in rels)
+    for r in rels:
+        assert pq.read_schema(os.path.join(t, r)).names == ["k", "v", "ver"]
+    kinds = {txlog._partition_values(r)["_change_type"] for r in rels}
+    assert kinds == {
+        r["_change_type"]
+        for r in txlog.table_changes_cdf(spark, t, 1).collect()
+    } | ({None} if rec["add"] else set())
+
+
+def test_cdf_split_write_enforces_constraints_on_data_rows(
+    spark, tmp_path
+):
+    """A CHECK violation in a cdf=True write raises and publishes
+    nothing; a valid one commits with its change rows, and only data
+    rows are checked."""
+    t = str(tmp_path / "t")
+    _kv_table(spark, t)
+    txlog.add_constraint(spark, t, "v_set", "length(v) > 0")
+    head = txlog.current_version(t)
+    with pytest.raises(txlog.ConstraintViolation, match="v_set"):
+        txlog.update_where_expr(spark, t, "k < 3", {"v": "''"}, cdf=True)
+    assert txlog.current_version(t) == head
+    txlog.merge_into(
+        spark, t,
+        spark.createDataFrame(
+            [(1, "w", 2, "U")], "k int, v string, ver int, op string"
+        ),
+        keys=["k"], version_cols=["ver"], op_col="op", cdf=True,
+    )
+    assert sorted(
+        (r.k, r.v, r._change_type)
+        for r in txlog.table_changes_cdf(spark, t, head).collect()
+    ) == [(1, "v1", "update_preimage"), (1, "w", "update_postimage")]
+    # change rows are history, not table rows: only data rows count
+    v = txlog.commit(
+        spark.createDataFrame(
+            [(30, "ok", 1, None), (31, "", 1, "delete")],
+            "k int, v string, ver int, _change_type string",
+        ),
+        t,
+        change_files=txlog.CHANGE_TYPE,
+    )
+    assert v == head + 2
+    assert txlog.read_table(spark, t).where("k >= 30").count() == 1
+
+
+def test_cdf_merge_edge_cases(spark, tmp_path):
+    """A merge whose tombstones empty every touched file publishes a
+    replace that adds nothing; a merge that changes nothing (a
+    replayed batch) still records change_files: []."""
+    t = str(tmp_path / "t")
+    _kv_table(spark, t, n=3)
+    gone = spark.createDataFrame(
+        [(k, None, 9, "D") for k in range(3)],
+        "k int, v string, ver int, op string",
+    )
+    txlog.merge_into(
+        spark, t, gone, keys=["k"], version_cols=["ver"], op_col="op",
+        cdf=True,
+    )
+    rec = txlog._last_commit(t)
+    assert rec["action"] == "replace" and rec["add"] == []
+    assert len(rec["remove"]) == 1
+    assert txlog.read_table(spark, t).count() == 0
+    assert sorted(_feed(spark, t)) == [
+        (k, f"v{k}", "delete", 1) for k in range(3)
+    ]
+    u = str(tmp_path / "u")
+    _kv_table(spark, u, n=3)
+    batch = spark.createDataFrame(
+        [(1, "w", 2, "U")], "k int, v string, ver int, op string"
+    )
+    for _ in range(2):
+        txlog.merge_into(
+            spark, u, batch, keys=["k"], version_cols=["ver"],
+            op_col="op", cdf=True,
+        )
+    assert txlog._last_commit(u)["change_files"] == []
+    assert [x[2] for x in _feed(spark, u, after=1)] == []
+
+
+def test_cdf_reads_old_layout_change_files(spark, tmp_path):
+    """Change files written the earlier way — a separate write under
+    changes/ with the type in an in-file ``_change_type`` column,
+    recorded through commit(change_files=[...]) — read back next to
+    a new-layout merge, through table_changes_cdf and an
+    availableNow readChangeFeed stream alike."""
+    import uuid
+
+    from parquet_combiner_spark.sources.txtable_source import (
+        TxTableChangesDataSource,
+    )
+
+    t = str(tmp_path / "t")
+    _kv_table(spark, t, n=6)
+    snap = txlog.read_table(spark, t)
+    rel_dir = os.path.join("changes", uuid.uuid4().hex)
+    # the earlier layout: a write of its own, the type in the file
+    snap.where("k < 2").withColumn(
+        "_change_type", F.lit("delete")
+    ).write.parquet(os.path.join(t, rel_dir))
+    txlog.commit(
+        snap.where("k >= 2"),
+        t,
+        action="replace",
+        remove=[os.path.relpath(f, t) for f in txlog._snapshot_files(t, 0)[0]],
+        expected_version=0,
+        change_files=txlog._list_added(t, rel_dir),
+    )
+    txlog.merge_into(
+        spark, t,
+        spark.createDataFrame(
+            [(3, "w", 2, "U"), (9, "n", 1, "U")],
+            "k int, v string, ver int, op string",
+        ),
+        keys=["k"], version_cols=["ver"], op_col="op", cdf=True,
+    )
+    want = [
+        (0, "v0", "delete", 1),
+        (1, "v1", "delete", 1),
+        (3, "v3", "update_preimage", 2),
+        (3, "w", "update_postimage", 2),
+        (9, "n", "insert", 2),
+    ]
+    assert _feed(spark, t) == want
+    try:
+        spark.dataSource.register(TxTableChangesDataSource)
+    except Exception:
+        pass
+    rows: list = []
+    q = (
+        spark.readStream.format("txtable_changes")
+        .option("path", t)
+        .option("from_version", "0")
+        .option("read_change_feed", "true")
+        .load()
+        .writeStream.foreachBatch(
+            lambda df, _: rows.extend(
+                (r.k, r.v, r._change_type, r._commit_version)
+                for r in df.collect()
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sorted(rows) == want
+
+
+def test_cdc_cycles_change_files_read_back_in_duckdb(spark, tmp_path):
+    """Three CDC cycles shaped like the benchmark's (85% upserts of
+    live keys, 10% tombstones, 5% fresh inserts, cdf=True): replaying
+    table_changes_cdf onto the base reconstructs read_table, and
+    DuckDB, reading the recorded change files with hive partitioning,
+    counts the same rows per _change_type as Spark."""
+    import random
+    from collections import Counter
+
+    import duckdb
+
+    t = str(tmp_path / "t")
+    n = 200
+    _kv_table(spark, t, n=n)
+    state = Counter((k, f"v{k}", 1) for k in range(n))
+    live, fresh = list(range(n)), n
+    for c in range(1, 4):
+        picks = random.Random(c).sample(live, 38)
+        rows = [(k, f"c{c}", c + 1, "U") for k in picks[:34]]
+        rows += [(k, None, c + 1, "D") for k in picks[34:]]
+        rows += [(fresh + j, f"n{c}", c + 1, "U") for j in range(2)]
+        txlog.merge_into(
+            spark, t,
+            spark.createDataFrame(rows, "k int, v string, ver int, op string"),
+            keys=["k"], version_cols=["ver"], op_col="op", cdf=True,
+        )
+        live = [k for k in live if k not in picks[34:]] + [fresh, fresh + 1]
+        fresh += 2
+    feed = txlog.table_changes_cdf(spark, t, 0).collect()
+    for v in (1, 2, 3):
+        for r in feed:
+            if r._commit_version == v:
+                row = (r.k, r.v, r.ver)
+                if r._change_type in ("delete", "update_preimage"):
+                    state[row] -= 1
+                else:
+                    state[row] += 1
+    assert +state == Counter(
+        (r.k, r.v, r.ver) for r in txlog.read_table(spark, t).collect()
+    )
+    spark_counts = Counter(r._change_type for r in feed)
+    assert spark_counts == {
+        "update_preimage": 102, "update_postimage": 102,
+        "delete": 12, "insert": 6,
+    }
+    files = [
+        os.path.join(t, r)
+        for rec in txlog._read_log(t)
+        for r in rec.get("change_files", [])
+    ]
+    listed = ", ".join(f"'{f}'" for f in files)
+    duck = dict(
+        duckdb.connect().execute(
+            f"SELECT _change_type, count(*) FROM read_parquet([{listed}], "
+            "hive_partitioning = true) GROUP BY 1"
+        ).fetchall()
+    )
+    assert duck == dict(spark_counts)
