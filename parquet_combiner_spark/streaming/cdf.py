@@ -15,10 +15,18 @@ Two consumption surfaces, matched to what the consumer needs:
   feeds ``apply_fn`` one ``table_changes(v-1, v)`` DataFrame per
   commit (added/removed/changed per key), exactly what an
   incremental materialized-view or cache-invalidation consumer
-  applies. Each diff is a fully DISTRIBUTED job (metadata-resolved
-  snapshot reads + the content-hash diff join — payload never rides
-  the diff); only the loop over versions is driver work, O(commits).
-  Use when downstream is itself batch logic keyed per version.
+  applies. Each batch is built from what its commit recorded: an
+  append's added files, a deletion-vector delete's newly deleted
+  positions, a ``cdf=True`` DML's change files (hashing only the
+  change rows, one shuffle of keys). Appends and DV deletes cost key
+  scans and no shuffle. Other commits fall back to the content-hash
+  diff of the two snapshots: overwrites, RESTORE, CLONE, expiry
+  rebases, DML without ``cdf`` other than DV deletes, compaction and
+  schema or column-mapping changes. Both ways need keys unique in each
+  snapshot, and a NULL-key row is ``removed`` from the old side and
+  ``added`` on the new, as in the diff. Only the loop over versions
+  is driver work, O(commits). Use when downstream is itself batch
+  logic keyed per version.
 """
 
 from __future__ import annotations
@@ -49,7 +57,10 @@ def drain_table_changes(
     ``txlog_sink``'s (query_id, epoch).
 
     Version 0's "previous snapshot" is the empty table, so its batch
-    classifies every key as ``added``. Expired history
+    classifies every key as ``added``. Each batch is
+    :func:`~parquet_combiner_spark.tools.txlog.table_changes` of one
+    commit, built from its record where the record says what
+    changed. Expired history
     (``expire_versions``) raises — the feed is replayable only while
     the log retains both endpoints of each step, Delta's own CDF
     retention rule.

@@ -19,8 +19,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _keyed_hash(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    payload = sorted(c for c in df.columns if c not in keys)
+def _row_hash(cols: Sequence[str], keys: Sequence[str]):
+    """The content hash of a row's NON-KEY columns among ``cols``, in
+    name order: the Column both sides of :func:`snapshot_diff`
+    compare (and ``txlog.table_changes`` computes over change rows)."""
+    payload = sorted(c for c in cols if c not in keys)
     # self-delimiting canonical form: each value serializes as
     # v<len>:<chars> (nulls as the single token n), so the
     # concatenation is uniquely parseable — no separator that could
@@ -33,10 +36,11 @@ def _keyed_hash(df: DataFrame, keys: Sequence[str]) -> DataFrame:
             F.lit("n"),
         )
 
-    return df.select(
-        *keys,
-        F.sha2(F.concat(*[token(c) for c in payload]), 256).alias("__h"),
-    )
+    return F.sha2(F.concat(*[token(c) for c in payload]), 256)
+
+
+def _keyed_hash(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    return df.select(*keys, _row_hash(df.columns, keys).alias("__h"))
 
 
 def snapshot_diff(
@@ -46,7 +50,11 @@ def snapshot_diff(
     change ∈ {added, removed, changed, unchanged}. Requires ``keys``
     unique in each snapshot (validate_table first) and identical
     non-key column SETS (order-independent); raises on column drift
-    because a silent schema change is itself the regression."""
+    because a silent schema change is itself the regression.
+
+    A NULL key equals nothing, so the join never matches it: each
+    old row with a NULL in any key column is ``removed`` and each new
+    one ``added``, even when the row itself is unchanged."""
     o_cols = sorted(c for c in old.columns if c not in keys)
     n_cols = sorted(c for c in new.columns if c not in keys)
     if o_cols != n_cols:

@@ -500,7 +500,7 @@ def _decode_dv_entry(table: str, val) -> list[int]:
 
 
 def _snapshot(
-    table: str, version: int | None
+    table: str, version: int | None, prior: dict | None = None
 ) -> tuple[list[str], str, dict, dict, dict, dict]:
     """ONE log replay → (data file paths, schema DDL, rel_path→stats,
     rel_path→bytes, rel_path→deleted positions, COLUMN MAPPING) as of
@@ -535,7 +535,14 @@ def _snapshot(
     never depends on its freshness (later commits replay on top),
     and an expired-history rebase (action ``overwrite``) resets the
     state mid-replay, so even a checkpoint predating an expiry is
-    harmless."""
+    harmless.
+
+    ``prior`` (a dict to fill) asks for the step INTO ``version`` in
+    the same pass: it receives the ``schema``, ``mapping`` and raw
+    ``dvs`` of the state one version back, and the ``record`` that
+    steps out of it (left unset when the log holds no such record) —
+    what :func:`table_changes` needs to build a batch from the
+    record."""
     version = _resolve_version(table, version)
     files: list[str] = []
     schema = ""
@@ -544,7 +551,9 @@ def _snapshot(
     dvs: dict = {}
     mapping: dict = {}
     after = None
-    ck = _checkpoint_at_or_below(table, version)
+    ck = _checkpoint_at_or_below(
+        table, version if prior is None else version - 1
+    )
     if ck is not None:
         files = list(ck["files"])
         schema = ck["schema"]
@@ -559,6 +568,10 @@ def _snapshot(
         mapping = dict(ck.get("column_mapping", {}))
         after = ck["version"]
     for commit in _read_log(table, after=after, through=version):
+        if prior is not None and commit["version"] == version:
+            prior.update(
+                schema=schema, mapping=mapping, dvs=dict(dvs), record=commit
+            )
         if commit["action"] == "overwrite":
             files = []
             stats = {}
@@ -758,6 +771,41 @@ def _physical_reader(
     return _read, phys_of, names
 
 
+def _dv_join(
+    spark: SparkSession, df: DataFrame, positions: dict, how: str
+) -> DataFrame:
+    """Join a physical scan ``df`` (:func:`_physical_reader`'s, so
+    ``_metadata`` is still reachable) against a broadcast (file,
+    position) frame built from ``positions`` (:func:`_file_key` →
+    positions): ``left_anti`` keeps the rows a deletion vector does
+    not mark (:func:`_scan`), ``left_semi`` only those it does
+    (:func:`table_changes`' deleted rows). Rows match on
+    :func:`_file_key_col` and ``_metadata.row_index``. The frame is
+    built from an Arrow table of one row per file whose position
+    array explodes JVM-side: it plans as a local table scan, so
+    building it runs no Spark job and broadcasting it no Python
+    worker."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    dv_df = spark.createDataFrame(
+        pa.table(
+            {
+                "__dv_path": list(positions),
+                "__dv_pos": pa.array(
+                    list(positions.values()), pa.list_(pa.int64())
+                ),
+            }
+        )
+    ).select("__dv_path", F.explode("__dv_pos").alias("__dv_pos"))
+    return df.join(
+        F.broadcast(dv_df),
+        (_file_key_col() == F.col("__dv_path"))
+        & (F.col("_metadata.row_index") == F.col("__dv_pos")),
+        how,
+    )
+
+
 def _scan(
     spark: SparkSession,
     table: str,
@@ -781,13 +829,8 @@ def _scan(
     riding the scan — no shuffle, no extra pass — and its build side
     is bounded by the DV-size guard at delete time.
 
-    The broadcast frame keys each file by :func:`_file_key`, the rule
-    :func:`_file_key_col` applies to the scanned rows, and is built
-    from an Arrow table of one row per DV'd file whose position array
-    explodes JVM-side: it plans as a local table scan, so building
-    the frame runs no Spark job and broadcasting it no Python worker.
+    The broadcast frame is :func:`_dv_join`'s.
     """
-    import pyarrow as pa
     from pyspark.sql import functions as F
 
     mapping = mapping or {}
@@ -804,20 +847,10 @@ def _scan(
     if clean:
         parts.append(_read(clean).select(*logical))
     if dirty:
-        dv_df = spark.createDataFrame(
-            pa.table(
-                {
-                    "__dv_path": [_file_key(by_rel[r]) for r in dirty],
-                    "__dv_pos": pa.array(
-                        list(dirty.values()), pa.list_(pa.int64())
-                    ),
-                }
-            )
-        ).select("__dv_path", F.explode("__dv_pos").alias("__dv_pos"))
-        kept = _read([by_rel[r] for r in dirty]).join(
-            F.broadcast(dv_df),
-            (_file_key_col() == F.col("__dv_path"))
-            & (F.col("_metadata.row_index") == F.col("__dv_pos")),
+        kept = _dv_join(
+            spark,
+            _read([by_rel[r] for r in dirty]),
+            {_file_key(by_rel[r]): pos for r, pos in dirty.items()},
             "left_anti",
         ).select(*logical)
         parts.append(kept)
@@ -1755,6 +1788,14 @@ def commit(
             r for r in added if _partition_values(r).get(CHANGE_TYPE)
         ]
         added = [r for r in added if r not in set(change_files)]
+    elif action == "replace" and len(added) == 1:
+        import pyarrow.parquet as pq
+
+        # an empty frame still writes one empty part file; a replace
+        # left with no rows publishes no file, as the split write does
+        only = pq.ParquetFile(os.path.join(table, added[0]))
+        if only.metadata.num_rows == 0:
+            added = []
     stats = (
         _collect_stats(table, added, eff_stats, spec, cmap)
         if eff_stats
@@ -1818,7 +1859,9 @@ def commit(
                 for rel, pos in dv_entries.items()
             },
         )
-    if stats:
+    if stats or eff_stats:
+        # with zone-map columns active the map rides the record even
+        # when the write added no file: the property applied to all
         record["stats"] = stats
     if spec:
         # the active layout rides EVERY record (like constraints), so
@@ -4251,6 +4294,146 @@ def table_changes_cdf(
     )
 
 
+def _record_changes(
+    spark: SparkSession,
+    table: str,
+    version: int,
+    keys: Sequence[str] | None,
+) -> DataFrame | None:
+    """:func:`table_changes` of the step into ``version``, built from
+    that commit's record; None when the record cannot say what
+    changed and the caller must diff the two snapshots. One log pass
+    resolves the new snapshot, the old one's schema, mapping and
+    vectors, and the record (:func:`_snapshot`'s ``prior``).
+
+    * append: the added files' keys are ``added``, the rest of the
+      snapshot's ``unchanged`` — two key scans, no hash, no shuffle;
+    * DV-only delete: the snapshot's keys are ``unchanged``, and the
+      rows at the positions the record newly deletes, found by a
+      broadcast semi-join (:func:`_dv_join`), are ``removed``;
+    * ``cdf=True`` DML: only the change rows are hashed (delete and
+      preimage rows are the old side, insert and postimage rows the
+      new), and one ``groupBy(keys)`` over them and the snapshot's
+      keys classifies each key — the one shuffle carries keys.
+
+    Rows with a NULL key explode into ``removed`` + ``added``, the
+    snapshot diff's NULL rule."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from parquet_combiner_spark.tools.diff import _row_hash
+
+    prior: dict = {}
+    files, schema, _, _, dvs, mapping = _snapshot(table, version, prior)
+    rec = prior.get("record")
+    if (
+        rec is None
+        or rec.get("data_change") is False
+        or mapping != prior["mapping"]
+        or (
+            version
+            and sorted(_split_ddl(schema))
+            != sorted(_split_ddl(prior["schema"]))
+        )
+    ):
+        return None
+    keys = list(keys or [_split_ddl(prior["schema"] or schema)[0][0]])
+    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+
+    def unchanged(rows: DataFrame) -> DataFrame:
+        return rows.select(
+            *keys,
+            F.explode(
+                F.when(null_key, F.array(F.lit("removed"), F.lit("added")))
+                .otherwise(F.array(F.lit("unchanged")))
+            ).alias("change"),
+        )
+
+    def scan(paths) -> DataFrame:
+        return _scan(spark, table, paths, schema, dvs, mapping)
+
+    action, add = rec["action"], rec["add"]
+    if action == "append":
+        new = {os.path.join(table, r) for r in add}
+        return scan([f for f in files if f in new]).select(
+            *keys, F.lit("added").alias("change")
+        ).unionByName(
+            unchanged(scan([f for f in files if f not in new]))
+        )
+    if action == "dv" and not add and rec.get("change_files") is None:
+        newly = {}
+        for rel in rec["dv"]:
+            new = set(dvs[rel])
+            old = set(_decode_dv_entry(table, prior["dvs"].get(rel, [])))
+            if not old <= new:
+                return None  # a vector that un-deletes
+            newly[_file_key(os.path.join(table, rel))] = sorted(new - old)
+        read_fn, phys_of, names = _physical_reader(
+            spark, table, list(rec["dv"]), schema, mapping
+        )
+        gone = _dv_join(
+            spark,
+            read_fn([os.path.join(table, r) for r in rec["dv"]]),
+            newly,
+            "left_semi",
+        ).select(*[F.col(phys_of[n]).alias(n) for n in names])
+        return gone.select(
+            *keys, F.lit("removed").alias("change")
+        ).unionByName(unchanged(scan(files)))
+    if action not in ("replace", "dv") or rec.get("change_files") is None:
+        return None
+    # the change rows, read as table_changes_cdf reads them
+    rows = _scan(
+        spark, table,
+        [os.path.join(table, r) for r in rec["change_files"]],
+        f"{schema}, {CHANGE_TYPE} string", {}, mapping,
+    )
+    is_old = F.col(CHANGE_TYPE).isin("delete", "update_preimage")
+    h = _row_hash([n for n, _ in _split_ddl(schema)], keys)
+    none = F.lit(None).cast("string")
+    per_key = (
+        rows.select(
+            *keys,
+            F.lit(0).alias("__n"),
+            F.when(is_old, -1).otherwise(1).alias("__d"),
+            F.when(is_old, h).alias("__ho"),
+            F.when(~is_old, h).alias("__hn"),
+        )
+        .unionByName(
+            scan(files).select(
+                *keys,
+                F.lit(1).alias("__n"),
+                F.lit(0).alias("__d"),
+                none.alias("__ho"),
+                none.alias("__hn"),
+            )
+        )
+        .groupBy(*keys)
+        .agg(
+            F.sum("__n").cast("int").alias("__new"),
+            (F.sum("__n") - F.sum("__d")).cast("int").alias("__old"),
+            F.max("__ho").alias("__ho"),
+            F.max("__hn").alias("__hn"),
+        )
+    )
+    # old rows = snapshot rows - new-side change rows + old-side ones
+    n_old, n_new = F.col("__old"), F.col("__new")
+    change = F.when(
+        ~null_key & (n_old == 1) & (n_new == 1),
+        F.array(
+            F.when(F.col("__ho").eqNullSafe(F.col("__hn")), "unchanged")
+            .otherwise("changed")
+        ),
+    ).otherwise(
+        F.concat(
+            F.array_repeat(F.lit("removed"), n_old),
+            F.array_repeat(F.lit("added"), n_new),
+        )
+    )
+    return per_key.select(*keys, F.explode(change).alias("change"))
+
+
 def _resolve_where(spark: SparkSession, schema: str, where):
     """Normalize a predicate into (prune bands, point sets, row
     Column, commit meta) — the ``resolve(schema)`` contract of
@@ -5084,21 +5267,38 @@ def table_changes(
 ) -> DataFrame:
     """Change data feed between two committed versions (Delta's
     ``table_changes`` surface): what a consumer that last read
-    ``from_version`` must apply to reach ``to_version``. Composed
-    from the engine's own pieces — two metadata-resolved snapshot
-    reads plus the content-hash snapshot diff (`tools/diff.py`):
-    each key classified added / removed / changed, payload never
-    rides the diff join. ``keys`` defaults to the first column.
-    ``from_version=-1`` means "from the table's birth": the old side
-    is the empty table, so every key classifies as added — the
-    consumer-side special case every from-scratch CDF drain would
-    otherwise re-derive.
+    ``from_version`` must apply to reach ``to_version``, one row per
+    key (``keys`` default to the first column) classified added /
+    removed / changed / unchanged, exactly as
+    :func:`~parquet_combiner_spark.tools.diff.snapshot_diff` of the
+    two snapshots classifies it. ``from_version=-1`` means "from the
+    table's birth": the old side is the empty table, so every key
+    classifies as added.
+
+    A one-version step is built from the commit's record when the
+    record says what changed (:func:`_record_changes`): an append
+    from its added files, a deletion-vector delete from the positions
+    it newly deletes, and ``cdf=True`` DML from its change files —
+    no full-row hash of either snapshot and, for appends and DV
+    deletes, no shuffle. Everything else diffs the two snapshots by
+    content hash: overwrites, RESTORE, CLONE and expiry rebases, DML
+    without ``cdf`` other than a DV delete, compaction, a schema or
+    column-mapping change, wider ranges and a missing record. Both
+    ways rely on ``keys`` being unique in each snapshot, and both
+    follow the diff's NULL rule: an old row with a NULL key is
+    ``removed`` and a new one ``added``.
 
     Versions stay readable until vacuum removes UNREFERENCED files
     only, so the feed is replayable for the table's whole history —
-    the property streaming consumers need after a restart."""
+    the property streaming consumers need after a restart; across an
+    expired version it raises."""
     from parquet_combiner_spark.tools.diff import snapshot_diff
 
+    to_version = _resolve_version(table, to_version)
+    if to_version == from_version + 1:
+        batch = _record_changes(spark, table, to_version, keys)
+        if batch is not None:
+            return batch
     new = read_table(spark, table, to_version)
     old = (
         new.limit(0)

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import Row
@@ -489,6 +490,34 @@ def test_cdf_merge_edge_cases(spark, tmp_path):
         )
     assert txlog._last_commit(u)["change_files"] == []
     assert [x[2] for x in _feed(spark, u, after=1)] == []
+
+
+def test_emptying_replace_publishes_no_file(spark, tmp_path):
+    """A copy-on-write replace whose written frame is empty publishes
+    ``add: []``, not the empty part file an unpartitioned Spark write
+    of no rows leaves: a cdf=False merge of tombstones for every row,
+    and a delete that empties the table's only file."""
+    t = str(tmp_path / "t")
+    _kv_table(spark, t, n=3)
+    gone = spark.createDataFrame(
+        [(k, None, 9, "D") for k in range(3)],
+        "k int, v string, ver int, op string",
+    )
+    txlog.merge_into(
+        spark, t, gone, keys=["k"], version_cols=["ver"], op_col="op"
+    )
+    u = str(tmp_path / "u")
+    _kv_table(spark, u, n=3)
+    txlog.delete_where_expr(spark, u, "k >= 0", mode="cow")
+    for table in (t, u):
+        rec = txlog._last_commit(table)
+        assert rec["action"] == "replace" and rec["add"] == []
+        assert txlog.read_table(spark, table).count() == 0
+        referenced = {r for c in txlog._read_log(table) for r in c["add"]}
+        assert all(
+            pq.ParquetFile(os.path.join(table, r)).metadata.num_rows > 0
+            for r in referenced
+        )
 
 
 def test_cdf_reads_old_layout_change_files(spark, tmp_path):
