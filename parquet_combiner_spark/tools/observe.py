@@ -15,6 +15,10 @@ dict — no listener plumbing, no extra job.
 Batch only — streaming queries report the same metrics through
 ``StreamingQueryProgress.observedMetrics`` instead.
 
+``codegen_compiles`` reads the JVM's count of generated classes
+compiled so far, so a caller can see whether a repeated query reused
+the compiled code or paid Janino (and then the JIT) again.
+
 Usage::
 
     obs, observed = quality_observation(df)
@@ -24,7 +28,7 @@ Usage::
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -48,3 +52,12 @@ def quality_observation(
     ]
     obs = Observation()
     return obs, df.observe(obs, *metrics, *extra)
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled in this JVM so far: every miss of
+    Spark's code cache, whole-stage or expression class, counts once.
+    Read from ``CodegenMetrics``' compilation-time histogram, whose
+    count is exact (only its timing samples are a reservoir)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

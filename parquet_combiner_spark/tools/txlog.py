@@ -4841,6 +4841,63 @@ def update_where(
     )
 
 
+def _merge_batch_keys(
+    updates: DataFrame, prune_col: str
+) -> tuple[dict, list | None]:
+    """A MERGE batch's ``prune_col`` summary: the bounds dict (``lo``,
+    ``hi``, rows ``n``, non-NULL keys ``n_key``) and, for a batch of
+    at most ``_POINT_SET_CAP`` rows without NULL keys, its distinct
+    key values (else None).
+
+    A batch within the cap comes back whole from ONE Spark job (an
+    Arrow collect of ``cap + 1`` keys) and is summarised here in
+    Spark's own order and grouping: NaN sorts above every number and
+    all NaNs are one value; -0.0 groups with 0.0. Larger batches, and
+    key types whose Python values do not order as Spark orders them
+    (session-zone timestamps, binary, collated strings, nested
+    types), take the bounds aggregate and the distinct pass."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    col = updates.select(prune_col)
+    dtype = col.schema[0].dataType
+    keys = None
+    if dtype == T.StringType() or isinstance(
+        dtype, (T.NumericType, T.BooleanType, T.DateType, T.TimestampNTZType)
+    ):
+        keys = col.limit(_POINT_SET_CAP + 1).toArrow().column(0).to_pylist()
+    if keys is None or len(keys) > _POINT_SET_CAP:
+        bounds = updates.agg(
+            F.min(prune_col).alias("lo"),
+            F.max(prune_col).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+            F.count(prune_col).alias("n_key"),
+        ).first().asDict()
+        points = None
+        if bounds["n_key"] == bounds["n"] <= _POINT_SET_CAP:
+            points = [r[0] for r in col.distinct().collect()]
+        return bounds, points
+    present = [v for v in keys if v is not None]
+
+    def order(v):
+        return (v != v, v)  # NaN (the only v != v) sorts last
+
+    bounds = {
+        "lo": min(present, key=order, default=None),
+        "hi": max(present, key=order, default=None),
+        "n": len(keys),
+        "n_key": len(present),
+    }
+    if len(present) < len(keys):
+        return bounds, None
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        # ``+ 0.0`` turns -0.0 into 0.0 and leaves NaN a NaN
+        return bounds, list(
+            {(v if v == v else "NaN"): v + 0.0 for v in present}.values()
+        )
+    return bounds, list(dict.fromkeys(present))
+
+
 def merge_into(
     spark: SparkSession,
     table: str,
@@ -4919,12 +4976,7 @@ def merge_into(
         merge_upsert_cdf,
     )
 
-    bounds = updates.agg(
-        F.min(prune_col).alias("lo"),
-        F.max(prune_col).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-        F.count(prune_col).alias("n_key"),
-    ).first()
+    bounds, batch_points = _merge_batch_keys(updates, prune_col)
     if bounds["n"] == 0:
         v = current_version(table)
         if v < 0:
@@ -4998,14 +5050,7 @@ def merge_into(
     # still prune to the files that actually hold the keys (inserts
     # are unaffected: the batch rides into the rewritten output in
     # full, pruning only narrows which base files are read)
-    points = None
-    if prunable and bounds["n"] <= _POINT_SET_CAP:
-        points = {
-            prune_col: [
-                r[0]
-                for r in updates.select(prune_col).distinct().collect()
-            ]
-        }
+    points = None if batch_points is None else {prune_col: batch_points}
 
     def attempt() -> int:
         base = current_version(table)

@@ -179,3 +179,84 @@ def test_point_set_respects_bucket_layout(spark, tmp_path):
     got = txlog.read_table(spark, table)
     assert got.count() == 498
     assert got.where("k IN (17, 253)").count() == 0
+
+
+NAN = float("nan")
+
+
+@pytest.mark.parametrize(
+    "ddl,vals",
+    [
+        ("bigint", [5, 3, 9, 3]),
+        ("double", [1.5, NAN, -0.0, 0.0, NAN, -2.0]),
+        ("double", [NAN, NAN]),
+        ("float", [0.0, -0.0, 2.5, NAN]),
+        ("string", ["b", "a", "é", "z", "a"]),
+        ("decimal(10,2)", ["1.50", "-3.25", "1.50"]),
+        ("date", ["2024-03-01", "1999-12-31", "2024-03-01"]),
+        ("timestamp", ["2024-03-01 10:00:00", "1999-12-31 23:59:59"]),
+        ("timestamp_ntz", ["2024-03-01 10:00:00", "1999-12-31 23:59:59"]),
+        ("boolean", ["true", "false", "true"]),
+        ("bigint", [3, None, 1]),  # a NULL key: no point set
+        ("bigint", [None, None]),
+        ("bigint", list(range(1100, 0, -1))),  # over the cap
+    ],
+)
+def test_merge_batch_keys_match_spark_aggregate(spark, ddl, vals):
+    """``merge_into``'s batch summary equals Spark's own ``min``/
+    ``max``/``count`` and ``distinct``, exactly (``repr`` tells NaN
+    and -0.0 apart), whichever way it was computed."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(None if v is None else str(v),) for v in vals], "s string"
+    ).select(F.col("s").cast(ddl).alias("k"))
+    bounds, points = txlog._merge_batch_keys(df, "k")
+    want = df.agg(
+        F.min("k").alias("lo"),
+        F.max("k").alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+        F.count("k").alias("n_key"),
+    ).first()
+    assert {k: repr(v) for k, v in bounds.items()} == {
+        k: repr(want[k]) for k in ("lo", "hi", "n", "n_key")
+    }
+    if want["n_key"] < want["n"] or want["n"] > txlog._POINT_SET_CAP:
+        assert points is None
+    else:
+        distinct = [r[0] for r in df.distinct().collect()]
+        assert sorted(map(repr, points)) == sorted(map(repr, distinct))
+
+
+def test_small_merge_reads_its_batch_once(spark, tmp_path):
+    """A 10-row MERGE into a 100-row, one-file table runs 3 Spark jobs,
+    with or without ``cdf``: one Arrow collect of the batch keys gives
+    the bounds, the counts and the point set (the bounds aggregate and
+    the distinct pass took 2 jobs each), then the merge and its
+    write."""
+    sc = spark.sparkContext
+    ups = spark.createDataFrame(
+        [(i * 3, 1000 + i) for i in range(10)], "k long, v long"
+    )
+    for cdf in (False, True):
+        table = str(tmp_path / f"t{cdf}")
+        txlog.commit(
+            spark.createDataFrame(
+                [(i, i) for i in range(100)], "k long, v long"
+            ).coalesce(1),
+            table,
+        )
+        group = f"merge-jobs-{cdf}"
+        sc.setJobGroup(group, "merge_into")
+        try:
+            txlog.merge_into(
+                spark, table, ups, keys=["k"], version_cols=["v"], cdf=cdf
+            )
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(jobs) == 3, (cdf, jobs)
+        got = txlog.read_table(spark, table)
+        assert got.count() == 100
+        assert got.where("v >= 1000").count() == 10
