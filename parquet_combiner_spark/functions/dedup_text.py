@@ -504,6 +504,10 @@ def ngram_jaccard_pairs(
     cap; a pair whose ONLY shared shingles are stop-shingles is
     missed — the accepted trade, those pairs are ad-copy boilerplate,
     not near-dups. Set ``max_doc_freq=None`` to disable.
+    For Jaccard the self-join also applies the exact length filter of
+    set-similarity joins (J <= min/max of the two set sizes, which
+    holds under the cap too), so pairs whose sizes alone rule them
+    out never reach the pair shuffle.
     Output: (doc_id_a, doc_id_b, jaccard), jaccard >= threshold.
     """
     # per-doc set size rides through the explode (8 bytes per
@@ -539,14 +543,20 @@ def ngram_jaccard_pairs(
         ).drop("__df")
     a = sh.alias("a")
     b = sh.alias("b")
+    on = [
+        F.col("a.sh") == F.col("b.sh"),
+        F.col("a.doc_id") < F.col("b.doc_id"),
+    ]
+    if _metric == "jaccard":
+        # length filter: J <= min(n_a, n_b) / max(n_a, n_b), so a pair
+        # whose size ratio is below the threshold cannot qualify and is
+        # dropped in the join, before the pair shuffle. Written as a
+        # division: rounding is monotone, so no pair at J == threshold
+        # is lost, where the product form drops some (0.28 * 25 > 7).
+        n_a, n_b = F.col("a.n_sh"), F.col("b.n_sh")
+        on.append(F.least(n_a, n_b) / F.greatest(n_a, n_b) >= threshold)
     inter = (
-        a.join(
-            b,
-            on=[
-                F.col("a.sh") == F.col("b.sh"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
-        )
+        a.join(b, on=on)
         .groupBy(
             F.col("a.doc_id").alias("doc_id_a"),
             F.col("b.doc_id").alias("doc_id_b"),

@@ -327,8 +327,8 @@ def doc_bm25_topk(
     (always positive); tf saturation k1, length normalization b.
 
     Plan shape at 100 TB: one explode feeds the (doc, term) counts;
-    doc length is the SUM of that same frame (no second pass over
-    tokens); document frequency is its vocabulary-sized (Zipf)
+    doc length is the size of each row's token array (no aggregate);
+    document frequency is its vocabulary-sized (Zipf)
     second aggregate, broadcast back. The QUERY terms broadcast-join
     first, so everything after the postings filter is sized by docs
     that match ≥1 query term, not the corpus; the doc-length join is
@@ -381,17 +381,23 @@ def _bm25_frames(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """The BM25 serving state as four frames: postings (id, term, tf),
     doc lengths (id, dl), term document-frequencies (term, df), and
-    the 1-row corpus stats (__n, __avgdl). Derived in one pass over
-    the tokens (dl and df are re-aggregations of the postings);
-    ALSO the exact state :func:`bm25_build_index` persists — one
-    definition, so the rebuild-now and serve-from-index paths cannot
-    drift."""
-    toks = documents.select(
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+    the 1-row corpus stats (__n, __avgdl). ``tf`` is the only
+    (doc, term) aggregation; ``df`` re-aggregates it, while ``dl`` is
+    the size of each document row's token array (documents with no
+    token, i.e. NULL text, are left out, as the explode leaves them
+    out of ``tf``), so doc lengths cost no shuffle of the postings.
+    A document is a row: ``id_col`` must be unique. ALSO the exact
+    state :func:`bm25_build_index` persists — one definition, so the
+    rebuild-now and serve-from-index paths cannot drift."""
+    toks = tokens(F.lower(F.col(text_col)))
+    tf = (
+        documents.select(F.col(id_col), F.explode(toks).alias("term"))
+        .groupBy(id_col, "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+    dl = documents.select(
+        F.col(id_col), F.size(toks).cast("bigint").alias("dl")
+    ).where(F.col("dl") > 0)
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     corpus = dl.agg(
         F.count(F.lit(1)).cast("double").alias("__n"),

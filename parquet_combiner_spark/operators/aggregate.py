@@ -55,25 +55,13 @@ def group_stats(
     measured 0.84s → 0.48s at sf0.1 (this was the r7 bench-drift
     suspect: not noise, a doubled scan).
     """
-    per_mode = df.groupBy(group_col, mode_col).agg(
-        F.count(F.lit(1)).alias("__mode_cnt")
-    )
-    # min_by over (-count, value): highest count wins, then lowest
-    # value — the negation happens on the exact long count, and the
-    # value itself is compared ascending, so any orderable mode_col
-    # type works with no precision loss (fixes the 2^53 double-cast
-    # hazard on large ids).
-    mode_arg = F.min_by(
-        F.col(mode_col),
-        F.struct(-F.col("__mode_cnt"), F.col(mode_col)),
-    )
     if item_col == mode_col:
         # exact distinct is FREE here (pre-agg row count), so the
         # approx flag is moot on this path — exact beats the sketch
-        return per_mode.groupBy(group_col).agg(
+        return _mode_counts(df, group_col, mode_col).groupBy(group_col).agg(
             F.sum("__mode_cnt").alias(total_alias),
             F.count(F.col(mode_col)).alias(unique_alias),
-            F.coalesce(mode_arg, F.lit(-1)).alias(mode_alias),
+            F.coalesce(_mode_arg(mode_col), F.lit(-1)).alias(mode_alias),
         )
     uniq = (
         F.approx_count_distinct(item_col)
@@ -84,7 +72,41 @@ def group_stats(
         F.count(F.lit(1)).alias(total_alias),
         uniq.alias(unique_alias),
     )
-    mode_pick = per_mode.groupBy(group_col).agg(mode_arg.alias(mode_alias))
+    return attach_mode(totals, df, group_col, mode_col, mode_alias)
+
+
+def _mode_counts(df: DataFrame, group_col: str, mode_col: str) -> DataFrame:
+    return df.groupBy(group_col, mode_col).agg(
+        F.count(F.lit(1)).alias("__mode_cnt")
+    )
+
+
+def _mode_arg(mode_col: str):
+    # min_by over (-count, value): highest count wins, then lowest
+    # value — the negation happens on the exact long count, and the
+    # value itself is compared ascending, so any orderable mode_col
+    # type works with no precision loss (fixes the 2^53 double-cast
+    # hazard on large ids).
+    return F.min_by(
+        F.col(mode_col), F.struct(-F.col("__mode_cnt"), F.col(mode_col))
+    )
+
+
+def attach_mode(
+    totals: DataFrame,
+    df: DataFrame,
+    group_col: str,
+    mode_col: str,
+    mode_alias: str,
+) -> DataFrame:
+    """``totals`` (one row per ``group_col`` value) left-joined with the
+    per-group mode of ``df``'s ``mode_col`` — highest count, then
+    lowest value — as ``mode_alias``, -1 where the join finds none
+    (a NULL mode or a NULL group key). :func:`group_stats`' mode, for
+    callers that derive their totals some other way."""
+    mode_pick = _mode_counts(df, group_col, mode_col).groupBy(group_col).agg(
+        _mode_arg(mode_col).alias(mode_alias)
+    )
     return totals.join(mode_pick, on=group_col, how="left").withColumn(
         mode_alias, F.coalesce(F.col(mode_alias), F.lit(-1))
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from parquet_combiner_spark.operators.aggregate import group_counts, group_stats
+from parquet_combiner_spark.operators.aggregate import attach_mode, group_counts
 from parquet_combiner_spark.operators.dedup import dedup_first_wins
 from parquet_combiner_spark.operators.join import broadcast_dim_join
 from parquet_combiner_spark.operators.topk import top_k_per_group
@@ -40,7 +40,7 @@ def top_items(data_a: DataFrame, data_b: DataFrame, top_x: int = 5) -> DataFrame
     deduped = dedup_first_wins(
         data_a.select(LOC, "detection_oid", "item_name"), ["detection_oid"]
     )
-    return _top_items_of(deduped, data_b, top_x)
+    return _top_items_of(_counts_of(deduped), data_b, top_x)
 
 
 def item_count(data_a: DataFrame, data_b: DataFrame | None = None) -> DataFrame:
@@ -51,7 +51,7 @@ def item_count(data_a: DataFrame, data_b: DataFrame | None = None) -> DataFrame:
     deduped = dedup_first_wins(
         data_a.select(LOC, "detection_oid", "item_name"), ["detection_oid"]
     )
-    return group_counts(deduped, [LOC, "item_name"], count_col="count")
+    return _counts_of(deduped)
 
 
 def location_stats(
@@ -71,15 +71,20 @@ def location_stats(
         data_a.select(LOC, "video_camera_oid", "detection_oid", "item_name"),
         ["detection_oid"],
     )
-    return _location_stats_of(deduped)
+    return _location_stats_of(deduped, _counts_of(deduped))
+
+
+def _counts_of(deduped: DataFrame) -> DataFrame:
+    """The (location, item) count of a deduped detection frame — the
+    one aggregate all three queries are built from."""
+    return group_counts(deduped, [LOC, "item_name"], count_col="count")
 
 
 def _top_items_of(
-    deduped: DataFrame, data_b: DataFrame, top_x: int
+    counts: DataFrame, data_b: DataFrame, top_x: int
 ) -> DataFrame:
-    """:func:`top_items` over an already-deduped detection frame:
-    count → window rank → filter ≤ topX → broadcast-left-join dataB."""
-    counts = group_counts(deduped, [LOC, "item_name"], count_col="count")
+    """:func:`top_items` over the (location, item) counts:
+    window rank → filter ≤ topX → broadcast-left-join dataB."""
     ranked = top_k_per_group(
         counts,
         [LOC],
@@ -99,30 +104,36 @@ def _top_items_of(
     )
 
 
-def _location_stats_of(deduped: DataFrame) -> DataFrame:
-    """:func:`location_stats` over an already-deduped detection frame
-    that keeps the camera column."""
-    return group_stats(
-        deduped,
-        group_col=LOC,
-        item_col="item_name",
-        mode_col="video_camera_oid",
-        total_alias="total_detections",
-        unique_alias="unique_items",
-        mode_alias="most_active_camera",
+def _location_stats_of(deduped: DataFrame, counts: DataFrame) -> DataFrame:
+    """:func:`location_stats` from the (location, item) counts of
+    ``deduped``: the total is their sum and the unique items their
+    non-NULL items, so no count-distinct runs. Only the camera mode
+    aggregates the deduped rows, which must keep the camera column."""
+    totals = counts.groupBy(LOC).agg(
+        F.sum("count").alias("total_detections"),
+        F.count("item_name").alias("unique_items"),
+    )
+    return attach_mode(
+        totals, deduped, LOC, "video_camera_oid", "most_active_camera"
     )
 
 
 def all_aggregations(
     data_a: DataFrame, data_b: DataFrame, top_x: int = 5
 ) -> dict[str, DataFrame]:
-    """All three queries served from ONE shared dedup (reference
+    """All three queries from one dedup and one count (reference
     performAggregations, ParquetCombinerRDD.scala:116-148, which
-    persists the raw inputs but still dedups inside EACH aggregation —
-    here the deduped projection itself is persisted, so the biggest
-    shuffle in the pipeline runs once instead of three times).
+    persists the raw inputs but still dedups inside EACH aggregation).
+    The deduped projection and its (location, item) count are both
+    persisted, so the biggest shuffle runs once and the count once:
+    ``item_count`` is the count frame, ``top_items`` ranks it, and
+    ``location_stats`` sums it, leaving only its camera mode to
+    aggregate the deduped rows.
 
-    Callers should unpersist ``results["_deduped"]`` when done.
+    Callers should unpersist ``results["_deduped"]`` when done; that
+    one call releases the count frame as well, so no cache entry
+    outlives it (a leftover entry would serve the next call's
+    identical plan, stale if the input was rewritten).
     """
     from pyspark import StorageLevel
 
@@ -130,16 +141,28 @@ def all_aggregations(
         data_a.select(LOC, "video_camera_oid", "detection_oid", "item_name"),
         ["detection_oid"],
     ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    counts = group_counts(deduped, [LOC, "item_name"], count_col="count")
-    top = _top_items_of(deduped, data_b, top_x)
-    stats = _location_stats_of(deduped)
+    counts = _counts_of(deduped).persist(StorageLevel.MEMORY_AND_DISK)
     return {
-        "top_items": top,
+        "top_items": _top_items_of(counts, data_b, top_x),
         "item_count": counts,
-        "location_stats": stats,
-        "_deduped": deduped,
+        "location_stats": _location_stats_of(deduped, counts),
+        "_deduped": _unpersist_with(deduped, counts),
     }
+
+
+def _unpersist_with(frame: DataFrame, *dependents: DataFrame) -> DataFrame:
+    """``frame``, whose ``unpersist`` now releases ``dependents`` first.
+    Dependents go first because uncaching ``frame`` alone would make
+    Spark re-plan every loaded cache built on it."""
+    own = frame.unpersist
+
+    def unpersist(blocking: bool = False) -> DataFrame:
+        for d in dependents:
+            d.unpersist(blocking)
+        return own(blocking)
+
+    frame.unpersist = unpersist
+    return frame
 
 
 def process_parquet_files(

@@ -2491,3 +2491,63 @@ def test_bm25_manifest_makes_rebuild_atomic_for_readers(spark, tmp_path):
         )
     )
     assert v0 == before
+
+
+def test_bm25_doc_lengths_from_token_array(spark):
+    """``_bm25_frames``' dl (the size of each row's token array) and
+    corpus stats equal the postings re-aggregation they replaced, on
+    NULL text, empty text and repeated spaces, and dl stays bigint."""
+    docs = spark.createDataFrame(
+        [
+            (1, "Red apple  pie"),
+            (2, None),
+            (3, ""),
+            (4, "a   b  a"),
+            (5, " lead and trail "),
+        ],
+        "doc_id long, text string",
+    )
+    tf, dl, _, corpus = text._bm25_frames(docs, "text", "doc_id")
+    old_dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    old_corpus = old_dl.agg(
+        F.count(F.lit(1)).cast("double").alias("__n"),
+        F.avg("dl").alias("__avgdl"),
+    )
+    assert sorted(map(tuple, dl.collect())) == sorted(
+        map(tuple, old_dl.collect())
+    )
+    assert dict(dl.dtypes)["dl"] == "bigint"
+    assert corpus.collect() == old_corpus.collect()
+    assert corpus.collect()[0]["__n"] == 4.0  # NULL text is no document
+
+
+def test_ngram_jaccard_length_filter_keeps_boundary_pair(spark):
+    """The length filter in the pair self-join loses no pair at
+    exactly J == threshold: a 7-shingle document inside a 25-shingle
+    one has J = 7/25 = 0.28, which the product form of the filter
+    (7 >= 0.28 * 25) would drop. Containment pairs, which the filter
+    does not apply to, are unchanged."""
+    words = [f"w{i}" for i in range(27)]
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=1, text=" ".join(words)),  # 25 shingles
+            Row(doc_id=2, text=" ".join(words[:9])),  # 7, all in doc 1
+            Row(doc_id=3, text=" ".join(words[10:19])),  # 7, all in doc 1
+        ]
+    )
+    assert 0.28 * 25 > 7  # the product form's rounding
+    jac = {
+        (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
+        for r in dedup_text.ngram_jaccard_pairs(
+            docs, threshold=0.28
+        ).collect()
+    }
+    assert jac == {(1, 2): 0.28, (1, 3): 0.28}
+    assert dedup_text.ngram_jaccard_pairs(docs, threshold=0.2801).count() == 0
+    cont = {
+        (r["doc_id_a"], r["doc_id_b"]): r["containment"]
+        for r in dedup_text.ngram_containment_pairs(
+            docs, threshold=0.9
+        ).collect()
+    }
+    assert cont == {(1, 2): 1.0, (1, 3): 1.0}

@@ -212,3 +212,139 @@ def test_dedup_across_locations(spark):
     )
     total = item_count(a, None).agg({"count": "sum"}).collect()[0][0]
     assert total == 5
+
+
+# Edge rows for the shared-count parity test, (loc, camera, oid, item, ts):
+# loc 1: NULL items; loc 2: NULL is the most frequent camera; loc 3: a
+# camera tie when it keeps oid 9 (301 and 302 twice each, lowest wins);
+# a NULL location; loc 4 is missing from dataB; oid 9 appears under
+# loc 3 and loc 4.
+EDGE_A = [
+    (1, 101, 1, None, 1),
+    (1, 101, 2, None, 2),
+    (1, 102, 3, "apple", 3),
+    (1, None, 4, "apple", 4),
+    (2, None, 5, "pear", 5),
+    (2, None, 6, "pear", 6),
+    (2, None, 7, "fig", 7),
+    (2, 201, 8, "fig", 8),
+    (3, 302, 9, "kiwi", 9),
+    (3, 302, 10, "kiwi", 10),
+    (3, 301, 11, "lime", 11),
+    (3, 301, 12, None, 12),
+    (4, 401, 9, "kiwi", 13),  # duplicate oid 9, other location
+    (4, 401, 13, "plum", 14),
+    (None, 501, 14, "plum", 15),
+    (None, None, 15, None, 16),
+    (None, 501, 16, "plum", 17),
+]
+EDGE_B = [(1, "One"), (2, "Two"), (3, "Three")]
+
+
+def _node_names(df) -> list[str]:
+    """Physical node names of ``df``'s executed plan, down through
+    adaptive query stages but not into the plans that built a cached
+    relation (an in-memory scan is a leaf here)."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        names.append(name)
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif "QueryStage" in name:
+            stack.append(node.plan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_all_aggregations_edge_parity(spark):
+    """The shared count frame gives the same three outputs as the
+    standalone queries and as group_stats' generic count-distinct
+    formula, on NULL items, NULL cameras (also as the mode), camera
+    ties, a NULL location, a location missing from dataB and an oid
+    duplicated across locations. No output plan has an Expand, and
+    item_count is a scan of the cache with no Exchange."""
+    from parquet_combiner_spark.operators.aggregate import group_stats
+    from parquet_combiner_spark.operators.dedup import dedup_first_wins
+    from parquet_combiner_spark.pipeline import LOC
+
+    # one input partition: dropDuplicates keeps the same survivor of
+    # oid 9 in every plan, so the standalone queries are comparable
+    da = make_data_a(spark, EDGE_A).coalesce(1)
+    db = make_data_b(spark, EDGE_B)
+    res = all_aggregations(da, db, top_x=2)
+    try:
+        got = {k: sorted(map(tuple, res[k].collect()), key=repr)
+               for k in ("top_items", "item_count", "location_stats")}
+        for name, query in (
+            ("top_items", top_items(da, db, 2)),
+            ("item_count", item_count(da)),
+            ("location_stats", location_stats(da)),
+        ):
+            assert got[name] == sorted(map(tuple, query.collect()), key=repr)
+        generic = group_stats(
+            dedup_first_wins(
+                da.select(LOC, "video_camera_oid", "detection_oid",
+                          "item_name"),
+                ["detection_oid"],
+            ),
+            group_col=LOC,
+            item_col="item_name",
+            mode_col="video_camera_oid",
+        )
+        assert got["location_stats"] == sorted(
+            map(tuple, generic.collect()), key=repr
+        )
+        stats = {r[0]: r[1:] for r in got["location_stats"]}
+        assert stats[1] == (4, 1, 101)  # NULL items: counted, not unique
+        assert stats[2] == (4, 2, -1)  # NULL camera is the mode
+        assert stats[3][2] == 301  # tie: lowest camera
+        assert stats[None] == (3, 1, -1)  # NULL location
+        assert stats[3][0] + stats[4][0] == 5  # oid 9 counted once
+        assert any(  # loc 4 is not in dataB
+            r[0] == "Unknown" and r[2] == "plum" for r in got["top_items"]
+        )
+        for name in ("top_items", "item_count", "location_stats"):
+            plan = res[name]._jdf.queryExecution().executedPlan().toString()
+            assert "Expand" not in plan, (name, plan)
+        names = _node_names(res["item_count"])
+        assert "InMemoryTableScan" in names, names
+        assert not any("Exchange" in n for n in names), names
+    finally:
+        res["_deduped"].unpersist()
+
+
+def test_all_aggregations_one_unpersist_releases_all(spark, tmp_path):
+    """``results["_deduped"].unpersist()`` releases every frame that
+    all_aggregations persisted: no RDD stays persisted and no cache
+    entry is left, so a second call on a rewritten dataA returns the
+    new counts instead of the cached old ones."""
+    from parquet_combiner_spark.sources.io import read_data_a
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    path = str(tmp_path / "dataA")
+    db = make_data_b(spark, CANONICAL_B)
+
+    def counts_after_one_call(rows):
+        make_data_a(spark, rows).write.mode("overwrite").parquet(path)
+        res = all_aggregations(read_data_a(spark, path), db, top_x=5)
+        try:
+            return sorted(map(tuple, res["item_count"].collect()))
+        finally:
+            res["_deduped"].unpersist()
+            assert set(jsc.getPersistentRDDs().keySet()) == before
+            cache = spark._jsparkSession.sharedState().cacheManager()
+            assert cache.lookupCachedData(res["item_count"]._jdf).isEmpty()
+
+    first = counts_after_one_call(CANONICAL_A)
+    assert (1, "banana", 3) in first
+    rewritten = [r for r in CANONICAL_A if r[3] != "banana"]
+    second = counts_after_one_call(rewritten)
+    assert second == sorted(map(tuple, item_count(
+        make_data_a(spark, rewritten)
+    ).collect()))
+    assert all(r[1] != "banana" for r in second)

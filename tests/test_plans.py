@@ -661,6 +661,12 @@ def test_shuffle_exchange_budgets(spark):
         # is the ids-only hit agg + the flag-attach join (formatted
         # plan prints both SMJ sides; AQE reuses the agg exchange)
         "embedding_decontaminate": 4,
+        # corpus path: BM25 doc lengths are token-array sizes, not a
+        # second aggregate of the postings; the n-gram length filter
+        # sits in the self-join and adds no exchange
+        "doc_bm25_topk": 14,
+        "hybrid_rrf_topk": 22,
+        "ngram_jaccard_pairs": 16,
     }
     qs = entry.queries()
     sf = "/root/testdata/sf0.001"
