@@ -28,15 +28,19 @@ from parquet_combiner_spark.functions import (
     similarity,
     text,
 )
-from parquet_combiner_spark.sources.io import table_path
+from parquet_combiner_spark.sources.io import (
+    file_listing,
+    read_parquet,
+    table_path,
+)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, "documents"))
+    return read_parquet(spark, table_path(sf_dir, "documents"))
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, "embeddings"))
+    return read_parquet(spark, table_path(sf_dir, "embeddings"))
 
 
 # --- documents ------------------------------------------------------------
@@ -321,17 +325,6 @@ _NGRAM_PAIR_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
 _NGRAM_PAIR_CACHE_MAX = 2  # sf_dirs per session; LRU beyond this
 
 
-def _file_listing(path: str) -> tuple:
-    """``(path, size, mtime_ns)`` of ``path`` itself when it is a
-    file, else of every file under it — changes whenever the data
-    under ``path`` is rewritten."""
-    paths = [path] if os.path.isfile(path) else sorted(
-        os.path.join(d, f) for d, _, files in os.walk(path) for f in files
-    )
-    stats = [(p, os.stat(p)) for p in paths]
-    return tuple((p, st.st_size, st.st_mtime_ns) for p, st in stats)
-
-
 def _ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact-Jaccard pair join is the most expensive stage both
     ``ngram_jaccard_pairs`` and ``near_dup_clusters`` share; when the
@@ -349,7 +342,7 @@ def _ngram_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     app_id = spark.sparkContext.applicationId
     for stale in [k for k in _NGRAM_PAIR_CACHE if k[0] != app_id]:
         del _NGRAM_PAIR_CACHE[stale]
-    key = (app_id, sf_dir, _file_listing(table_path(sf_dir, "documents")))
+    key = (app_id, sf_dir, file_listing(table_path(sf_dir, "documents")))
     # an entry for the same sf_dir under an older listing must be
     # unpersisted, not just missed: Spark's CacheManager matches the
     # new pair plan to the old cached one by input path alone

@@ -69,10 +69,16 @@ def _read_self_describing(
     column: check the footer's column set up front (metadata only, no
     data scan) and raise immediately — contrast the reference, where
     a missing column surfaces as a getAs failure at task runtime
-    (reference DataReader.scala:16-23)."""
+    (reference DataReader.scala:16-23).
+
+    Without a declared schema the files' own schema is passed to the
+    reader, so a read of unchanged files starts no inference job (see
+    :func:`footer_schema`)."""
     reader = spark.read
-    if schema is not None:
-        footer = spark.read.format(fmt).load(path).schema.names
+    if schema is None:
+        schema = footer_schema(spark, path, fmt)
+    else:
+        footer = footer_schema(spark, path, fmt).names
         actual = {f.lower() for f in footer}
         missing = [
             f.name for f in schema.fields if f.name.lower() not in actual
@@ -82,8 +88,66 @@ def _read_self_describing(
                 f"{fmt} at {path} is missing declared column(s) "
                 f"{missing}; found {sorted(actual)}"
             )
-        reader = reader.schema(schema)
-    return reader.format(fmt).load(path)
+    return reader.schema(schema).format(fmt).load(path)
+
+
+# Session confs that change the schema Spark infers from the same files.
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# (fmt, absolute path) -> (file and conf signature, inferred schema),
+# least recently used first
+_FOOTER_SCHEMAS: dict[tuple, tuple[tuple, T.StructType]] = {}
+_FOOTER_SCHEMAS_MAX = 256
+
+
+def file_listing(path: str) -> tuple:
+    """``(path, size, mtime_ns)`` of ``path`` itself when it is a
+    file, else of every file under it — changes whenever the data
+    under ``path`` is rewritten."""
+    paths = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, files in os.walk(path) for f in files
+    )
+    stats = [(p, os.stat(p)) for p in paths]
+    return tuple((p, st.st_size, st.st_mtime_ns) for p, st in stats)
+
+
+def footer_schema(spark: SparkSession, path: str, fmt: str) -> T.StructType:
+    """The schema Spark infers for the ``fmt`` files at ``path``.
+
+    Spark reads footers in a Spark job of its own on every ``load``
+    that is given no schema. For an absolute local path the result is
+    kept with the path's :func:`file_listing` and the confs that steer
+    inference: reading the same files again starts no job, and a
+    rewrite is inferred afresh. Other paths (a URI, a relative path, a
+    glob) are inferred every time."""
+    if (
+        not os.path.isabs(path)
+        or any(c in path for c in "*?[{")
+        or not os.path.exists(path)
+    ):
+        return spark.read.format(fmt).load(path).schema
+    key = (fmt, os.path.normpath(path))
+    sig = (
+        file_listing(path),
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    hit = _FOOTER_SCHEMAS.pop(key, None)
+    if hit is None or hit[0] != sig:
+        hit = (sig, spark.read.format(fmt).load(path).schema)
+        while len(_FOOTER_SCHEMAS) >= _FOOTER_SCHEMAS_MAX:
+            _FOOTER_SCHEMAS.pop(next(iter(_FOOTER_SCHEMAS)))
+    _FOOTER_SCHEMAS[key] = hit
+    return hit[1]
 
 
 def read_parquet(

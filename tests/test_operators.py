@@ -327,6 +327,73 @@ def test_schema_enforced_read_fails_fast(spark, tmp_path):
         read_data_a(spark, p)
 
 
+def test_reread_of_unchanged_parquet_starts_no_job(spark, tmp_path):
+    """A second read of the same local files takes the schema Spark
+    inferred the first time (no footer job), with or without a
+    declared schema; a rewrite, or a conf that steers inference, is
+    inferred afresh, and a file under a partition directory counts."""
+    import pytest
+
+    from parquet_combiner_spark.sources.io import read_data_a, read_parquet
+
+    sc = spark.sparkContext
+    group = "footer-schema-reuse"
+
+    def jobs_of(build):
+        sc.setJobGroup(group, "build a read")
+        try:
+            before = len(sc.statusTracker().getJobIdsForGroup(group))
+            df = build()
+            return df, len(sc.statusTracker().getJobIdsForGroup(group)) - before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    p = str(tmp_path / "a")
+    make_data_a(spark, [(1, 10, 100, "apple", 5)]).write.parquet(p)
+    _, first = jobs_of(lambda: read_data_a(spark, p))
+    assert first >= 1
+    df, again = jobs_of(lambda: read_data_a(spark, p))
+    assert again == 0 and df.count() == 1
+    _, undeclared = jobs_of(lambda: read_parquet(spark, p))
+    assert undeclared == 0
+
+    # rewritten without a declared column: the check sees the new footer
+    spark.range(3).write.mode("overwrite").parquet(p)
+    with pytest.raises(ValueError, match="missing declared column"):
+        read_data_a(spark, p)
+    assert read_parquet(spark, p).columns == ["id"]
+
+    # a conf that changes what inference returns is part of the key
+    # (written without Spark's own schema, which inference would prefer)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    s = str(tmp_path / "s.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"xy"], pa.binary())}), s)
+    assert dict(read_parquet(spark, s).dtypes)["b"] == "binary"
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert dict(read_parquet(spark, s).dtypes)["b"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(read_parquet(spark, s).dtypes)["b"] == "binary"
+
+    # a new partition directory changes the listing, so its column and
+    # rows are seen
+    t = str(tmp_path / "t")
+    spark.createDataFrame([(1, "x")], "v long, k string").write.partitionBy(
+        "k"
+    ).parquet(t)
+    assert read_parquet(spark, t).count() == 1
+    spark.createDataFrame([(2, "y")], "v long, k string").write.mode(
+        "append"
+    ).partitionBy("k").parquet(t)
+    back = read_parquet(spark, t)
+    assert back.columns == ["v", "k"]
+    assert sorted(map(tuple, back.collect())) == [(1, "x"), (2, "y")]
+
+
 def test_load_tables_registers_views(spark):
     tables = load_tables(spark, "/root/testdata/sf0.001", names=("region", "nope"))
     assert set(tables) == {"region"}
