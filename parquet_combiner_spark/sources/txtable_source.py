@@ -501,17 +501,24 @@ class TxTableChangesStreamReader(DataSourceStreamReader):
     """Commit-log streaming reader: offsets ARE table versions, each
     micro-batch is exactly the files a contiguous version range
     ADDED, in commit order, stamped with ``_commit_version``. This is
-    the Delta streaming-source contract ported to the txlog layer:
+    the Delta streaming-source contract ported to the txlog layer.
+    Which files each commit adds is :func:`txlog._feed_commits`' rule,
+    the one :func:`txlog.read_appends` (plain mode) and
+    :func:`txlog.table_changes_cdf` (``read_change_feed``) read by:
 
     * deterministic replay — ``partitions(start, end)`` is a pure
       function of the immutable commit log, so a restarted query
-      re-reads identical batches from its checkpointed offset;
-    * append commits stream natively; commits that REWRITE data
-      (replace/overwrite — MERGE INTO, delete_where, optimize) are
-      refused unless ``ignore_changes`` is set, in which case their
-      added files are re-emitted whole and downstream must be
-      idempotent per key — exactly Delta's ``ignoreChanges``
-      semantics (a compaction's rewritten rows reappear);
+      re-reads identical batches from its checkpointed offset; a
+      range whose records ``expire_versions`` has unlinked raises
+      instead of losing their rows;
+    * append commits stream natively, and so does the ``overwrite``
+      that creates the table at version 0 (its birth); maintenance
+      (``data_change=False``) and ALTER commits stream nothing;
+      commits that REWRITE data (replace/overwrite/dv — MERGE INTO,
+      delete_where, RESTORE) are refused unless ``ignore_changes``
+      is set, in which case their added files are re-emitted whole
+      and downstream must be idempotent per key — exactly Delta's
+      ``ignoreChanges`` semantics;
     * ``read_change_feed`` (Delta's ``readChangeFeed`` streaming
       mode): the schema gains ``_change_type``, appends stream as
       ``insert`` rows, and DML commits stream their RECORDED change
@@ -519,7 +526,7 @@ class TxTableChangesStreamReader(DataSourceStreamReader):
       ``cdf=True`` verbs — instead of refusing or re-emitting the
       table; a data-changing commit with no recorded change data
       still refuses (Delta's "change data was not recorded");
-    * scale: the driver touches only the log (O(commits) JSON); file
+    * scale: the driver parses only the range's commit records; file
       reads happen on executors, one task per added file.
     """
 
@@ -593,135 +600,37 @@ class TxTableChangesStreamReader(DataSourceStreamReader):
         # below them
         if self._cursor is None or end["version"] > self._cursor:
             self._cursor = end["version"]
-        if start["version"] < end["version"]:
-            # a checkpointed restart can ask for a range whose log
-            # records expire_versions has unlinked — _read_log would
-            # silently skip the missing files and the query would
-            # LOSE those versions' rows. Delta errors when the start
-            # offset predates retained history; so do we (ADVICE r9).
-            versions = txlog._log_versions(self._table)
-            first = versions[0] if versions else 0
-            if start["version"] + 1 < first:
-                raise ValueError(
-                    f"streaming offset {start['version'] + 1} of "
-                    f"{self._table} predates the first retained "
-                    f"version {first} (history expired); restart the "
-                    "query from a fresh checkpoint with from_version "
-                    f">= {first - 1}"
-                )
+        mode = (
+            "cdf" if self._read_change_feed
+            else "ignore_changes" if self._ignore_changes
+            else "appends"
+        )
         parts: list[_ChangeFilePartition] = []
-        # bounded parse: the filename encodes the version, so only the
-        # in-range commit records are opened — O(batch), not O(table
-        # lifetime), per micro-batch
-        for rec in txlog._read_log(
-            self._table, after=start["version"], through=end["version"]
+        for v, rec, rels, inserted in txlog._feed_commits(
+            self._table, start["version"], end["version"], mode
         ):
-            v = rec["version"]
-            rewrites = (
-                rec["action"] == "overwrite"
-                or rec.get("remove")
-                or rec.get("dv")
-            )
-            if rewrites:
-                from parquet_combiner_spark.tools import txlog
-
-                if rec.get("data_change") is False:
-                    # OPTIMIZE/compaction (Delta dataChange=false):
-                    # logical rows rearranged, none changed — emit
-                    # nothing, keep streaming (no ignore_changes
-                    # needed for maintenance, and no re-feed of the
-                    # whole table under it)
-                    continue
-                if txlog._is_metadata_only_republish(self._table, rec):
-                    # ALTER-shaped re-reference (CHECK constraints,
-                    # partition spec evolution): no data moved — emit
-                    # nothing and keep streaming, with or without
-                    # ignore_changes (re-emitting the whole table for
-                    # a constraint edit would be a correctness bug
-                    # under ignore_changes, not just a cost)
-                    continue
-            from parquet_combiner_spark.tools.txlog import (
-                _partition_values,
-            )
-
             cmap = tuple(sorted(rec.get("column_mapping", {}).items()))
-            if self._read_change_feed:
-                if (
-                    rewrites
-                    and v == 0
-                    and rec["action"] == "overwrite"
-                    and not rec.get("remove")
-                    and not rec.get("dv")
-                ):
-                    # table-creation overwrite: nothing precedes it,
-                    # so its rows ARE the delta (Delta serves the
-                    # initial version as inserts under readChangeFeed)
-                    rewrites = False
-                if rewrites:
-                    if rec.get("change_files") is None:
-                        raise ValueError(
-                            f"version {v} of {self._table} is a "
-                            f"{rec['action']} with no recorded change "
-                            "data; a read_change_feed stream needs "
-                            "the table's DML run with cdf=True "
-                            "(Delta's 'change data was not recorded' "
-                            "rule)"
-                        )
-                    # serve the commit's recorded row-level delta; an
-                    # empty list is a zero-delta commit. _change_type
-                    # and identity partition values ride each change
-                    # file's path; files written before the change
-                    # type moved into the path hold both in-file, and
-                    # the reader prefers in-file columns per file
-                    parts.extend(
-                        _ChangeFilePartition(
-                            os.path.join(self._table, rel),
-                            v,
-                            tuple(sorted(_partition_values(rel).items())),
-                            cmap,
-                        )
-                        for rel in rec["change_files"]
-                    )
-                    continue
-                # plain append: added rows are the delta, stamped
-                # insert via the constant-injection path
-                parts.extend(
-                    _ChangeFilePartition(
-                        os.path.join(self._table, rel),
-                        v,
-                        tuple(
-                            sorted(
-                                {
-                                    **_partition_values(rel),
-                                    "_change_type": "insert",
-                                }.items()
-                            )
-                        ),
-                        cmap,
-                    )
-                    for rel in rec["add"]
-                )
-                continue
-            if rewrites and not self._ignore_changes:
-                raise ValueError(
-                    f"version {v} of {self._table} is a "
-                    f"{rec['action']} that rewrites data (or carries "
-                    "deletion vectors); streaming a table with "
-                    "non-append commits requires "
-                    ".option('ignore_changes', 'true') (rewritten "
-                    "rows are then re-emitted and DV deletes are NOT "
-                    "propagated — downstream must be idempotent per "
-                    "key) or .option('read_change_feed', 'true') on "
-                    "a table whose DML runs with cdf=True"
-                )
+            # inserted rows take their _change_type through the
+            # constant-injection path; change files carry theirs in
+            # the path (or, written before it moved there, in-file,
+            # and the reader prefers in-file columns per file)
+            stamp = (
+                {"_change_type": "insert"}
+                if inserted and mode == "cdf"
+                else {}
+            )
             parts.extend(
                 _ChangeFilePartition(
                     os.path.join(self._table, rel),
                     v,
-                    tuple(sorted(_partition_values(rel).items())),
+                    tuple(
+                        sorted(
+                            {**txlog._partition_values(rel), **stamp}.items()
+                        )
+                    ),
                     cmap,
                 )
-                for rel in rec["add"]
+                for rel in rels
             )
         return parts
 

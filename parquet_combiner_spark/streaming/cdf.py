@@ -8,7 +8,12 @@ Two consumption surfaces, matched to what the consumer needs:
   ``spark.readStream.format("txtable_changes")`` (see
   `sources/txtable_source.py`): offsets are commit versions, each
   batch is the files a version range added, Delta's streaming-source
-  contract. Use when downstream is a Structured Streaming pipeline.
+  contract. Which files a commit adds is ``txlog._feed_commits``'
+  rule, shared with the batch readers ``txlog.read_appends`` and
+  ``txlog.table_changes_cdf``, so a range reads the same rows either
+  way; the ``overwrite`` that creates a table at version 0 reads as
+  inserted rows. Use when downstream is a Structured Streaming
+  pipeline.
 
 * **Key-level change batches in COMMIT ORDER** —
   :func:`drain_table_changes` below: an available-now drain that

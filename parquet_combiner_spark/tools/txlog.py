@@ -266,11 +266,10 @@ def _publish(
     )
 
 
-def _log_versions(table: str) -> list[int]:
-    """Committed version numbers in order, from the LISTING alone —
-    the zero-padded filenames encode them, so range validation never
-    parses a commit record."""
-    d = os.path.join(table, _LOG_DIR)
+def _json_versions(d: str) -> list[int]:
+    """The versions of the ``<version>.json`` records in directory
+    ``d``, in order ([] when it does not exist): the one listing rule
+    of the log and of its checkpoints."""
     if not os.path.isdir(d):
         return []
     return sorted(
@@ -278,6 +277,13 @@ def _log_versions(table: str) -> list[int]:
         for name in os.listdir(d)
         if name.endswith(".json") and name.split(".")[0].isdigit()
     )
+
+
+def _log_versions(table: str) -> list[int]:
+    """Committed version numbers in order, from the LISTING alone —
+    the zero-padded filenames encode them, so range validation never
+    parses a commit record."""
+    return _json_versions(os.path.join(table, _LOG_DIR))
 
 
 def _read_log(
@@ -289,19 +295,13 @@ def _read_log(
     without opening them. This is what makes checkpoint-seeded
     snapshot reads O(commits since checkpoint), not O(table
     lifetime)."""
-    d = os.path.join(table, _LOG_DIR)
-    if not os.path.isdir(d):
-        return []
     out = []
-    for name in sorted(os.listdir(d)):
-        if not (name.endswith(".json") and name.split(".")[0].isdigit()):
-            continue
-        v = int(name.split(".")[0])
+    for v in _log_versions(table):
         if after is not None and v <= after:
             continue
         if through is not None and v > through:
             break
-        with open(os.path.join(d, name)) as f:
+        with open(_log_path(table, v)) as f:
             out.append(json.load(f))
     return out
 
@@ -309,17 +309,10 @@ def _read_log(
 def _last_commit(table: str) -> dict | None:
     """The latest commit record only — commits and idempotence checks
     need the tail, not an O(versions) parse of the whole log."""
-    d = os.path.join(table, _LOG_DIR)
-    if not os.path.isdir(d):
+    versions = _log_versions(table)
+    if not versions:
         return None
-    names = sorted(
-        n
-        for n in os.listdir(d)
-        if n.endswith(".json") and n.split(".")[0].isdigit()
-    )
-    if not names:
-        return None
-    with open(os.path.join(d, names[-1])) as f:
+    with open(_log_path(table, versions[-1])) as f:
         return json.load(f)
 
 
@@ -331,6 +324,12 @@ def current_version(table: str) -> int:
 
 def _ckpt_dir(table: str) -> str:
     return os.path.join(table, _LOG_DIR, "_checkpoints")
+
+
+def _ckpt_path(table: str, version: int) -> str:
+    return os.path.join(
+        _ckpt_dir(table), f"{version:0{_VERSION_DIGITS}d}.json"
+    )
 
 
 def _checkpoint_at_or_below(table: str, version: int) -> dict | None:
@@ -346,20 +345,13 @@ def _checkpoint_at_or_below(table: str, version: int) -> dict | None:
     if os.path.isfile(ptr):
         with open(ptr) as f:
             v = json.load(f)["version"]
-        if v <= version:
-            p = os.path.join(d, f"{v:0{_VERSION_DIGITS}d}.json")
-            if os.path.isfile(p):
-                with open(p) as f:
-                    return json.load(f)
-    best = None
-    for name in os.listdir(d):
-        if name.endswith(".json") and name.split(".")[0].isdigit():
-            v = int(name.split(".")[0])
-            if v <= version and (best is None or v > best):
-                best = v
-    if best is None:
+        if v <= version and os.path.isfile(_ckpt_path(table, v)):
+            with open(_ckpt_path(table, v)) as f:
+                return json.load(f)
+    below = [v for v in _json_versions(d) if v <= version]
+    if not below:
         return None
-    with open(os.path.join(d, f"{best:0{_VERSION_DIGITS}d}.json")) as f:
+    with open(_ckpt_path(table, below[-1])) as f:
         return json.load(f)
 
 
@@ -4224,11 +4216,14 @@ def table_changes_cdf(
     snapshots; this reads O(changed rows), the difference between a
     CDC consumer that scales and one that rescans 100 TB nightly).
 
-    Per commit: appends contribute their added rows as ``insert``;
-    DML commits contribute their recorded ``change_files`` (written
-    by the verbs, in the same write as their data files, when called
-    with ``cdf=True``). A change file's ``_change_type`` comes from
-    its ``_change_type=<class>`` path segment, or, for files written
+    The files are those :func:`_feed_commits` yields in ``cdf`` mode,
+    the rule a ``read_change_feed`` stream reads by. Per commit:
+    appends, and an ``overwrite`` at version 0 (the table's birth),
+    contribute their added rows as ``insert``; DML commits contribute
+    their recorded ``change_files`` (written by the verbs, in the
+    same write as their data files, when called with ``cdf=True``).
+    A change file's ``_change_type`` comes from its
+    ``_change_type=<class>`` path segment, or, for files written
     before the change type moved into the path, from the column in
     the file — the per-file rule :func:`_physical_reader` applies to
     every partition column; maintenance
@@ -4236,57 +4231,33 @@ def table_changes_cdf(
     contribute nothing. A data-changing commit WITHOUT change files
     raises — the consumer must fall back to :func:`table_changes` or
     the table must run its DML with ``cdf=True`` (exactly Delta's
-    "change data was not recorded" error)."""
+    "change data was not recorded" error) — and so does a range that
+    starts below expired history."""
     from functools import reduce
 
     from pyspark.sql import functions as F
 
-    log = _read_log(table)
-    if not log:
-        raise FileNotFoundError(f"{table} has no transaction log")
-    if to_version is None:
-        to_version = log[-1]["version"]
+    tail = _feed_tail(table, to_version)
     frames: list[DataFrame] = []
-    empty_schema = None
-    for rec in log:
-        v = rec["version"]
-        if v > to_version:
-            break
-        empty_schema = rec["schema"]
-        if v <= after_version:
-            continue
-        if rec.get("data_change") is False:
-            continue  # compaction: rows rearranged, none changed
-        if rec["action"] == "append":
-            rels, schema = rec["add"], rec["schema"]
-        elif rec.get("change_files") is not None:
-            # an explicit empty list: DML ran with cdf=True but
-            # changed zero rows (zone-map touch, no matches) — a
-            # zero-delta commit, not missing change data
-            rels = rec["change_files"]
-            schema = f"{rec['schema']}, {CHANGE_TYPE} string"
-        elif _is_metadata_only_republish(table, rec):
-            continue
-        else:
-            raise ValueError(
-                f"version {v} of {table} is a {rec['action']} with no "
-                "recorded change data; run DML with cdf=True, or fall "
-                "back to table_changes (snapshot diff)"
-            )
+    for v, rec, rels, inserted in _feed_commits(
+        table, after_version, tail["version"], "cdf"
+    ):
         if not rels:
             continue
         df = _scan(
-            spark, table, [os.path.join(table, r) for r in rels], schema,
+            spark, table, [os.path.join(table, r) for r in rels],
+            rec["schema"] if inserted
+            else f"{rec['schema']}, {CHANGE_TYPE} string",
             {}, dict(rec.get("column_mapping", {})),
         )
-        if rec["action"] == "append":
+        if inserted:
             df = df.withColumn(CHANGE_TYPE, F.lit("insert"))
         frames.append(
             df.withColumn("_commit_version", F.lit(v).cast("long"))
         )
     if not frames:
         return spark.createDataFrame(
-            [], f"{empty_schema or 'x int'}, {CHANGE_TYPE} string, "
+            [], f"{tail['schema']}, {CHANGE_TYPE} string, "
             "_commit_version bigint",
         )
     return reduce(
@@ -5135,8 +5106,8 @@ def _is_metadata_only_republish(table: str, rec: dict) -> bool:
     classify True), and :func:`rename_column` / :func:`drop_column`
     (these change the logical schema, so they classify False). A True
     commit moves no data and changes nothing a row-consumer can see,
-    so incremental readers (:func:`read_appends`, the
-    ``txtable_changes`` streaming source) ride through it instead of
+    so the incremental readers (:func:`_feed_commits`) ride through
+    it instead of
     refusing — an ALTER must not kill every streaming consumer of a
     table. RESTORE and real overwrites change the file list: they
     classify False and keep their refusal semantics too. Cost: one
@@ -5173,6 +5144,91 @@ def _is_metadata_only_republish(table: str, rec: dict) -> bool:
     }
 
 
+def _feed_tail(table: str, to_version: int | None) -> dict:
+    """The record at ``to_version`` (None or past the head: the head).
+    A batch feed read takes its range end, schema and column mapping
+    from it."""
+    versions = _log_versions(table)
+    if not versions:
+        raise FileNotFoundError(f"{table} has no transaction log")
+    v = versions[-1] if to_version is None else min(to_version, versions[-1])
+    with open(_log_path(table, v)) as f:
+        return json.load(f)
+
+
+def _feed_commits(table: str, after: int, through: int, mode: str):
+    """THE feed rule of every incremental reader — :func:`read_appends`
+    (``mode="appends"``), :func:`table_changes_cdf` (``"cdf"``) and the
+    ``txtable_changes`` stream (all three; ``ignore_changes`` and
+    ``read_change_feed`` pick the other two). Yields ``(version,
+    record, rels, inserted)`` for each commit in (after, through] a
+    reader sees: ``rels`` are the table-relative files to read, and
+    ``inserted`` says every row in them is an insert (False for change
+    files, whose ``_change_type`` rides their path, and for files
+    re-emitted under ``ignore_changes``).
+
+    * a range starting below the first retained version raises: the
+      expired records are gone, and reading on would silently lose
+      their rows (Delta's rule for a start before retained history);
+    * ``data_change=False`` commits (OPTIMIZE, compaction: rows
+      rearranged, none changed) and ALTER-shaped republishes (no data
+      moved) yield nothing in every mode: neither may kill a consumer
+      nor, under ``ignore_changes``, re-feed the whole table;
+    * version 0's ``overwrite`` is the table's BIRTH: nothing precedes
+      it, so its rows are inserted, in every mode (Delta serves the
+      initial version as inserts);
+    * ``cdf`` serves a commit's recorded ``change_files`` (an empty
+      list: a cdf=True DML that changed zero rows);
+    * a commit that only adds files yields them as inserted;
+    * any other commit rewrites data (an overwrite, removed files,
+      deletion vectors): ``ignore_changes`` re-emits its added files
+      (rewritten rows reappear, DV deletes do not propagate — Delta's
+      ``ignoreChanges``), the other modes refuse it, since its added
+      rows are not its delta.
+
+    Only the in-range records are parsed: O(range), not O(table
+    lifetime)."""
+    if after < through:
+        versions = _log_versions(table)
+        first = versions[0] if versions else 0
+        if after + 1 < first:
+            raise ValueError(
+                f"version {after + 1} of {table} predates the first "
+                f"retained version {first} (history expired); read "
+                f"after version {first - 1} or later (a stream restarts "
+                "from a fresh checkpoint with from_version >= "
+                f"{first - 1})"
+            )
+    for rec in _read_log(table, after=after, through=through):
+        v = rec["version"]
+        if rec.get("data_change") is False:
+            continue
+        if _is_metadata_only_republish(table, rec):
+            continue
+        if mode == "cdf" and rec.get("change_files") is not None:
+            yield v, rec, rec["change_files"], False
+        elif (
+            (v == 0 or rec["action"] != "overwrite")
+            and not rec.get("remove")
+            and not rec.get("dv")
+        ):
+            yield v, rec, rec["add"], True
+        elif mode == "ignore_changes":
+            yield v, rec, rec["add"], False
+        else:
+            raise ValueError(
+                f"version {v} of {table} ({rec['action']}) rewrites data "
+                "or carries deletion vectors"
+                + (" with no recorded change data" if mode == "cdf" else "")
+                + ": recompute from the full snapshot or table_changes "
+                "(snapshot diff), stream with .option('ignore_changes', "
+                "'true') (rewritten rows re-emitted, DV deletes NOT "
+                "propagated: downstream must be idempotent per key), or "
+                "run the table's DML with cdf=True and read its change "
+                "feed"
+            )
+
+
 def read_appends(
     spark: SparkSession,
     table: str,
@@ -5181,49 +5237,33 @@ def read_appends(
 ) -> DataFrame:
     """Rows ADDED by commits in (after_version, to_version] — resolved
     from the log to exactly the new data files (O(delta) read, the
-    whole point of incremental consumers). Raises ``ValueError`` if
-    the range contains an ``overwrite`` commit: an overwrite rewrites
-    history, so "the appended rows" is not a well-defined delta and
-    the consumer must fall back to a full recompute (the same rule
-    Delta's CDF applies to non-append commits without CDF files)."""
-    log = _read_log(table)
-    if not log:
-        raise FileNotFoundError(f"{table} has no transaction log")
-    if to_version is None:
-        to_version = log[-1]["version"]
-    files: list[str] = []
-    schema, mapping = "", {}
-    for commit in log:
-        if commit["version"] > to_version:
-            break
-        schema = commit["schema"]
-        mapping = commit.get("column_mapping", {})
-        if commit["version"] <= after_version:
-            continue
-        if commit["action"] in ("overwrite", "replace", "dv"):
-            if commit.get("data_change") is False:
-                # OPTIMIZE/compaction: existing logical rows
-                # rearranged, none added — appended-rows delta is
-                # untouched by it (Delta's dataChange=false rule)
-                continue
-            if _is_metadata_only_republish(table, commit):
-                # ALTER-shaped re-reference (constraints, partition
-                # spec): zero rows appended, delta well-defined
-                continue
-            # dv included: a deletion-vector commit changes data
-            # without adding files, so "the appended rows" would
-            # silently misrepresent the delta
-            raise ValueError(
-                f"version {commit['version']} of {table} is an "
-                f"{commit['action']}: append-delta is undefined across "
-                "it; recompute from the full snapshot"
-            )
-        files.extend(os.path.join(table, f) for f in commit["add"])
+    whole point of incremental consumers): the files
+    :func:`_feed_commits` yields in ``appends`` mode, as a plain
+    ``txtable_changes`` stream reads them, an ``overwrite`` at version
+    0 (the table's birth) included. Raises ``ValueError`` if the range
+    contains a commit that rewrites data (a later ``overwrite``, a
+    ``replace`` that removes files, a ``dv``): "the appended rows" is
+    not a well-defined
+    delta across it and the consumer must fall back to a full
+    recompute (the same rule Delta's CDF applies to non-append
+    commits without CDF files); and if it starts below expired
+    history."""
+    tail = _feed_tail(table, to_version)
+    files = [
+        os.path.join(table, rel)
+        for _, _, rels, _ in _feed_commits(
+            table, after_version, tail["version"], "appends"
+        )
+        for rel in rels
+    ]
     # the same physical reader as every snapshot read: renamed
     # columns resolve through the column mapping and partition
-    # columns come from the file paths (no vectors: a dv commit in
-    # range raised above)
-    return _scan(spark, table, files, schema, {}, mapping)
+    # columns come from the file paths (no vectors: the feed refuses
+    # a dv commit in this mode)
+    return _scan(
+        spark, table, files, tail["schema"], {},
+        tail.get("column_mapping", {}),
+    )
 
 
 def checkpoint(table: str, version: int | None = None) -> int:
@@ -5262,9 +5302,8 @@ def checkpoint(table: str, version: int | None = None) -> int:
         )
     if mapping:
         record["column_mapping"] = mapping
-    d = _ckpt_dir(table)
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, f"{version:0{_VERSION_DIGITS}d}.json")
+    os.makedirs(_ckpt_dir(table), exist_ok=True)
+    path = _ckpt_path(table, version)
     tmp = path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(record, f)
@@ -5543,16 +5582,13 @@ def expire_versions(table: str, keep_from: int) -> list[int]:
     # checkpoints below the kept base are dead weight: targets >=
     # keep_from replay the rebased overwrite anyway, and targets
     # below it now raise. Drop them; fix the pointer if it dangled.
-    d = _ckpt_dir(table)
-    if os.path.isdir(d):
+    if os.path.isdir(_ckpt_dir(table)):
         kept = []
-        for name in os.listdir(d):
-            if name.endswith(".json") and name.split(".")[0].isdigit():
-                v = int(name.split(".")[0])
-                if v < keep_from:
-                    os.unlink(os.path.join(d, name))
-                else:
-                    kept.append(v)
+        for v in _json_versions(_ckpt_dir(table)):
+            if v < keep_from:
+                os.unlink(_ckpt_path(table, v))
+            else:
+                kept.append(v)
         ptr = os.path.join(table, _LOG_DIR, "_last_checkpoint")
         if os.path.isfile(ptr):
             with open(ptr) as f:
